@@ -4,13 +4,15 @@ import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
   *
-  * Local-mode defaults tuned for the test container (local[32], 128 GiB)
-  * but every setting is cluster-sane: AQE on (runtime re-plan, skew-join
-  * splitting, partition coalescing), shuffle partitions sized to cores
-  * rather than the 200 default, UTC session time.
+  * Local-mode defaults, every one cluster-sane: AQE on (runtime
+  * re-plan, skew-join splitting, partition coalescing), shuffle
+  * partitions sized to cores rather than the 200 default, UTC session
+  * time. Cores come from `SPARK_GRAFT_CPUS`, else the JVM's measured
+  * processor count.
   */
 object Session {
-  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 
   def build(appName: String = "graft", master: String = s"local[$cpus]"): SparkSession = {
     val spark = SparkSession

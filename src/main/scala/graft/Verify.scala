@@ -10,11 +10,9 @@ object Verify {
     // single-query iteration (the driver always runs the full surface)
     val only: String => Boolean =
       if (args.length > 2) args(2).split(",").toSet else (_ => true)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Session.build wires GraftExtensions (custom expressions + the
     // AsOfJoin planner strategy) — queries depend on them
-    val spark = Session.build("graft-verify", s"local[$cpus]")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    val spark = Session.build("graft-verify")
     new java.io.File(outDir).mkdirs()
     // A query that throws must leave a LOUD artifact, not just a stderr
     // line: round 6 lost 15 correctness rows because failures produced

@@ -14,13 +14,20 @@ object MRDemo {
     "metadata" -> Apps.MetadataAgg,
     "filecount" -> Apps.FileCount)
 
+  private val usage =
+    s"usage: MRDemo <${apps.keys.mkString("|")}> <inputGlob> <outDir> [nReduce]"
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      s"usage: MRDemo <${apps.keys.mkString("|")}> <inputGlob> <outDir> [nReduce]")
+    require(args.length >= 3, usage)
     val app = apps.getOrElse(args(0),
-      throw new IllegalArgumentException(
-        s"unknown app '${args(0)}' — one of ${apps.keys.mkString(", ")}"))
-    val nReduce = if (args.length > 3) args(3).toInt else 10
+      throw new IllegalArgumentException(s"unknown app '${args(0)}' — $usage"))
+    // validated before the session starts: a non-positive count would
+    // otherwise fail only inside Spark's Repartition, after startup
+    val nReduce =
+      if (args.length <= 3) 10
+      else args(3).toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"nReduce must be a positive integer, got '${args(3)}' — $usage"))
     val spark = graft.Session.build(s"mr-${args(0)}")
     try MRJob.run(spark, app, args(1), args(2), nReduce)
     finally spark.stop()

@@ -22,10 +22,6 @@ trait MRApp extends Serializable {
 
 object MRJob {
 
-  /** The distributed pipeline as a Dataset of output lines
-    * ("key value" — format per /root/reference/mr/worker.go:156).
-    * Output row order is an unordered bag, exactly like the reference
-    * (comparisons must sort — /root/reference/mr-main/test-mr.sh:58). */
   /** Shared ingest stage: whole files → app.map KV pairs (filename
     * derivation lives in exactly one place — Incremental reuses it). */
   def mapped(spark: SparkSession, app: MRApp, inputGlob: String): Dataset[KV] = {
@@ -38,6 +34,10 @@ object MRJob {
       }
   }
 
+  /** The distributed pipeline as a Dataset of output lines
+    * ("key value" — the reference's format, mr/worker.go:156).
+    * Output row order is an unordered bag, exactly like the reference
+    * (comparisons must sort — mr-main/test-mr.sh:58). */
   def result(spark: SparkSession, app: MRApp, inputGlob: String): Dataset[String] = {
     import spark.implicits._
     mapped(spark, app, inputGlob)

@@ -37,7 +37,7 @@ object Materialize {
   val ConfKey = "spark.graft.materialize"
 
   // Weak registry of every checkpoint RDD this helper materialized:
-  // [[freeAll]] lets a harness (Verify/Bench) drop all surviving
+  // [[freeAll]] lets a harness (Verify/perfbench) drop all surviving
   // blocks deterministically between queries instead of waiting on
   // the JVM GC + async ContextCleaner (whose cleanup otherwise lands
   // inside the NEXT query's timed window). The key is the underlying
@@ -199,15 +199,6 @@ object Materialize {
     case _ => floor
   }
 
-  /** What [[eagerKeyed]] would choose for `df` right now — exposed for
-    * the PinSize measurement tool only. */
-  private[graft] def keyedPartitionsProbe(df: DataFrame): Int =
-    keyedPartitions(
-      df.sparkSession.sessionState.conf.numShufflePartitions,
-      df.sparkSession.sessionState.conf.getConf(
-        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
-      storedBytesByRef(df))
-
   /** Stored footprint of a materialized frame's checkpoint blocks, if
     * every leaf is a tracked-storage RDD the block manager still
     * reports — the driver-side, zero-job size read that [[hintSmall]]
@@ -303,7 +294,7 @@ object Materialize {
   // consumer in a session and reused by the rest — the
   // dedup_cluster_density share-the-scan discipline lifted to the
   // session (round-9 verdict #6), generalizing GraphRank's LPA cache.
-  // Keyed by (SparkContext, key) so test sessions / Verify / Bench
+  // Keyed by (SparkContext, key) so test sessions / Verify / perfbench
   // never cross-contaminate; determinism of every shared subtree makes
   // reuse value-identical to a recompute.
   private val shared = new java.util.concurrent.ConcurrentHashMap[

@@ -1,0 +1,29 @@
+package graft.mr
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** MRDemo's argument checks. Only the failure paths are exercised:
+  * each must throw before a session starts, while the success path
+  * ends in spark.stop(), which would stop the suite's shared session. */
+class MRDemoSpec extends AnyFunSuite {
+  private def rejects(args: String*): String =
+    intercept[IllegalArgumentException](MRDemo.main(args.toArray)).getMessage
+
+  test("too few args: usage message") {
+    assert(rejects("wc", "in/*").contains("usage: MRDemo <"))
+  }
+
+  test("unknown app: names the app and prints usage") {
+    val msg = rejects("nosuch", "in/*", "out")
+    assert(msg.contains("unknown app 'nosuch'"))
+    assert(msg.contains("usage: MRDemo <"))
+  }
+
+  test("nReduce must be a positive integer") {
+    for (bad <- Seq("ten", "0", "-3", "")) {
+      val msg = rejects("wc", "in/*", "out", bad)
+      assert(msg.contains(s"got '$bad'"))
+      assert(msg.contains("usage: MRDemo <"))
+    }
+  }
+}

@@ -7,7 +7,7 @@ import graft.SparkTestSession
   * The multi-consumer dedup queries materialize intermediates via
   * localCheckpoint (block reuse without a CacheManager entry), so a
   * caller who runs one query in a long-lived session does not
-  * accumulate storage-memory residue that only Verify/Bench's
+  * accumulate storage-memory residue that only Verify/perfbench's
   * clearCache() would have cleaned. */
 class CacheHygieneSpec extends AnyFunSuite {
   import SparkTestSession._

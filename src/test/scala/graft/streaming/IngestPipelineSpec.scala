@@ -93,7 +93,7 @@ class IngestPipelineSpec extends AnyFunSuite
 
   test("the static eval side survives a mid-stream Materialize.freeAll " +
       "+ clearCache: later micro-batches recompute instead of dying") {
-    // the harness pattern: Verify/Bench call freeAll + clearCache
+    // the harness pattern: Verify/perfbench call freeAll + clearCache
     // between queries while a library caller's stream may still be
     // live. A localCheckpoint-backed static side dies unrecoverably
     // here; the persist-backed eagerStatic must only recompute.
