@@ -1,5 +1,19 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** One registered query: the engine implementation (session, scale-factor
+  * dir) => result, the DuckDB SQL that must return the same rows over the
+  * same parquet tables, and, for the few oracles too slow as one statement
+  * at bench scale, an iterative [[ScriptedOracle]] mirror of that SQL.
+  * Each query module lists its queries as `name -> Query(...)`;
+  * [[SparkEntry]] derives its `queries`, `oracleSql` and `oracleScripted`
+  * maps from those lists. */
+final case class Query(
+    run: (SparkSession, String) => DataFrame,
+    oracleSql: String,
+    scripted: Option[ScriptedOracle] = None)
+
 /** Iterative DuckDB oracle recipe for queries whose single-statement
   * SQL form is intractable at bench scale: a recursive-CTE transitive
   * closure is quadratic in component size, and a 32-round unrolled
@@ -10,7 +24,9 @@ package graft
   * `CREATE TEMP TABLE` rounds that `scripts/oracle_check.py` executes
   * under `ORACLE_SCRIPTED=1`; the single-statement `oracleSql` entry
   * remains the driver's gate at sf0.01, so the scripted form is a
-  * local bench-scale mirror, not a replacement.
+  * local bench-scale mirror, not a replacement. A recipe is attached to
+  * its query through [[Query.scripted]], so it cannot exist without the
+  * plain oracle it mirrors.
   *
   * Authored HERE, next to the plain SQL and derived from the same
   * Scala vals (band/shingle SQL, round budgets), so a constant bump

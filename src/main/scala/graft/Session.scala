@@ -11,8 +11,18 @@ import org.apache.spark.sql.SparkSession
   * processor count.
   */
 object Session {
-  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-    .getOrElse(Runtime.getRuntime.availableProcessors)
+  def cpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  /** A `SPARK_GRAFT_CPUS` value as a core count; unset means every
+    * processor the JVM sees. Anything but a positive integer fails here,
+    * naming the variable, instead of later as a bare
+    * NumberFormatException or as Spark's invalid-master-URL error. */
+  private[graft] def parseCpus(raw: Option[String]): Int = raw match {
+    case None => Runtime.getRuntime.availableProcessors
+    case Some(v) => v.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
 
   def build(appName: String = "graft", master: String = s"local[$cpus]"): SparkSession = {
     val spark = SparkSession

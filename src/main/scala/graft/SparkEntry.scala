@@ -8,44 +8,38 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
+  /** Every query module's registry, each module listed once. A new
+    * query is one `name -> Query(run, oracleSql)` entry in its module's
+    * `queries` map; the maps below are derived from this list. */
+  private[graft] val modules: Seq[Map[String, Query]] = Seq(
+    Relational.queries, Relational2.queries, Relational3.queries,
+    Relational4.queries, Documents.queries, Events.queries,
+    Embeddings.queries, SimHashDedup.queries, TextPipeline.queries,
+    TextAnalysis.queries, SqlSurface.queries, GraphRank.queries,
+    CorpusCuration.queries, SnapshotOps.queries, DataLayout.queries,
+    TokenizerOps.queries, Retrieval.queries, DataAudit.queries,
+    graft.multimodal.Multimodal.queries, ProductAnalytics.queries,
+    TextModeling.queries, EmbeddingAudit.queries, AudienceOps.queries,
+    DistributionAudit.queries, PrefixFilterJoin.queries,
+    LifecycleOps.queries, CorpusStats.queries, PipelineE2E.queries)
+
+  private val registry: Map[String, Query] = modules.flatten.toMap
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ Relational2.queries ++ Relational3.queries ++
-      Relational4.queries ++ Documents.queries ++
-      Events.queries ++ Embeddings.queries ++ SimHashDedup.queries ++
-      TextPipeline.queries ++ TextAnalysis.queries ++ SqlSurface.queries ++
-      GraphRank.queries ++ CorpusCuration.queries ++ SnapshotOps.queries ++
-      DataLayout.queries ++ TokenizerOps.queries ++ Retrieval.queries ++
-      DataAudit.queries ++ graft.multimodal.Multimodal.queries ++
-      ProductAnalytics.queries ++ TextModeling.queries ++
-      EmbeddingAudit.queries ++ AudienceOps.queries ++
-      DistributionAudit.queries ++ PrefixFilterJoin.queries ++
-      LifecycleOps.queries ++ CorpusStats.queries ++ PipelineE2E.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, q) => name -> q.run }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Relational.oracle ++ Relational2.oracle ++ Relational3.oracle ++
-      Relational4.oracle ++ Documents.oracle ++
-      Events.oracle ++ Embeddings.oracle ++ SimHashDedup.oracle ++
-      TextPipeline.oracle ++ TextAnalysis.oracle ++ SqlSurface.oracle ++
-      GraphRank.oracle ++ CorpusCuration.oracle ++ SnapshotOps.oracle ++
-      DataLayout.oracle ++ TokenizerOps.oracle ++ Retrieval.oracle ++
-      DataAudit.oracle ++ graft.multimodal.Multimodal.oracle ++
-      ProductAnalytics.oracle ++ TextModeling.oracle ++
-      EmbeddingAudit.oracle ++ AudienceOps.oracle ++
-      DistributionAudit.oracle ++ PrefixFilterJoin.oracle ++
-      LifecycleOps.oracle ++ CorpusStats.oracle ++ PipelineE2E.oracle
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    registry.map { case (name, q) => name -> q.oracleSql }
 
   /** Scripted iterative mirrors ([[ScriptedOracle]]) for the oracles
     * whose single-statement form exceeds the 600 s DuckDB budget at
     * bench scale (sf0.1). The driver's sf0.01 gate keeps using
     * [[oracleSql]]; scripts/oracle_check.py switches to these under
-    * ORACLE_SCRIPTED=1. Every key here MUST also be in [[oracleSql]]
-    * — scripted is a scale mirror, never the only check. */
-  def oracleScripted: Map[String, ScriptedOracle] = Map(
-    "dedup_clusters" -> Documents.dedupClustersScripted,
-    "dedup_cluster_density" -> Documents.clusterDensityScripted,
-    "doc_leakage_safe_split" -> Documents.leakageSafeSplitScripted,
-    "graph_kcore" -> GraphRank.kcoreScripted)
+    * ORACLE_SCRIPTED=1 — scripted is a scale mirror, never the only
+    * check. */
+  val oracleScripted: Map[String, ScriptedOracle] =
+    registry.flatMap { case (name, q) => q.scripted.map(name -> _) }
 }

@@ -1,15 +1,50 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private val usage = "usage: Verify <sfDir> <outDir> [name,name,...]"
+
+  /** (sfDir, outDir, names of the queries to run). The optional third
+    * argument is a comma-separated query-name filter for local
+    * single-query iteration (a correctness run passes none and runs the
+    * full surface); every name in it must be registered — a typo would
+    * otherwise run nothing and write `{}` files that look like a clean
+    * pass. */
+  private[graft] def parseArgs(args: Array[String], registered: Set[String])
+      : (String, String, Set[String]) = {
+    require(args.length >= 2, usage)
+    val names = if (args.length > 2) args(2).split(",").toSet else registered
+    val unknown = names -- registered
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown query name(s) ${unknown.toSeq.sorted.mkString("'", "', '", "'")} — $usage")
+    (args(0), args(1), names)
+  }
+
+  // Jackson escapes quotes, backslashes and every control char: a tab or
+  // CR in an oracle's SQL must never make the checker's json.load fail
+  // and silently zero the correctness run.
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  private[graft] def toJson(m: collection.Map[String, Any]): String =
+    json.writeValueAsString(m)
+
+  /** oracle_scripted.json: the field names scripts/oracle_check.py's
+    * run_scripted reads. */
+  private[graft] def scriptedJson(recipes: Map[String, ScriptedOracle]): String =
+    toJson(recipes.map { case (k, so) =>
+      k -> ListMap("setup" -> so.setup, "round" -> so.round, "stop" -> so.stop,
+        "max_rounds" -> so.maxRounds, "require_fixpoint" -> so.requireFixpoint,
+        "final" -> so.finalSql)
+    })
+
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
-    // optional args(2): comma-separated query-name filter for local
-    // single-query iteration (the driver always runs the full surface)
-    val only: String => Boolean =
-      if (args.length > 2) args(2).split(",").toSet else (_ => true)
+    // checked before the session starts, so a bad call fails fast
+    val (sfDir, outDir, only) = parseArgs(args, SparkEntry.queries.keySet)
     // Session.build wires GraftExtensions (custom expressions + the
     // AsOfJoin planner strategy) — queries depend on them
     val spark = Session.build("graft-verify")
@@ -40,41 +75,16 @@ object Verify {
         graft.operators.Materialize.freeAll(spark)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => only(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      toJson(SparkEntry.oracleSql.filter(kv => only(kv._1))))
     // scripted iterative oracle recipes (bench-scale mirrors of the
     // heavy closures — see graft.ScriptedOracle); consumed by
     // scripts/oracle_check.py under ORACLE_SCRIPTED=1
-    def qa(ss: Seq[String]): String = ss.map(q).mkString("[", ",", "]")
-    val scriptedJson = SparkEntry.oracleScripted.filter(kv => only(kv._1))
-      .map { case (k, so) =>
-        s"${q(k)}: {${q("setup")}: ${qa(so.setup)}, " +
-          s"${q("round")}: ${qa(so.round)}, " +
-          s"${q("stop")}: ${q(so.stop)}, " +
-          s"${q("max_rounds")}: ${so.maxRounds}, " +
-          s"${q("require_fixpoint")}: ${so.requireFixpoint}, " +
-          s"${q("final")}: ${q(so.finalSql)}}"
-      }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_scripted.json"),
-      scriptedJson)
+      scriptedJson(SparkEntry.oracleScripted.filter(kv => only(kv._1))))
     // always written (possibly {}) so "no errors" is distinguishable
     // from "error reporting never ran"
-    val errJson = failed
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/errors.json"), toJson(failed))
     if (failed.nonEmpty) {
       System.err.println(s"[verify] ${failed.size} QUERIES FAILED: " +
         failed.keys.mkString(", "))

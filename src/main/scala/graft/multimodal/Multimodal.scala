@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 
 /** Multimodal-column plumbing for a training-data pipeline: media as
   * opaque `binary` payloads + typed metadata, processed in batched
@@ -640,25 +641,15 @@ object Multimodal {
       |  MAX(waste_pm) AS max_waste_pm
       |FROM w GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mm_aspect_buckets" -> aspectBuckets,
-    "mm_phash_buckets" -> phashBuckets,
-    "mm_phash_neardup_pairs" -> phashNearDupPairs,
-    "mm_media_stats" -> mediaStats,
-    "mm_frame_sample" -> frameSampleStats,
-    "mm_resize_stats" -> resizeStats,
-    "mm_scene_cuts" -> sceneCuts,
-    "mm_audio_vad" -> ((s, d) => audioVad(s, d)))
-
-  val oracle: Map[String, String] = Map(
-    "mm_aspect_buckets" -> aspectBucketsSql,
-    "mm_phash_buckets" -> phashBucketsSql,
-    "mm_phash_neardup_pairs" -> phashNearDupPairsSql,
-    "mm_media_stats" -> mediaStatsSql,
-    "mm_frame_sample" -> frameSampleStatsSql,
-    "mm_resize_stats" -> resizeStatsSql,
-    "mm_scene_cuts" -> sceneCutsSql,
-    "mm_audio_vad" -> audioVadSql)
+  val queries: Map[String, Query] = Map(
+    "mm_aspect_buckets" -> Query(aspectBuckets, aspectBucketsSql),
+    "mm_phash_buckets" -> Query(phashBuckets, phashBucketsSql),
+    "mm_phash_neardup_pairs" -> Query(phashNearDupPairs, phashNearDupPairsSql),
+    "mm_media_stats" -> Query(mediaStats, mediaStatsSql),
+    "mm_frame_sample" -> Query(frameSampleStats, frameSampleStatsSql),
+    "mm_resize_stats" -> Query(resizeStats, resizeStatsSql),
+    "mm_scene_cuts" -> Query(sceneCuts, sceneCutsSql),
+    "mm_audio_vad" -> Query((s, d) => audioVad(s, d), audioVadSql))
 }
 
 /** STUB codec — deterministic fake in place of image/audio libraries

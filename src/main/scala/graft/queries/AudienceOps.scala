@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.Query
 
 /** Audience/seasonality analytics over the events stream and dedup
   * survivorship over documents — the "who overlaps with whom, when do
@@ -221,15 +222,9 @@ object AudienceOps {
       |      // SUM(e_naive) AS BIGINT) END AS improvement_permille
       |FROM sc GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev_seasonality_profile" -> seasonalityProfile,
-    "ev_audience_overlap" -> audienceOverlap,
-    "dedup_survivorship" -> dedupSurvivorship,
-    "ev_forecast_backtest" -> forecastBacktest)
-
-  val oracle: Map[String, String] = Map(
-    "ev_seasonality_profile" -> seasonalityProfileSql,
-    "ev_audience_overlap" -> audienceOverlapSql,
-    "dedup_survivorship" -> dedupSurvivorshipSql,
-    "ev_forecast_backtest" -> forecastBacktestSql)
+  val queries: Map[String, Query] = Map(
+    "ev_seasonality_profile" -> Query(seasonalityProfile, seasonalityProfileSql),
+    "ev_audience_overlap" -> Query(audienceOverlap, audienceOverlapSql),
+    "dedup_survivorship" -> Query(dedupSurvivorship, dedupSurvivorshipSql),
+    "ev_forecast_backtest" -> Query(forecastBacktest, forecastBacktestSql))
 }

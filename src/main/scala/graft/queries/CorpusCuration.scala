@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** Corpus-internal curation passes that complete the dedup/chunking
   * tier: duplicate-SPAN detection (which tokens are copied, not just
@@ -785,27 +786,15 @@ object CorpusCuration {
        |  MAX(score_pm) AS max_score_pm
        |FROM phased GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_curriculum_order" -> curriculumOrder,
-    "doc_boilerplate_shingles" -> boilerplateShingles,
-    "text_winnowing_pairs" -> winnowingPairs,
-    "doc_source_overlap" -> sourceOverlap,
-    "text_duplicate_spans" -> duplicateSpans,
-    "doc_cdc_chunks" -> cdcChunks,
-    "doc_importance_score" -> importanceScore,
-    "doc_quality_deciles" -> qualityDeciles,
-    "dedup_lsh_precision" -> lshPrecision,
-    "dedup_lsh_recall" -> lshRecall)
-
-  val oracle: Map[String, String] = Map(
-    "corpus_curriculum_order" -> curriculumOrderSql,
-    "doc_boilerplate_shingles" -> boilerplateShinglesSql,
-    "text_winnowing_pairs" -> winnowingPairsSql,
-    "doc_source_overlap" -> sourceOverlapSql,
-    "text_duplicate_spans" -> duplicateSpansSql,
-    "doc_cdc_chunks" -> cdcChunksSql,
-    "doc_importance_score" -> importanceScoreSql,
-    "doc_quality_deciles" -> qualityDecilesSql,
-    "dedup_lsh_precision" -> lshPrecisionSql,
-    "dedup_lsh_recall" -> lshRecallSql)
+  val queries: Map[String, Query] = Map(
+    "corpus_curriculum_order" -> Query(curriculumOrder, curriculumOrderSql),
+    "doc_boilerplate_shingles" -> Query(boilerplateShingles, boilerplateShinglesSql),
+    "text_winnowing_pairs" -> Query(winnowingPairs, winnowingPairsSql),
+    "doc_source_overlap" -> Query(sourceOverlap, sourceOverlapSql),
+    "text_duplicate_spans" -> Query(duplicateSpans, duplicateSpansSql),
+    "doc_cdc_chunks" -> Query(cdcChunks, cdcChunksSql),
+    "doc_importance_score" -> Query(importanceScore, importanceScoreSql),
+    "doc_quality_deciles" -> Query(qualityDeciles, qualityDecilesSql),
+    "dedup_lsh_precision" -> Query(lshPrecision, lshPrecisionSql),
+    "dedup_lsh_recall" -> Query(lshRecall, lshRecallSql))
 }

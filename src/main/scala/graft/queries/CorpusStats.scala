@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.Query
 
 /** Corpus-level statistical laws and drift measures over the
   * documents table: Zipf rank-frequency fit, per-source
@@ -492,21 +493,12 @@ object CorpusStats {
       |FROM w WHERE df >= 5
       |ORDER BY burst_milli DESC, word LIMIT 20""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_burstiness" -> burstiness,
-    "text_vocab_coverage" -> vocabCoverage,
-    "text_ttr_by_source" -> ttrBySource,
-    "text_zipf_slope" -> zipfSlope,
-    "text_js_divergence" -> jsDivergence,
-    "text_heaps_checkpoints" -> heapsCheckpoints,
-    "text_feature_hashing" -> featureHashing)
-
-  val oracle: Map[String, String] = Map(
-    "text_burstiness" -> burstinessSql,
-    "text_vocab_coverage" -> vocabCoverageSql,
-    "text_ttr_by_source" -> ttrBySourceSql,
-    "text_zipf_slope" -> zipfSlopeSql,
-    "text_js_divergence" -> jsDivergenceSql,
-    "text_heaps_checkpoints" -> heapsCheckpointsSql,
-    "text_feature_hashing" -> featureHashingSql)
+  val queries: Map[String, Query] = Map(
+    "text_burstiness" -> Query(burstiness, burstinessSql),
+    "text_vocab_coverage" -> Query(vocabCoverage, vocabCoverageSql),
+    "text_ttr_by_source" -> Query(ttrBySource, ttrBySourceSql),
+    "text_zipf_slope" -> Query(zipfSlope, zipfSlopeSql),
+    "text_js_divergence" -> Query(jsDivergence, jsDivergenceSql),
+    "text_heaps_checkpoints" -> Query(heapsCheckpoints, heapsCheckpointsSql),
+    "text_feature_hashing" -> Query(featureHashing, featureHashingSql))
 }

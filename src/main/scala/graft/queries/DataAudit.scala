@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** Data-quality constraint auditing and blocked record linkage — the
   * Deequ/Great-Expectations tier of a production lake: before any
@@ -1089,35 +1090,19 @@ object DataAudit {
     ).mkString("", "\nUNION ALL ", "\nORDER BY fd")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "audit_fd_violations" -> fdViolations,
-    "audit_schema_profile" -> schemaProfile,
-    "audit_value_mad" -> valueMadOutliers,
-    "audit_null_profile" -> nullProfile,
-    "audit_referential" -> referentialAudit,
-    "audit_key_skew" -> keySkewAudit,
-    "audit_k_anonymity" -> kAnonymityAudit,
-    "audit_l_diversity" -> lDiversityAudit,
-    "audit_t_closeness" -> tClosenessAudit,
-    "audit_id_gaps" -> idGapsAudit,
-    "audit_numeric_correlations" -> numericCorrelations,
-    "join_skew_salted" -> joinSkewSalted,
-    "link_blocked_fuzzy" -> linkBlockedFuzzy,
-    "link_entity_clusters" -> linkEntityClusters)
-
-  val oracle: Map[String, String] = Map(
-    "audit_fd_violations" -> fdViolationsSql,
-    "audit_schema_profile" -> schemaProfileSql,
-    "audit_value_mad" -> valueMadOutliersSql,
-    "audit_null_profile" -> nullProfileSql,
-    "audit_referential" -> referentialAuditSql,
-    "audit_key_skew" -> keySkewAuditSql,
-    "audit_k_anonymity" -> kAnonymityAuditSql,
-    "audit_l_diversity" -> lDiversityAuditSql,
-    "audit_t_closeness" -> tClosenessAuditSql,
-    "audit_id_gaps" -> idGapsAuditSql,
-    "audit_numeric_correlations" -> numericCorrelationsSql,
-    "join_skew_salted" -> joinSkewSaltedSql,
-    "link_blocked_fuzzy" -> linkBlockedFuzzySql,
-    "link_entity_clusters" -> linkEntityClustersSql)
+  val queries: Map[String, Query] = Map(
+    "audit_fd_violations" -> Query(fdViolations, fdViolationsSql),
+    "audit_schema_profile" -> Query(schemaProfile, schemaProfileSql),
+    "audit_value_mad" -> Query(valueMadOutliers, valueMadOutliersSql),
+    "audit_null_profile" -> Query(nullProfile, nullProfileSql),
+    "audit_referential" -> Query(referentialAudit, referentialAuditSql),
+    "audit_key_skew" -> Query(keySkewAudit, keySkewAuditSql),
+    "audit_k_anonymity" -> Query(kAnonymityAudit, kAnonymityAuditSql),
+    "audit_l_diversity" -> Query(lDiversityAudit, lDiversityAuditSql),
+    "audit_t_closeness" -> Query(tClosenessAudit, tClosenessAuditSql),
+    "audit_id_gaps" -> Query(idGapsAudit, idGapsAuditSql),
+    "audit_numeric_correlations" -> Query(numericCorrelations, numericCorrelationsSql),
+    "join_skew_salted" -> Query(joinSkewSalted, joinSkewSaltedSql),
+    "link_blocked_fuzzy" -> Query(linkBlockedFuzzy, linkBlockedFuzzySql),
+    "link_entity_clusters" -> Query(linkEntityClusters, linkEntityClustersSql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** Data-layout planning: the Z-order (Morton-curve) clustering
   * diagnostic a lakehouse pipeline runs before rewriting a 100 TB
@@ -223,13 +224,8 @@ object DataLayout {
       |  1000 * 16 * n_tokens // tt AS token_share_pm
       |FROM s, tot ORDER BY shard""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "layout_zorder_stats" -> zorderStats,
-    "layout_compaction_bins" -> compactionBins,
-    "layout_shard_balance" -> shardBalance)
-
-  val oracle: Map[String, String] = Map(
-    "layout_zorder_stats" -> zorderStatsSql,
-    "layout_compaction_bins" -> compactionBinsSql,
-    "layout_shard_balance" -> shardBalanceSql)
+  val queries: Map[String, Query] = Map(
+    "layout_zorder_stats" -> Query(zorderStats, zorderStatsSql),
+    "layout_compaction_bins" -> Query(compactionBins, compactionBinsSql),
+    "layout_shard_balance" -> Query(shardBalance, shardBalanceSql))
 }

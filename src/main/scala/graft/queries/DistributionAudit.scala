@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** Distribution-shape audits over the events stream: a two-sample
   * Kolmogorov–Smirnov drift check between the first and second half
@@ -273,13 +274,8 @@ object DistributionAudit {
       |      WHEN 8 THEN 51 ELSE 46 END) AS deviation_permille
       |FROM c, t ORDER BY digit""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev_ks_drift" -> ksDrift,
-    "ev_psi_drift" -> psiDrift,
-    "audit_benford" -> benfordDigits)
-
-  val oracle: Map[String, String] = Map(
-    "ev_ks_drift" -> ksDriftSql,
-    "ev_psi_drift" -> psiDriftSql,
-    "audit_benford" -> benfordDigitsSql)
+  val queries: Map[String, Query] = Map(
+    "ev_ks_drift" -> Query(ksDrift, ksDriftSql),
+    "ev_psi_drift" -> Query(psiDrift, psiDriftSql),
+    "audit_benford" -> Query(benfordDigits, benfordDigitsSql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** Document/text workloads: the reference's text apps re-expressed over
   * the `documents` table, plus the LLM-training-pipeline tier (dedup,
@@ -212,14 +213,25 @@ object Documents {
     // projection form lives on in streaming.DocStreams, where
     // statelessness (not CPU) is the requirement and values are
     // identical by construction.
-    val tok = documents(s, d)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
+    signaturesOf(documents(s, d)).orderBy(col("doc_id"))
+  }
+
+  /** Unsorted (doc_id, mh0..mh{NSIG-1}) MinHash signatures of a
+    * (doc_id, text) frame — the one signature construction behind
+    * [[minhashSignatures]] and [[lshCandidatePairsAmong]]. */
+  private def signaturesOf(docs: DataFrame): DataFrame = {
+    val tok = docs.select(col("doc_id"), explode(tokens(col("text"))).as("word"))
     val aggs = (0 until NSIG).map(j =>
       min(md5(concat(lit(j.toString), lit("|"), col("word")))).as(s"mh$j"))
-    tok.groupBy(col("doc_id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .orderBy(col("doc_id"))
+    tok.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
   }
+
+  /** (doc_id, b0, b1): two bands of two signatures each, keyed by a
+    * 64-bit hash — the one banding behind every LSH pair join. */
+  private def bandsOf(sig: DataFrame): DataFrame =
+    sig.select(col("doc_id"),
+      xxhash64(lit("b0"), col("mh0"), col("mh1")).as("b0"),
+      xxhash64(lit("b1"), col("mh2"), col("mh3")).as("b1"))
 
   val minhashSignaturesSql: String = {
     val aggs = (0 until NSIG)
@@ -301,9 +313,7 @@ object Documents {
     * materialization so a composite query (clusterDensity) computes
     * the tokenize+minhash scan ONCE for both subtrees. */
   private def bandedSigs(s: SparkSession, d: String): DataFrame =
-    minhashSigShared(s, d).select(col("doc_id"),
-      xxhash64(lit("b0"), col("mh0"), col("mh1")).as("b0"),
-      xxhash64(lit("b1"), col("mh2"), col("mh3")).as("b1"))
+    bandsOf(minhashSigShared(s, d))
 
   /** Session-shared distinct (doc_id, word) token table — the root
     * scan the LSH tuning family (band sweep, threshold sweep) pays
@@ -385,13 +395,7 @@ object Documents {
     * equivalence on every run). */
   // public: the graft.api.Dedup.candidatePairs library entry point
   def lshCandidatePairsAmong(docs: DataFrame): DataFrame = {
-    val tok = docs.select(col("doc_id"), explode(tokens(col("text"))).as("word"))
-    val aggs = (0 until NSIG).map(j =>
-      min(md5(concat(lit(j.toString), lit("|"), col("word")))).as(s"mh$j"))
-    val sig = tok.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"),
-        xxhash64(lit("b0"), col("mh0"), col("mh1")).as("b0"),
-        xxhash64(lit("b1"), col("mh2"), col("mh3")).as("b1"))
+    val sig = bandsOf(signaturesOf(docs))
     // same parallelism discipline as [[lshCandidatePairs]]: the band
     // join's OUTPUT is sum-of-bucket² pairs, so an AQE-coalesced
     // 2-partition signature table would serialize the expansion
@@ -1673,56 +1677,33 @@ object Documents {
        |ORDER BY threshold_pm""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_growth_curve" -> dedupGrowthCurve,
-    "doc_leakage_safe_split" -> leakageSafeSplit,
-    "dedup_threshold_sweep" -> thresholdSweep,
-    "dedup_band_sweep" -> bandSweep,
-    "doc_wordcount" -> wordCount,
-    "doc_inverted_index" -> invertedIndex,
-    "doc_filter_group_count" -> filterGroupCount,
-    "doc_metadata_agg" -> metadataAgg,
-    "dedup_exact" -> dedupExact,
+  val queries: Map[String, Query] = Map(
+    "dedup_growth_curve" -> Query(dedupGrowthCurve, dedupGrowthCurveSql),
+    "doc_leakage_safe_split" ->
+      Query(leakageSafeSplit, leakageSafeSplitSql, Some(leakageSafeSplitScripted)),
+    "dedup_threshold_sweep" -> Query(thresholdSweep, thresholdSweepSql),
+    "dedup_band_sweep" -> Query(bandSweep, bandSweepSql),
+    "doc_wordcount" -> Query(wordCount, wordCountSql),
+    "doc_inverted_index" -> Query(invertedIndex, invertedIndexSql),
+    "doc_filter_group_count" -> Query(filterGroupCount, filterGroupCountSql),
+    "doc_metadata_agg" -> Query(metadataAgg, metadataAggSql),
+    "dedup_exact" -> Query(dedupExact, dedupExactSql),
     // OWNER of the shared signature scan: always rebuilds + re-pins
-    "dedup_minhash_sig" -> ((s, d) => minhashSigShared(s, d, refresh = true)),
-    "dedup_lsh_pairs" -> dedupLshPairs,
-    "dedup_clusters" -> dedupClusters,
-    "dedup_cluster_density" -> clusterDensity,
-    "dedup_incremental" -> dedupIncremental,
-    "dedup_bloom_incremental" -> dedupBloomIncremental,
-    "dedup_ngram_jaccard" -> ngramJaccard,
-    "dedup_ngram_containment" -> ngramContainment,
-    "dedup_edit_confirm" -> dedupEditConfirm,
-    "text_quality" -> textQuality,
-    "text_gopher_rules" -> gopherRules,
-    "text_lang_id" -> langIdSimple,
-    "text_lang_confusion" -> langConfusion,
-    "text_token_count" -> tokenCount,
-    "text_fingerprint" -> fingerprint)
-
-  val oracle: Map[String, String] = Map(
-    "doc_wordcount" -> wordCountSql,
-    "dedup_band_sweep" -> bandSweepSql,
-    "dedup_growth_curve" -> dedupGrowthCurveSql,
-    "doc_leakage_safe_split" -> leakageSafeSplitSql,
-    "dedup_threshold_sweep" -> thresholdSweepSql,
-    "doc_inverted_index" -> invertedIndexSql,
-    "doc_filter_group_count" -> filterGroupCountSql,
-    "doc_metadata_agg" -> metadataAggSql,
-    "dedup_exact" -> dedupExactSql,
-    "dedup_minhash_sig" -> minhashSignaturesSql,
-    "dedup_lsh_pairs" -> dedupLshPairsSql,
-    "dedup_clusters" -> dedupClustersSql,
-    "dedup_cluster_density" -> clusterDensitySql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "dedup_bloom_incremental" -> dedupBloomIncrementalSql,
-    "dedup_ngram_jaccard" -> ngramJaccardSql,
-    "dedup_ngram_containment" -> ngramContainmentSql,
-    "dedup_edit_confirm" -> dedupEditConfirmSql,
-    "text_quality" -> textQualitySql,
-    "text_gopher_rules" -> gopherRulesSql,
-    "text_lang_id" -> langIdSql,
-    "text_lang_confusion" -> langConfusionSql,
-    "text_token_count" -> tokenCountSql,
-    "text_fingerprint" -> fingerprintSql)
+    "dedup_minhash_sig" ->
+      Query((s, d) => minhashSigShared(s, d, refresh = true), minhashSignaturesSql),
+    "dedup_lsh_pairs" -> Query(dedupLshPairs, dedupLshPairsSql),
+    "dedup_clusters" -> Query(dedupClusters, dedupClustersSql, Some(dedupClustersScripted)),
+    "dedup_cluster_density" ->
+      Query(clusterDensity, clusterDensitySql, Some(clusterDensityScripted)),
+    "dedup_incremental" -> Query(dedupIncremental, dedupIncrementalSql),
+    "dedup_bloom_incremental" -> Query(dedupBloomIncremental, dedupBloomIncrementalSql),
+    "dedup_ngram_jaccard" -> Query(ngramJaccard, ngramJaccardSql),
+    "dedup_ngram_containment" -> Query(ngramContainment, ngramContainmentSql),
+    "dedup_edit_confirm" -> Query(dedupEditConfirm, dedupEditConfirmSql),
+    "text_quality" -> Query(textQuality, textQualitySql),
+    "text_gopher_rules" -> Query(gopherRules, gopherRulesSql),
+    "text_lang_id" -> Query(langIdSimple, langIdSql),
+    "text_lang_confusion" -> Query(langConfusion, langConfusionSql),
+    "text_token_count" -> Query(tokenCount, tokenCountSql),
+    "text_fingerprint" -> Query(fingerprint, fingerprintSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** Label-geometry audit over the embeddings table: per-label centroid
   * margins. For every vector, the squared L2 distance to its OWN
@@ -606,23 +607,13 @@ object EmbeddingAudit {
       |WHERE c.n_vecs >= 2
       |ORDER BY p.label""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "emb_isotropy" -> isotropy,
-    "emb_hubness_audit" -> hubnessAudit,
-    "emb_centroid_margin" -> centroidMargin,
-    "emb_pca_power" -> pcaPower,
-    "emb_pair_distance_hist" -> pairDistanceHist,
-    "emb_dim_covariance" -> dimCovariance,
-    "emb_ivf_balance" -> ivfBalance,
-    "emb_centroid_drift" -> centroidDrift)
-
-  val oracle: Map[String, String] = Map(
-    "emb_isotropy" -> isotropySql,
-    "emb_hubness_audit" -> hubnessAuditSql,
-    "emb_centroid_margin" -> centroidMarginSql,
-    "emb_pca_power" -> pcaPowerSql,
-    "emb_pair_distance_hist" -> pairDistanceHistSql,
-    "emb_dim_covariance" -> dimCovarianceSql,
-    "emb_ivf_balance" -> ivfBalanceSql,
-    "emb_centroid_drift" -> centroidDriftSql)
+  val queries: Map[String, Query] = Map(
+    "emb_isotropy" -> Query(isotropy, isotropySql),
+    "emb_hubness_audit" -> Query(hubnessAudit, hubnessAuditSql),
+    "emb_centroid_margin" -> Query(centroidMargin, centroidMarginSql),
+    "emb_pca_power" -> Query(pcaPower, pcaPowerSql),
+    "emb_pair_distance_hist" -> Query(pairDistanceHist, pairDistanceHistSql),
+    "emb_dim_covariance" -> Query(dimCovariance, dimCovarianceSql),
+    "emb_ivf_balance" -> Query(ivfBalance, ivfBalanceSql),
+    "emb_centroid_drift" -> Query(centroidDrift, centroidDriftSql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -1796,55 +1797,29 @@ object Embeddings {
        |ORDER BY width""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "retrieval_mmr" -> mmrRerank,
-    "emb_matryoshka_recall" -> matryoshkaRecall,
-    "emb_pq_adc_topk" -> pqAdcTopK,
-    "emb_dim_variance" -> dimVariance,
-    "emb_jl_distortion" -> jlDistortion,
-    "emb_truncation_energy" -> truncationEnergy,
-    "retrieval_hard_negatives" -> hardNegatives,
-    "emb_cosine_topk" -> cosineTopK,
-    "emb_ann_quantized" -> annQuantized,
-    "emb_ann_ivf" -> annIvf,
-    "emb_ann_recall_eval" -> annRecallEval,
-    "emb_ann_recall_sweep" -> annRecallSweep,
-    "emb_label_norms" -> labelCentroidNorm,
-    "emb_ann_lsh_buckets" -> annLshBuckets,
-    "emb_kmeans_assign" -> kmeansAssign,
-    "emb_ivf_incremental" -> ivfIncrementalAssign,
-    "emb_reciprocal_knn" -> reciprocalKnn,
-    "emb_knn_label_eval" -> knnLabelEval,
-    "emb_cell_purity" -> cellPurity,
-    "emb_cell_nmi" -> cellNmi,
-    "emb_silhouette" -> silhouette,
-    "emb_semantic_dedup" -> semanticDedup,
-    "emb_outliers_per_cell" -> outliersPerCell,
-    "dedup_embedding_lsh" -> dedupEmbeddingLsh)
-
-  val oracle: Map[String, String] = Map(
-    "emb_pq_adc_topk" -> pqAdcTopKSql,
-    "emb_matryoshka_recall" -> matryoshkaRecallSql,
-    "emb_dim_variance" -> dimVarianceSql,
-    "emb_jl_distortion" -> jlDistortionSql,
-    "emb_truncation_energy" -> truncationEnergySql,
-    "retrieval_mmr" -> mmrRerankSql,
-    "retrieval_hard_negatives" -> hardNegativesSql,
-    "emb_cosine_topk" -> cosineTopKSql,
-    "emb_ann_quantized" -> annQuantizedSql,
-    "emb_label_norms" -> labelCentroidNormSql,
-    "emb_ann_lsh_buckets" -> annLshBucketsSql,
-    "emb_ann_ivf" -> annIvfSql,
-    "emb_ann_recall_eval" -> annRecallEvalSql,
-    "emb_ann_recall_sweep" -> annRecallSweepSql,
-    "emb_kmeans_assign" -> kmeansAssignSql,
-    "emb_ivf_incremental" -> ivfIncrementalAssignSql,
-    "emb_reciprocal_knn" -> reciprocalKnnSql,
-    "emb_knn_label_eval" -> knnLabelEvalSql,
-    "emb_cell_purity" -> cellPuritySql,
-    "emb_cell_nmi" -> cellNmiSql,
-    "emb_silhouette" -> silhouetteSql,
-    "emb_semantic_dedup" -> semanticDedupSql,
-    "emb_outliers_per_cell" -> outliersPerCellSql,
-    "dedup_embedding_lsh" -> dedupEmbeddingLshSql)
+  val queries: Map[String, Query] = Map(
+    "retrieval_mmr" -> Query(mmrRerank, mmrRerankSql),
+    "emb_matryoshka_recall" -> Query(matryoshkaRecall, matryoshkaRecallSql),
+    "emb_pq_adc_topk" -> Query(pqAdcTopK, pqAdcTopKSql),
+    "emb_dim_variance" -> Query(dimVariance, dimVarianceSql),
+    "emb_jl_distortion" -> Query(jlDistortion, jlDistortionSql),
+    "emb_truncation_energy" -> Query(truncationEnergy, truncationEnergySql),
+    "retrieval_hard_negatives" -> Query(hardNegatives, hardNegativesSql),
+    "emb_cosine_topk" -> Query(cosineTopK, cosineTopKSql),
+    "emb_ann_quantized" -> Query(annQuantized, annQuantizedSql),
+    "emb_ann_ivf" -> Query(annIvf, annIvfSql),
+    "emb_ann_recall_eval" -> Query(annRecallEval, annRecallEvalSql),
+    "emb_ann_recall_sweep" -> Query(annRecallSweep, annRecallSweepSql),
+    "emb_label_norms" -> Query(labelCentroidNorm, labelCentroidNormSql),
+    "emb_ann_lsh_buckets" -> Query(annLshBuckets, annLshBucketsSql),
+    "emb_kmeans_assign" -> Query(kmeansAssign, kmeansAssignSql),
+    "emb_ivf_incremental" -> Query(ivfIncrementalAssign, ivfIncrementalAssignSql),
+    "emb_reciprocal_knn" -> Query(reciprocalKnn, reciprocalKnnSql),
+    "emb_knn_label_eval" -> Query(knnLabelEval, knnLabelEvalSql),
+    "emb_cell_purity" -> Query(cellPurity, cellPuritySql),
+    "emb_cell_nmi" -> Query(cellNmi, cellNmiSql),
+    "emb_silhouette" -> Query(silhouette, silhouetteSql),
+    "emb_semantic_dedup" -> Query(semanticDedup, semanticDedupSql),
+    "emb_outliers_per_cell" -> Query(outliersPerCell, outliersPerCellSql),
+    "dedup_embedding_lsh" -> Query(dedupEmbeddingLsh, dedupEmbeddingLshSql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
 import graft.queries.Relational.{cents, centsSql, moneySum, moneySumSql}
+import graft.Query
 
 /** Event-stream analytics, batch form. The same transforms run under
   * Structured Streaming in graft.streaming (readStream + watermark);
@@ -775,39 +776,21 @@ object Events {
       |GROUP BY 1, 2, 3
       |ORDER BY n DESC, step1, step2, step3 LIMIT 10""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev_top_paths" -> topPaths,
-    "ev_lateness_audit" -> latenessAudit,
-    "ev_gap_fill_locf" -> gapFillLocf,
-    "ev_gap_fill_linear" -> gapFillLinear,
-    "ev_scd2_intervals" -> scd2Intervals,
-    "ev_session_transitions" -> sessionTransitions,
-    "ev_heavy_users" -> heavyUsers,
-    "ev_tumbling_hourly" -> tumblingHourly,
-    "ev_sliding_2h" -> slidingTwoHourBatch,
-    "ev_funnel" -> funnel,
-    "ev_retention_cohorts" -> retentionCohorts,
-    "ev_daily_user_stats" -> dailyUserStats,
-    "ev_sessionize" -> sessionize,
-    "ev_anomaly_3sigma" -> anomaly3Sigma,
-    "ev_seasonal_anomaly" -> seasonalAnomaly,
-    "ev_json_extract" -> jsonExtract)
-
-  val oracle: Map[String, String] = Map(
-    "ev_top_paths" -> topPathsSql,
-    "ev_lateness_audit" -> latenessAuditSql,
-    "ev_gap_fill_locf" -> gapFillLocfSql,
-    "ev_gap_fill_linear" -> gapFillLinearSql,
-    "ev_scd2_intervals" -> scd2IntervalsSql,
-    "ev_session_transitions" -> sessionTransitionsSql,
-    "ev_heavy_users" -> heavyUsersSql,
-    "ev_tumbling_hourly" -> tumblingHourlySql,
-    "ev_sliding_2h" -> slidingTwoHourBatchSql,
-    "ev_funnel" -> funnelSql,
-    "ev_retention_cohorts" -> retentionCohortsSql,
-    "ev_daily_user_stats" -> dailyUserStatsSql,
-    "ev_sessionize" -> sessionizeSql,
-    "ev_anomaly_3sigma" -> anomaly3SigmaSql,
-    "ev_seasonal_anomaly" -> seasonalAnomalySql,
-    "ev_json_extract" -> jsonExtractSql)
+  val queries: Map[String, Query] = Map(
+    "ev_top_paths" -> Query(topPaths, topPathsSql),
+    "ev_lateness_audit" -> Query(latenessAudit, latenessAuditSql),
+    "ev_gap_fill_locf" -> Query(gapFillLocf, gapFillLocfSql),
+    "ev_gap_fill_linear" -> Query(gapFillLinear, gapFillLinearSql),
+    "ev_scd2_intervals" -> Query(scd2Intervals, scd2IntervalsSql),
+    "ev_session_transitions" -> Query(sessionTransitions, sessionTransitionsSql),
+    "ev_heavy_users" -> Query(heavyUsers, heavyUsersSql),
+    "ev_tumbling_hourly" -> Query(tumblingHourly, tumblingHourlySql),
+    "ev_sliding_2h" -> Query(slidingTwoHourBatch, slidingTwoHourBatchSql),
+    "ev_funnel" -> Query(funnel, funnelSql),
+    "ev_retention_cohorts" -> Query(retentionCohorts, retentionCohortsSql),
+    "ev_daily_user_stats" -> Query(dailyUserStats, dailyUserStatsSql),
+    "ev_sessionize" -> Query(sessionize, sessionizeSql),
+    "ev_anomaly_3sigma" -> Query(anomaly3Sigma, anomaly3SigmaSql),
+    "ev_seasonal_anomaly" -> Query(seasonalAnomaly, seasonalAnomalySql),
+    "ev_json_extract" -> Query(jsonExtract, jsonExtractSql))
 }

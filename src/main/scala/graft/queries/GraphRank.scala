@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 
 /** Duplication-centrality ranking: damped PageRank over the bipartite
   * document ↔ band-hub graph of the MinHash-LSH banding (the same
@@ -1551,27 +1552,15 @@ object GraphRank {
        |  CAST(SUM(deg) AS BIGINT) AS sum_degree
        |FROM full_deg GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_degree_histogram" -> degreeHistogram,
-    "graph_neighbor_jaccard" -> neighborJaccard,
-    "graph_modularity" -> modularity,
-    "graph_label_propagation" -> labelPropagation,
-    "graph_pagerank_dups" -> pagerankDupGraph,
-    "graph_hits_scores" -> hitsScores,
-    "graph_local_clustering" -> localClustering,
-    "graph_triangle_count" -> triangleCount,
-    "graph_degree_assortativity" -> degreeAssortativity,
-    "graph_kcore" -> kcore)
-
-  val oracle: Map[String, String] = Map(
-    "graph_degree_histogram" -> degreeHistogramSql,
-    "graph_neighbor_jaccard" -> neighborJaccardSql,
-    "graph_modularity" -> modularitySql,
-    "graph_label_propagation" -> labelPropagationSql,
-    "graph_pagerank_dups" -> pagerankDupGraphSql,
-    "graph_hits_scores" -> hitsScoresSql,
-    "graph_local_clustering" -> localClusteringSql,
-    "graph_triangle_count" -> triangleCountSql,
-    "graph_degree_assortativity" -> degreeAssortativitySql,
-    "graph_kcore" -> kcoreSql)
+  val queries: Map[String, Query] = Map(
+    "graph_degree_histogram" -> Query(degreeHistogram, degreeHistogramSql),
+    "graph_neighbor_jaccard" -> Query(neighborJaccard, neighborJaccardSql),
+    "graph_modularity" -> Query(modularity, modularitySql),
+    "graph_label_propagation" -> Query(labelPropagation, labelPropagationSql),
+    "graph_pagerank_dups" -> Query(pagerankDupGraph, pagerankDupGraphSql),
+    "graph_hits_scores" -> Query(hitsScores, hitsScoresSql),
+    "graph_local_clustering" -> Query(localClustering, localClusteringSql),
+    "graph_triangle_count" -> Query(triangleCount, triangleCountSql),
+    "graph_degree_assortativity" -> Query(degreeAssortativity, degreeAssortativitySql),
+    "graph_kcore" -> Query(kcore, kcoreSql, Some(kcoreScripted)))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
 import graft.queries.Relational.{cents, centsSql}
+import graft.Query
 
 /** User-lifecycle analytics over the events stream: conversion
   * latency, interarrival distributions, per-type value histograms,
@@ -587,27 +588,15 @@ object LifecycleOps {
       |FROM a WHERE n_gaps >= 10
       |ORDER BY var_sec2, user_id LIMIT 20""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev_bot_regularity" -> botRegularity,
-    "ev_funnel_windowed" -> funnelWindowed,
-    "ev_survival_curve" -> survivalCurve,
-    "ev_time_to_convert" -> timeToConvert,
-    "ev_interarrival_quantiles" -> interarrivalQuantiles,
-    "ev_value_histogram" -> valueHistogram,
-    "ev_markov_entropy" -> markovEntropy,
-    "ev_copresence_affinity" -> copresenceAffinity,
-    "ev_streak_lengths" -> streakLengths,
-    "ev_hazard_censored" -> hazardCensored)
-
-  val oracle: Map[String, String] = Map(
-    "ev_bot_regularity" -> botRegularitySql,
-    "ev_funnel_windowed" -> funnelWindowedSql,
-    "ev_survival_curve" -> survivalCurveSql,
-    "ev_time_to_convert" -> timeToConvertSql,
-    "ev_interarrival_quantiles" -> interarrivalQuantilesSql,
-    "ev_value_histogram" -> valueHistogramSql,
-    "ev_markov_entropy" -> markovEntropySql,
-    "ev_copresence_affinity" -> copresenceAffinitySql,
-    "ev_streak_lengths" -> streakLengthsSql,
-    "ev_hazard_censored" -> hazardCensoredSql)
+  val queries: Map[String, Query] = Map(
+    "ev_bot_regularity" -> Query(botRegularity, botRegularitySql),
+    "ev_funnel_windowed" -> Query(funnelWindowed, funnelWindowedSql),
+    "ev_survival_curve" -> Query(survivalCurve, survivalCurveSql),
+    "ev_time_to_convert" -> Query(timeToConvert, timeToConvertSql),
+    "ev_interarrival_quantiles" -> Query(interarrivalQuantiles, interarrivalQuantilesSql),
+    "ev_value_histogram" -> Query(valueHistogram, valueHistogramSql),
+    "ev_markov_entropy" -> Query(markovEntropy, markovEntropySql),
+    "ev_copresence_affinity" -> Query(copresenceAffinity, copresenceAffinitySql),
+    "ev_streak_lengths" -> Query(streakLengths, streakLengthsSql),
+    "ev_hazard_censored" -> Query(hazardCensored, hazardCensoredSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** The composed end-to-end corpus-build pipeline: every curation
   * stage the standalone queries verify one-by-one, chained as ONE
@@ -347,9 +348,6 @@ object PipelineE2E {
        |GROUP BY ALL
        |ORDER BY p.shard, p.seq_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_corpus_build" -> corpusBuild)
-
-  val oracle: Map[String, String] = Map(
-    "pipeline_corpus_build" -> corpusBuildSql)
+  val queries: Map[String, Query] = Map(
+    "pipeline_corpus_build" -> Query(corpusBuild, corpusBuildSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** EXACT set-similarity join by prefix filtering (the PPJoin-family
   * pruning from the public similarity-join literature): document
@@ -140,9 +141,6 @@ object PrefixFilterJoin {
       |FROM j WHERE jaccard_permille >= 800
       |ORDER BY doc_a, doc_b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_prefix_filter_pairs" -> crossSourcePairs)
-
-  val oracle: Map[String, String] = Map(
-    "dedup_prefix_filter_pairs" -> crossSourcePairsSql)
+  val queries: Map[String, Query] = Map(
+    "dedup_prefix_filter_pairs" -> Query(crossSourcePairs, crossSourcePairsSql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
 import graft.queries.Relational.{cents, centsSql}
+import graft.Query
 
 /** Product-analytics tier over the events stream: rolling active
   * users, interval concurrency, RFM segmentation, and last-touch
@@ -2064,59 +2065,31 @@ object ProductAnalytics {
       |    // (CAST(n_users AS HUGEINT) * total) AS BIGINT) AS gini_e6
       |FROM agg ORDER BY metric""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ev_click_to_purchase" -> clickToPurchase,
-    "ev_novelty_effect" -> noveltyEffect,
-    "ev_gini_concentration" -> giniConcentration,
-    "ev_cuped_adjusted" -> cupedAdjusted,
-    "ev_tail_index" -> tailIndex,
-    "ev_retention_halflife" -> retentionHalflife,
-    "ev_growth_accounting" -> growthAccounting,
-    "ev_attribution_position" -> attributionPosition,
-    "ev_ab_srm" -> abSrm,
-    "ev_rfm_migration" -> rfmMigration,
-    "ev_mde_power" -> mdePower,
-    "ev_did_uplift" -> didUplift,
-    "ev_holdout_ab" -> holdoutAb,
-    "sketch_daily_merge" -> sketchDailyMerge,
-    "sketch_quantile_merge" -> sketchQuantileMerge,
-    "sketch_pair_overlap" -> sketchPairOverlap,
-    "ev_ltv_cohorts" -> ltvCohorts,
-    "ev_new_vs_returning" -> newVsReturning,
-    "ev_power_users_pareto" -> powerUsersPareto,
-    "ev_rolling_active_users" -> rollingActiveUsers,
-    "ev_concurrency_curve" -> concurrencyCurve,
-    "ev_rfm_segments" -> rfmSegments,
-    "ev_attribution_last_touch" -> attributionLastTouch,
-    "ev_attribution_touchpoints" -> attributionTouchpoints,
-    "ev_attribution_time_decay" -> attributionTimeDecay,
-    "ev_cusum_changepoint" -> cusumChangepoint)
-
-  val oracle: Map[String, String] = Map(
-    "ev_click_to_purchase" -> clickToPurchaseSql,
-    "ev_novelty_effect" -> noveltyEffectSql,
-    "ev_gini_concentration" -> giniConcentrationSql,
-    "ev_cuped_adjusted" -> cupedAdjustedSql,
-    "ev_tail_index" -> tailIndexSql,
-    "ev_retention_halflife" -> retentionHalflifeSql,
-    "ev_growth_accounting" -> growthAccountingSql,
-    "ev_attribution_position" -> attributionPositionSql,
-    "ev_ab_srm" -> abSrmSql,
-    "ev_rfm_migration" -> rfmMigrationSql,
-    "ev_mde_power" -> mdePowerSql,
-    "ev_did_uplift" -> didUpliftSql,
-    "ev_holdout_ab" -> holdoutAbSql,
-    "sketch_daily_merge" -> sketchDailyMergeSql,
-    "sketch_quantile_merge" -> sketchQuantileMergeSql,
-    "sketch_pair_overlap" -> sketchPairOverlapSql,
-    "ev_ltv_cohorts" -> ltvCohortsSql,
-    "ev_new_vs_returning" -> newVsReturningSql,
-    "ev_power_users_pareto" -> powerUsersParetoSql,
-    "ev_rolling_active_users" -> rollingActiveUsersSql,
-    "ev_concurrency_curve" -> concurrencyCurveSql,
-    "ev_rfm_segments" -> rfmSegmentsSql,
-    "ev_attribution_last_touch" -> attributionLastTouchSql,
-    "ev_attribution_touchpoints" -> attributionTouchpointsSql,
-    "ev_attribution_time_decay" -> attributionTimeDecaySql,
-    "ev_cusum_changepoint" -> cusumChangepointSql)
+  val queries: Map[String, Query] = Map(
+    "ev_click_to_purchase" -> Query(clickToPurchase, clickToPurchaseSql),
+    "ev_novelty_effect" -> Query(noveltyEffect, noveltyEffectSql),
+    "ev_gini_concentration" -> Query(giniConcentration, giniConcentrationSql),
+    "ev_cuped_adjusted" -> Query(cupedAdjusted, cupedAdjustedSql),
+    "ev_tail_index" -> Query(tailIndex, tailIndexSql),
+    "ev_retention_halflife" -> Query(retentionHalflife, retentionHalflifeSql),
+    "ev_growth_accounting" -> Query(growthAccounting, growthAccountingSql),
+    "ev_attribution_position" -> Query(attributionPosition, attributionPositionSql),
+    "ev_ab_srm" -> Query(abSrm, abSrmSql),
+    "ev_rfm_migration" -> Query(rfmMigration, rfmMigrationSql),
+    "ev_mde_power" -> Query(mdePower, mdePowerSql),
+    "ev_did_uplift" -> Query(didUplift, didUpliftSql),
+    "ev_holdout_ab" -> Query(holdoutAb, holdoutAbSql),
+    "sketch_daily_merge" -> Query(sketchDailyMerge, sketchDailyMergeSql),
+    "sketch_quantile_merge" -> Query(sketchQuantileMerge, sketchQuantileMergeSql),
+    "sketch_pair_overlap" -> Query(sketchPairOverlap, sketchPairOverlapSql),
+    "ev_ltv_cohorts" -> Query(ltvCohorts, ltvCohortsSql),
+    "ev_new_vs_returning" -> Query(newVsReturning, newVsReturningSql),
+    "ev_power_users_pareto" -> Query(powerUsersPareto, powerUsersParetoSql),
+    "ev_rolling_active_users" -> Query(rollingActiveUsers, rollingActiveUsersSql),
+    "ev_concurrency_curve" -> Query(concurrencyCurve, concurrencyCurveSql),
+    "ev_rfm_segments" -> Query(rfmSegments, rfmSegmentsSql),
+    "ev_attribution_last_touch" -> Query(attributionLastTouch, attributionLastTouchSql),
+    "ev_attribution_touchpoints" -> Query(attributionTouchpoints, attributionTouchpointsSql),
+    "ev_attribution_time_decay" -> Query(attributionTimeDecay, attributionTimeDecaySql),
+    "ev_cusum_changepoint" -> Query(cusumChangepoint, cusumChangepointSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
+import graft.Query
 
 /** Relational query pack over the TPC-H-ish star schema.
   *
@@ -693,67 +694,35 @@ object Relational {
   }
 
   /** Registry: name -> query fn, plus matching oracle SQL. */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary" -> q1PricingSummary,
-    "q3_shipping_priority" -> q3ShippingPriority,
-    "q5_local_supplier_volume" -> q5LocalSupplierVolume,
-    "q6_revenue_forecast" -> q6RevenueForecast,
-    "q14_promo_revenue" -> q14PromoRevenue,
-    "join_semi" -> joinSemi,
-    "join_anti" -> joinAnti,
-    "join_outer_distribution" -> joinOuterDistribution,
-    "window_top_per_key" -> windowTopPerKey,
-    "window_running_sum" -> windowRunningSum,
-    "window_lag_lead" -> windowLagLead,
-    "window_rank_stats" -> windowRankStats,
-    "window_trailing_30d" -> windowTrailing30d,
-    "unpivot_status" -> unpivotStatus,
-    "sort_topk" -> sortTopK,
-    "set_union" -> setUnion,
-    "set_intersect" -> setIntersect,
-    "set_except" -> setExcept,
-    "agg_rollup" -> aggRollup,
-    "agg_cube" -> aggCube,
-    "scalar_array_functions" -> scalarArrayFunctions,
-    "agg_distinct" -> aggDistinct,
-    "agg_having" -> aggHaving,
-    "agg_pivot" -> aggPivot,
-    "agg_pivot_multi" -> aggPivotMulti,
-    "agg_string_collect" -> aggStringCollect,
-    "subquery_scalar" -> subqueryScalar,
-    "subquery_in" -> subqueryIn,
-    "scalar_functions" -> scalarFunctions,
-    "date_functions" -> dateFunctions)
-
-  val oracle: Map[String, String] = Map(
-    "q1_pricing_summary" -> q1Sql,
-    "q3_shipping_priority" -> q3Sql,
-    "q5_local_supplier_volume" -> q5Sql,
-    "q6_revenue_forecast" -> q6Sql,
-    "q14_promo_revenue" -> q14PromoRevenueSql,
-    "join_semi" -> joinSemiSql,
-    "join_anti" -> joinAntiSql,
-    "join_outer_distribution" -> joinOuterDistributionSql,
-    "window_top_per_key" -> windowTopPerKeySql,
-    "window_running_sum" -> windowRunningSumSql,
-    "window_lag_lead" -> windowLagLeadSql,
-    "window_rank_stats" -> windowRankStatsSql,
-    "window_trailing_30d" -> windowTrailing30dSql,
-    "unpivot_status" -> unpivotStatusSql,
-    "sort_topk" -> sortTopKSql,
-    "set_union" -> setUnionSql,
-    "set_intersect" -> setIntersectSql,
-    "set_except" -> setExceptSql,
-    "agg_rollup" -> aggRollupSql,
-    "agg_cube" -> aggCubeSql,
-    "scalar_array_functions" -> scalarArrayFunctionsSql,
-    "agg_distinct" -> aggDistinctSql,
-    "agg_having" -> aggHavingSql,
-    "agg_pivot" -> aggPivotSql,
-    "agg_pivot_multi" -> aggPivotMultiSql,
-    "agg_string_collect" -> aggStringCollectSql,
-    "subquery_scalar" -> subqueryScalarSql,
-    "subquery_in" -> subqueryInSql,
-    "scalar_functions" -> scalarFunctionsSql,
-    "date_functions" -> dateFunctionsSql)
+  val queries: Map[String, Query] = Map(
+    "q1_pricing_summary" -> Query(q1PricingSummary, q1Sql),
+    "q3_shipping_priority" -> Query(q3ShippingPriority, q3Sql),
+    "q5_local_supplier_volume" -> Query(q5LocalSupplierVolume, q5Sql),
+    "q6_revenue_forecast" -> Query(q6RevenueForecast, q6Sql),
+    "q14_promo_revenue" -> Query(q14PromoRevenue, q14PromoRevenueSql),
+    "join_semi" -> Query(joinSemi, joinSemiSql),
+    "join_anti" -> Query(joinAnti, joinAntiSql),
+    "join_outer_distribution" -> Query(joinOuterDistribution, joinOuterDistributionSql),
+    "window_top_per_key" -> Query(windowTopPerKey, windowTopPerKeySql),
+    "window_running_sum" -> Query(windowRunningSum, windowRunningSumSql),
+    "window_lag_lead" -> Query(windowLagLead, windowLagLeadSql),
+    "window_rank_stats" -> Query(windowRankStats, windowRankStatsSql),
+    "window_trailing_30d" -> Query(windowTrailing30d, windowTrailing30dSql),
+    "unpivot_status" -> Query(unpivotStatus, unpivotStatusSql),
+    "sort_topk" -> Query(sortTopK, sortTopKSql),
+    "set_union" -> Query(setUnion, setUnionSql),
+    "set_intersect" -> Query(setIntersect, setIntersectSql),
+    "set_except" -> Query(setExcept, setExceptSql),
+    "agg_rollup" -> Query(aggRollup, aggRollupSql),
+    "agg_cube" -> Query(aggCube, aggCubeSql),
+    "scalar_array_functions" -> Query(scalarArrayFunctions, scalarArrayFunctionsSql),
+    "agg_distinct" -> Query(aggDistinct, aggDistinctSql),
+    "agg_having" -> Query(aggHaving, aggHavingSql),
+    "agg_pivot" -> Query(aggPivot, aggPivotSql),
+    "agg_pivot_multi" -> Query(aggPivotMulti, aggPivotMultiSql),
+    "agg_string_collect" -> Query(aggStringCollect, aggStringCollectSql),
+    "subquery_scalar" -> Query(subqueryScalar, subqueryScalarSql),
+    "subquery_in" -> Query(subqueryIn, subqueryInSql),
+    "scalar_functions" -> Query(scalarFunctions, scalarFunctionsSql),
+    "date_functions" -> Query(dateFunctions, dateFunctionsSql))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
 import graft.queries.Relational.{cents, centsSql, moneySum, moneySumSql}
+import graft.Query
 
 /** Second relational pack: temporal joins (as-of, range) composed from
   * scalable primitives, and more TPC-H-shaped queries (min-per-group
@@ -372,28 +373,15 @@ object Relational2 {
        |ORDER BY l_returnflag""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "asof_last_purchase" -> asofLastPurchase,
-    "asof_native" -> asofNative,
-    "asof_native_forward" -> asofNativeForward,
-    "range_join_followers" -> rangeJoinFollowers,
-    "q2_min_per_group" -> q2MinPerGroup,
-    "q10_returned_items" -> q10ReturnedItems,
-    "q19_disjunctive" -> q19Disjunctive,
-    "q4_priority_exists" -> q4PriorityExists,
-    "quantiles_exact" -> quantilesExact,
-    "sketch_profile" -> sketchProfile)
-
-  val oracle: Map[String, String] = Map(
-    "asof_last_purchase" -> asofLastPurchaseSql,
-    "asof_native" -> asofNativeSql, // composed SQL + the dedup QUALIFY
-    "asof_native_forward" -> asofNativeForwardSql,
-
-    "range_join_followers" -> rangeJoinFollowersSql,
-    "q2_min_per_group" -> q2MinPerGroupSql,
-    "q10_returned_items" -> q10ReturnedItemsSql,
-    "q19_disjunctive" -> q19DisjunctiveSql,
-    "q4_priority_exists" -> q4PriorityExistsSql,
-    "quantiles_exact" -> quantilesExactSql,
-    "sketch_profile" -> sketchProfileSql)
+  val queries: Map[String, Query] = Map(
+    "asof_last_purchase" -> Query(asofLastPurchase, asofLastPurchaseSql),
+    "asof_native" -> Query(asofNative, asofNativeSql), // composed SQL + the dedup QUALIFY
+    "asof_native_forward" -> Query(asofNativeForward, asofNativeForwardSql),
+    "range_join_followers" -> Query(rangeJoinFollowers, rangeJoinFollowersSql),
+    "q2_min_per_group" -> Query(q2MinPerGroup, q2MinPerGroupSql),
+    "q10_returned_items" -> Query(q10ReturnedItems, q10ReturnedItemsSql),
+    "q19_disjunctive" -> Query(q19Disjunctive, q19DisjunctiveSql),
+    "q4_priority_exists" -> Query(q4PriorityExists, q4PriorityExistsSql),
+    "quantiles_exact" -> Query(quantilesExact, quantilesExactSql),
+    "sketch_profile" -> Query(sketchProfile, sketchProfileSql))
 }

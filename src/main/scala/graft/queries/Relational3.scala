@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.queries.Relational.{cents, centsSql, moneySum, moneySumSql}
+import graft.Query
 
 /** Third relational pack: the remaining famous TPC-H shapes — two-
   * nation trade volume (q7), profit rollup (q9), correlated avg
@@ -263,23 +264,13 @@ object Relational3 {
       |ORDER BY o_totalprice DESC, o_orderkey
       |LIMIT 100""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q13_order_count_dist" -> q13OrderCountDist,
-    "q18_large_volume_customer" -> q18LargeVolumeCustomer,
-    "q15_top_supplier" -> q15TopSupplier,
-    "q21_waiting_supplier" -> q21WaitingSupplier,
-    "q7_nation_volume" -> q7NationVolume,
-    "q9_profit_rollup" -> q9ProfitRollup,
-    "q17_small_quantity" -> q17SmallQuantity,
-    "q22_global_sales" -> q22GlobalSales)
-
-  val oracle: Map[String, String] = Map(
-    "q13_order_count_dist" -> q13OrderCountDistSql,
-    "q18_large_volume_customer" -> q18LargeVolumeCustomerSql,
-    "q15_top_supplier" -> q15TopSupplierSql,
-    "q21_waiting_supplier" -> q21WaitingSupplierSql,
-    "q7_nation_volume" -> q7NationVolumeSql,
-    "q9_profit_rollup" -> q9ProfitRollupSql,
-    "q17_small_quantity" -> q17SmallQuantitySql,
-    "q22_global_sales" -> q22GlobalSalesSql)
+  val queries: Map[String, Query] = Map(
+    "q13_order_count_dist" -> Query(q13OrderCountDist, q13OrderCountDistSql),
+    "q18_large_volume_customer" -> Query(q18LargeVolumeCustomer, q18LargeVolumeCustomerSql),
+    "q15_top_supplier" -> Query(q15TopSupplier, q15TopSupplierSql),
+    "q21_waiting_supplier" -> Query(q21WaitingSupplier, q21WaitingSupplierSql),
+    "q7_nation_volume" -> Query(q7NationVolume, q7NationVolumeSql),
+    "q9_profit_rollup" -> Query(q9ProfitRollup, q9ProfitRollupSql),
+    "q17_small_quantity" -> Query(q17SmallQuantity, q17SmallQuantitySql),
+    "q22_global_sales" -> Query(q22GlobalSales, q22GlobalSalesSql))
 }

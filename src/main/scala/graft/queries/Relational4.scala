@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.queries.Relational.{cents, centsSql}
+import graft.Query
 
 /** Fourth relational pack — the last five TPC-H shapes, completing all
   * 22 on the fixture star schema. The fixture has no partsupp table, so
@@ -471,25 +472,14 @@ object Relational4 {
       |  CAST(SUM(lead_days) AS BIGINT) // COUNT(*) AS mean_days_floor
       |FROM lt GROUP BY priority ORDER BY priority""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_leadtime_percentiles" -> leadtimePercentiles,
-    "agg_price_elasticity" -> priceElasticity,
-    "agg_market_basket" -> marketBasket,
-    "agg_backlog_aging" -> backlogAging,
-    "q8_market_share" -> q8MarketShare,
-    "q11_important_value" -> q11ImportantValue,
-    "q12_ship_priority" -> q12ShipPriority,
-    "q16_supplier_count" -> q16SupplierCount,
-    "q20_dominant_supplier" -> q20DominantSupplier)
-
-  val oracle: Map[String, String] = Map(
-    "agg_leadtime_percentiles" -> leadtimePercentilesSql,
-    "agg_price_elasticity" -> priceElasticitySql,
-    "agg_market_basket" -> marketBasketSql,
-    "agg_backlog_aging" -> backlogAgingSql,
-    "q8_market_share" -> q8MarketShareSql,
-    "q11_important_value" -> q11ImportantValueSql,
-    "q12_ship_priority" -> q12ShipPrioritySql,
-    "q16_supplier_count" -> q16SupplierCountSql,
-    "q20_dominant_supplier" -> q20DominantSupplierSql)
+  val queries: Map[String, Query] = Map(
+    "agg_leadtime_percentiles" -> Query(leadtimePercentiles, leadtimePercentilesSql),
+    "agg_price_elasticity" -> Query(priceElasticity, priceElasticitySql),
+    "agg_market_basket" -> Query(marketBasket, marketBasketSql),
+    "agg_backlog_aging" -> Query(backlogAging, backlogAgingSql),
+    "q8_market_share" -> Query(q8MarketShare, q8MarketShareSql),
+    "q11_important_value" -> Query(q11ImportantValue, q11ImportantValueSql),
+    "q12_ship_priority" -> Query(q12ShipPriority, q12ShipPrioritySql),
+    "q16_supplier_count" -> Query(q16SupplierCount, q16SupplierCountSql),
+    "q20_dominant_supplier" -> Query(q20DominantSupplier, q20DominantSupplierSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** Hybrid retrieval: fuse a lexical ranker (BM25 over the documents
   * table) with a semantic ranker (embedding cosine over the embeddings
@@ -472,15 +473,9 @@ object Retrieval {
        |ORDER BY k1_permille, b_permille""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "retrieval_bm25_tuning_sweep" -> bm25TuningSweep,
-    "retrieval_rrf_fusion" -> rrfFusion,
-    "retrieval_ndcg_eval" -> ndcgEval,
-    "retrieval_query_expansion" -> queryExpansion)
-
-  val oracle: Map[String, String] = Map(
-    "retrieval_rrf_fusion" -> rrfFusionSql,
-    "retrieval_bm25_tuning_sweep" -> bm25TuningSweepSql,
-    "retrieval_ndcg_eval" -> ndcgEvalSql,
-    "retrieval_query_expansion" -> queryExpansionSql)
+  val queries: Map[String, Query] = Map(
+    "retrieval_bm25_tuning_sweep" -> Query(bm25TuningSweep, bm25TuningSweepSql),
+    "retrieval_rrf_fusion" -> Query(rrfFusion, rrfFusionSql),
+    "retrieval_ndcg_eval" -> Query(ndcgEval, ndcgEvalSql),
+    "retrieval_query_expansion" -> Query(queryExpansion, queryExpansionSql))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.functions.GraftFunctions
+import graft.Query
 
 /** SimHash near-dup detection over documents: one 64-bit fingerprint
   * per doc (native codegen'd expression), banded into 4×16-bit chunks
@@ -227,13 +228,8 @@ object SimHashDedup {
        |  CAST((SELECT COUNT(*) FROM sim ANTI JOIN lsh USING (doc_a, doc_b))
        |    AS BIGINT) AS n_sim_only""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_simhash" -> dedupSimhash,
-    "dedup_simhash_bit_balance" -> simhashBitBalance,
-    "dedup_method_agreement" -> methodAgreement)
-
-  val oracle: Map[String, String] = Map(
-    "dedup_simhash" -> dedupSimhashSql,
-    "dedup_simhash_bit_balance" -> simhashBitBalanceSql,
-    "dedup_method_agreement" -> methodAgreementSql)
+  val queries: Map[String, Query] = Map(
+    "dedup_simhash" -> Query(dedupSimhash, dedupSimhashSql),
+    "dedup_simhash_bit_balance" -> Query(simhashBitBalance, simhashBitBalanceSql),
+    "dedup_method_agreement" -> Query(methodAgreement, methodAgreementSql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** Snapshot/CDC surface: what changed between two corpus snapshots,
   * and incremental maintenance of aggregates from that change feed —
@@ -130,11 +131,7 @@ object SnapshotOps {
       |FROM documents WHERE doc_id % 10 <> 0
       |GROUP BY source ORDER BY source""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "doc_snapshot_diff" -> snapshotDiff,
-    "doc_incremental_stats" -> incrementalStats)
-
-  val oracle: Map[String, String] = Map(
-    "doc_snapshot_diff" -> snapshotDiffSql,
-    "doc_incremental_stats" -> incrementalStatsSql)
+  val queries: Map[String, Query] = Map(
+    "doc_snapshot_diff" -> Query(snapshotDiff, snapshotDiffSql),
+    "doc_incremental_stats" -> Query(incrementalStats, incrementalStatsSql))
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.Tables
+import graft.Query
 
 /** SQL entry path: the same ANSI SQL string executed by spark.sql over
   * registered temp views AND by the DuckDB oracle — one dialect, two
@@ -200,23 +201,13 @@ object SqlSurface {
     registerViews(s, d); s.sql(nullSemanticsSql)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sql_pricing_summary" -> sqlPricingSummary,
-    "sql_top_customers" -> sqlTopCustomers,
-    "sql_grouping_sets" -> sqlGroupingSets,
-    "sql_set_ops_all" -> sqlSetOpsAll,
-    "sql_null_semantics" -> sqlNullSemantics,
-    "sql_lateral_topk" -> sqlLateralTopK,
-    "sql_recursive_spine" -> sqlRecursiveSpine,
-    "sql_recursive_hierarchy" -> sqlRecursiveHierarchy)
-
-  val oracle: Map[String, String] = Map(
-    "sql_pricing_summary" -> pricingSummarySql,
-    "sql_top_customers" -> topCustomersSql,
-    "sql_grouping_sets" -> groupingSetsSql,
-    "sql_set_ops_all" -> setOpsAllSql,
-    "sql_null_semantics" -> nullSemanticsSql,
-    "sql_lateral_topk" -> lateralTopKSql,
-    "sql_recursive_spine" -> recursiveSpineSql,
-    "sql_recursive_hierarchy" -> recursiveHierarchySql)
+  val queries: Map[String, Query] = Map(
+    "sql_pricing_summary" -> Query(sqlPricingSummary, pricingSummarySql),
+    "sql_top_customers" -> Query(sqlTopCustomers, topCustomersSql),
+    "sql_grouping_sets" -> Query(sqlGroupingSets, groupingSetsSql),
+    "sql_set_ops_all" -> Query(sqlSetOpsAll, setOpsAllSql),
+    "sql_null_semantics" -> Query(sqlNullSemantics, nullSemanticsSql),
+    "sql_lateral_topk" -> Query(sqlLateralTopK, lateralTopKSql),
+    "sql_recursive_spine" -> Query(sqlRecursiveSpine, recursiveSpineSql),
+    "sql_recursive_hierarchy" -> Query(sqlRecursiveHierarchy, recursiveHierarchySql))
 }

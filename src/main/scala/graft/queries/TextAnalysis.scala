@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** Retrieval scoring, repetition-quality rules and context-window
   * chunking over the documents table — the curation stages between
@@ -1303,45 +1304,24 @@ object TextAnalysis {
       |FROM cells c JOIN totals t ON c.actual_lang = t.actual_lang
       |ORDER BY c.actual_lang, c.pred_lang""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_lang_id_trigram" -> langIdTrigram,
-    "text_bigram_cond_entropy" -> bigramCondEntropy,
-    "text_ocr_noise" -> ocrNoise,
-    "text_code_ratio" -> codeRatio,
-    "text_readability" -> readability,
-    "text_keywords_rake" -> keywordsRake,
-    "text_char_entropy" -> charEntropy,
-    "text_quality_classifier" -> qualityClassifier,
-    "text_quality_dup_calibration" -> qualityDupCalibration,
-    "text_memorization_grams" -> memorizationGrams,
-    "text_heavy_hitters" -> heavyHitters,
-    "text_bm25_topk" -> bm25TopK,
-    "text_tfidf_top_terms" -> tfidfTopTerms,
-    "text_repetition_quality" -> repetitionQuality,
-    "text_vocab_oov" -> vocabOov,
-    "text_unigram_surprisal" -> unigramSurprisal,
-    "text_perplexity_filter_sweep" -> perplexityFilterSweep,
-    "text_collocations" -> collocations,
-    "doc_chunk_windows" -> chunkWindows)
-
-  val oracle: Map[String, String] = Map(
-    "text_lang_id_trigram" -> langIdTrigramSql,
-    "text_bigram_cond_entropy" -> bigramCondEntropySql,
-    "text_ocr_noise" -> ocrNoiseSql,
-    "text_code_ratio" -> codeRatioSql,
-    "text_readability" -> readabilitySql,
-    "text_keywords_rake" -> keywordsRakeSql,
-    "text_char_entropy" -> charEntropySql,
-    "text_quality_classifier" -> qualityClassifierSql,
-    "text_quality_dup_calibration" -> qualityDupCalibrationSql,
-    "text_memorization_grams" -> memorizationGramsSql,
-    "text_heavy_hitters" -> heavyHittersSql,
-    "text_bm25_topk" -> bm25TopKSql,
-    "text_tfidf_top_terms" -> tfidfTopTermsSql,
-    "text_repetition_quality" -> repetitionQualitySql,
-    "text_vocab_oov" -> vocabOovSql,
-    "text_unigram_surprisal" -> unigramSurprisalSql,
-    "text_perplexity_filter_sweep" -> perplexityFilterSweepSql,
-    "text_collocations" -> collocationsSql,
-    "doc_chunk_windows" -> chunkWindowsSql)
+  val queries: Map[String, Query] = Map(
+    "text_lang_id_trigram" -> Query(langIdTrigram, langIdTrigramSql),
+    "text_bigram_cond_entropy" -> Query(bigramCondEntropy, bigramCondEntropySql),
+    "text_ocr_noise" -> Query(ocrNoise, ocrNoiseSql),
+    "text_code_ratio" -> Query(codeRatio, codeRatioSql),
+    "text_readability" -> Query(readability, readabilitySql),
+    "text_keywords_rake" -> Query(keywordsRake, keywordsRakeSql),
+    "text_char_entropy" -> Query(charEntropy, charEntropySql),
+    "text_quality_classifier" -> Query(qualityClassifier, qualityClassifierSql),
+    "text_quality_dup_calibration" -> Query(qualityDupCalibration, qualityDupCalibrationSql),
+    "text_memorization_grams" -> Query(memorizationGrams, memorizationGramsSql),
+    "text_heavy_hitters" -> Query(heavyHitters, heavyHittersSql),
+    "text_bm25_topk" -> Query(bm25TopK, bm25TopKSql),
+    "text_tfidf_top_terms" -> Query(tfidfTopTerms, tfidfTopTermsSql),
+    "text_repetition_quality" -> Query(repetitionQuality, repetitionQualitySql),
+    "text_vocab_oov" -> Query(vocabOov, vocabOovSql),
+    "text_unigram_surprisal" -> Query(unigramSurprisal, unigramSurprisalSql),
+    "text_perplexity_filter_sweep" -> Query(perplexityFilterSweep, perplexityFilterSweepSql),
+    "text_collocations" -> Query(collocations, collocationsSql),
+    "doc_chunk_windows" -> Query(chunkWindows, chunkWindowsSql))
 }

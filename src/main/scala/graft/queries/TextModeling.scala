@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** Statistical language-model estimation over the corpus: Kneser–Ney
   * smoothed bigram probabilities, first-occurrence n-gram novelty
@@ -221,13 +222,8 @@ object TextModeling {
        |ORDER BY c.w""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_kneser_ney" -> kneserNey,
-    "text_ngram_novelty" -> ngramNovelty,
-    "agg_countmin_confirm" -> countMinConfirm)
-
-  val oracle: Map[String, String] = Map(
-    "text_kneser_ney" -> kneserNeySql,
-    "text_ngram_novelty" -> ngramNoveltySql,
-    "agg_countmin_confirm" -> countMinConfirmSql)
+  val queries: Map[String, Query] = Map(
+    "text_kneser_ney" -> Query(kneserNey, kneserNeySql),
+    "text_ngram_novelty" -> Query(ngramNovelty, ngramNoveltySql),
+    "agg_countmin_confirm" -> Query(countMinConfirm, countMinConfirmSql))
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** Training-corpus preparation queries: PII scrubbing and the composed
   * clean-corpus pipeline (quality gate + language gate + exact dedup
@@ -678,38 +679,22 @@ object TextPipeline {
        |FROM per_seq GROUP BY budget ORDER BY budget""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "doc_contamination_sweep" -> contaminationSweep,
-    "text_pack_efficiency" -> packEfficiency,
-    "doc_split_assignment" -> splitAssignment,
-    "doc_global_shuffle" -> globalShuffle,
-    "text_pii_scrub" -> piiScrub,
-    "text_clean_corpus" -> cleanCorpus,
-    "text_pack_sequences" -> packSequences,
-    "doc_mixture_sample" -> mixtureSample,
-    "corpus_mixture_plan" -> mixturePlan,
-    "doc_stratified_sample" -> stratifiedSample,
-    "doc_weighted_sample" -> weightedSample,
-    "doc_token_budget_select" -> tokenBudgetSelect,
-    "doc_decontaminate" -> decontaminate,
-    "topk_per_key_agg" -> ((s, d) =>
-      graft.operators.TopK.topOrdersPerCustomer(s, d)))
-
-  val oracle: Map[String, String] = Map(
-    "doc_contamination_sweep" -> contaminationSweepSql,
-    "text_pack_efficiency" -> packEfficiencySql,
-    "doc_split_assignment" -> splitAssignmentSql,
-    "doc_global_shuffle" -> globalShuffleSql,
-    "text_pii_scrub" -> piiScrubSql,
-    "text_clean_corpus" -> cleanCorpusSql,
-    "text_pack_sequences" -> packSequencesSql,
-    "doc_mixture_sample" -> mixtureSampleSql,
-    "corpus_mixture_plan" -> mixturePlanSql,
-    "doc_stratified_sample" -> stratifiedSampleSql,
-    "doc_weighted_sample" -> weightedSampleSql,
-    "doc_token_budget_select" -> tokenBudgetSelectSql,
-    "doc_decontaminate" -> decontaminateSql,
+  val queries: Map[String, Query] = Map(
+    "doc_contamination_sweep" -> Query(contaminationSweep, contaminationSweepSql),
+    "text_pack_efficiency" -> Query(packEfficiency, packEfficiencySql),
+    "doc_split_assignment" -> Query(splitAssignment, splitAssignmentSql),
+    "doc_global_shuffle" -> Query(globalShuffle, globalShuffleSql),
+    "text_pii_scrub" -> Query(piiScrub, piiScrubSql),
+    "text_clean_corpus" -> Query(cleanCorpus, cleanCorpusSql),
+    "text_pack_sequences" -> Query(packSequences, packSequencesSql),
+    "doc_mixture_sample" -> Query(mixtureSample, mixtureSampleSql),
+    "corpus_mixture_plan" -> Query(mixturePlan, mixturePlanSql),
+    "doc_stratified_sample" -> Query(stratifiedSample, stratifiedSampleSql),
+    "doc_weighted_sample" -> Query(weightedSample, weightedSampleSql),
+    "doc_token_budget_select" -> Query(tokenBudgetSelect, tokenBudgetSelectSql),
+    "doc_decontaminate" -> Query(decontaminate, decontaminateSql),
     // same oracle as the window formulation — different physical plan,
     // identical rows
-    "topk_per_key_agg" -> Relational.windowTopPerKeySql)
+    "topk_per_key_agg" -> Query((s, d) => graft.operators.TopK.topOrdersPerCustomer(s, d),
+      Relational.windowTopPerKeySql))
 }

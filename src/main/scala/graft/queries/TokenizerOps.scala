@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.Query
 
 /** Tokenizer-training and LM-scoring passes over the documents table —
   * the corpus statistics a pipeline computes while BUILDING the
@@ -482,19 +483,11 @@ object TokenizerOps {
     out.result()
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_tokenizer_fertility" -> tokenizerFertility,
-    "text_bpe_train" -> bpeTrain,
-    "text_bpe_apply" -> bpeApply,
-    "text_bpe_merge_round" -> bpeMergeRound,
-    "text_bigram_perplexity" -> bigramPerplexity,
-    "text_dedup_span_rewrite" -> spanRewrite)
-
-  val oracle: Map[String, String] = Map(
-    "text_bpe_train" -> bpeTrainSql,
-    "text_tokenizer_fertility" -> tokenizerFertilitySql,
-    "text_bpe_apply" -> bpeApplySql,
-    "text_bpe_merge_round" -> bpeMergeRoundSql,
-    "text_bigram_perplexity" -> bigramPerplexitySql,
-    "text_dedup_span_rewrite" -> spanRewriteSql)
+  val queries: Map[String, Query] = Map(
+    "text_tokenizer_fertility" -> Query(tokenizerFertility, tokenizerFertilitySql),
+    "text_bpe_train" -> Query(bpeTrain, bpeTrainSql),
+    "text_bpe_apply" -> Query(bpeApply, bpeApplySql),
+    "text_bpe_merge_round" -> Query(bpeMergeRound, bpeMergeRoundSql),
+    "text_bigram_perplexity" -> Query(bigramPerplexity, bigramPerplexitySql),
+    "text_dedup_span_rewrite" -> Query(spanRewrite, spanRewriteSql))
 }

@@ -36,6 +36,14 @@ class QueriesSmokeSpec extends AnyFunSuite {
   test("every oracle key has a query; flagship entry returns rows") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle entries without queries: $missing")
+    // `++` keeps only the last of two modules registering one name
+    val registered = SparkEntry.modules.map(_.size).sum
+    assert(registered == SparkEntry.queries.size,
+      s"$registered module entries but ${SparkEntry.queries.size} names")
+    // a SQL val declared after its module's `queries` map reads as null
+    val blank = SparkEntry.oracleSql.collect {
+      case (name, sql) if sql == null || sql.trim.isEmpty => name }
+    assert(blank.isEmpty, s"null or empty oracle SQL: $blank")
     assert(SparkEntry.entry(spark).count() > 0)
   }
 }
