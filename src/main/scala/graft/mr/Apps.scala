@@ -5,15 +5,21 @@ package graft.mr
   * MRDifferentialSpec). Citations are into /root/reference. */
 object Apps {
 
+  /** reduce = number of values, as a monoid over per-value 1s. */
+  abstract class Count extends IncrementalApp[Long] {
+    def zero: Long = 0L
+    def lift(value: String): Long = 1L
+    def combine(a: Long, b: Long): Long = a + b
+    def finish(key: String, buf: Long): String = buf.toString
+  }
+
   /** Word count (mr-main/mrapps/wc.go:21-42): tokenize on runs of
     * non-letters (unicode.IsLetter complement ≈ \p{L}), case-sensitive,
-    * emit (word,"1"), reduce = count. */
-  object WordCount extends MRApp {
+    * emit (word,"1"), reduce = count, combined map-side (§4.3). */
+  object WordCount extends Count {
     def map(filename: String, contents: String): Seq[KV] =
       contents.split("[^\\p{L}]+").iterator
         .filter(_.nonEmpty).map(KV(_, "1")).toSeq
-    def reduce(key: String, values: Seq[String]): String =
-      values.size.toString
   }
 
   /** Inverted index (mr-main/mrapps/indexer.go:21-40): per-doc distinct
@@ -29,8 +35,9 @@ object Apps {
 
   /** Credit query (mr-main/mrapps/credit.go:21-58): CSV with header,
     * skip malformed rows, WHERE year==2023 AND score>400,
-    * GROUP BY agency, COUNT. Value = user id; reduce counts. */
-  object Credit extends MRApp {
+    * GROUP BY agency, COUNT. Value = user id; reduce counts, combined
+    * map-side (§4.3). */
+  object Credit extends Count {
     def map(filename: String, contents: String): Seq[KV] =
       contents.split('\n').iterator.drop(1).flatMap { line =>
         val f = line.split(',')
@@ -41,8 +48,6 @@ object Apps {
           case _ => None
         }
       }.toSeq
-    def reduce(key: String, values: Seq[String]): String =
-      values.size.toString
   }
 
   /** crash.go/nocrash.go payload (mr-main/mrapps/crash.go:36-57) minus

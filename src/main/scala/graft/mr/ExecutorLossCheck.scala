@@ -1,6 +1,8 @@
 package graft.mr
 
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.TaskContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved}
 import org.apache.spark.sql.SparkSession
 
 /** Executor-loss recovery check — the Spark analog of the reference's
@@ -19,8 +21,12 @@ import org.apache.spark.sql.SparkSession
   * Runs as a MAIN in its own JVM because `local-cluster[2,1,1024]`
   * needs multi-process executors and a fresh SparkContext — the test
   * suite's shared local[4] context is JVM-singleton and must not be
-  * stopped. ExecutorLossSpec forks this main and asserts on the
-  * EXECUTOR_LOSS_OK marker; exit code 0 ⇔ output matched the oracle.
+  * stopped. Two jobs each lose an executor: the plain reduce path via
+  * `MRJob.result`, and the combiner path via `MRJob.run`, whose written
+  * files must hold each key once (paper §3.3: lost work runs again,
+  * output appears once). ExecutorLossSpec forks this main and asserts
+  * on one EXECUTOR_LOSS_OK marker per path; exit code 0 ⇔ both matched
+  * the oracle.
   */
 object ExecutorLossCheck {
   def main(args: Array[String]): Unit = {
@@ -48,34 +54,63 @@ object ExecutorLossCheck {
       // spark.task.maxFailures — the default 4 gives the retried
       // attempt plenty of budget
       .getOrCreate()
-    val killer = new MRApp {
-      def map(f: String, c: String): Seq[KV] = {
-        if (f.contains("sherlock") && TaskContext.get().attemptNumber() == 0) {
-          // kill the WHOLE executor process, not the task: this is the
-          // reference's worker-process crash, not a task exception
-          System.err.println("[executor-loss] killing executor " +
-            s"${org.apache.spark.SparkEnv.get.executorId} mid-job")
-          Runtime.getRuntime.halt(137) // no shutdown hooks — a real crash
-        }
-        Apps.WordCount.map(f, c)
-      }
-      def reduce(k: String, v: Seq[String]): String =
-        Apps.WordCount.reduce(k, v)
+    // the same word count twice: a plain MRApp through the sorted
+    // contiguous-run reduce, and the IncrementalApp through the §4.3
+    // combiner, which MRJob.run writes to files
+    val plain = new MRApp {
+      def map(f: String, c: String): Seq[KV] = { crash(f); Apps.WordCount.map(f, c) }
+      def reduce(k: String, v: Seq[String]): String = Apps.WordCount.reduce(k, v)
     }
-    val got = MRJob.result(spark, killer, s"$booksDir/*.txt")
-      .collect().toSeq.sorted
+    val combining = new Apps.Count {
+      def map(f: String, c: String): Seq[KV] = { crash(f); Apps.WordCount.map(f, c) }
+    }
     val inputs = new java.io.File(booksDir).listFiles()
       .sortBy(_.getName).toSeq.map { f =>
         (f.getName,
           new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
       }
     val expected = MRJob.sequential(Apps.WordCount, inputs).sorted
-    spark.stop()
-    if (got == expected) {
-      println(s"EXECUTOR_LOSS_OK ${got.size}")
-    } else {
-      println(s"EXECUTOR_LOSS_MISMATCH got=${got.size} expected=${expected.size}")
-      sys.exit(1)
+    // each job must really lose an executor: count removals as they come
+    val removed = new AtomicInteger
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onExecutorRemoved(e: SparkListenerExecutorRemoved): Unit =
+        removed.incrementAndGet()
+    })
+    def lostOneMore(before: Int): Boolean = {
+      val deadline = System.currentTimeMillis() + 30000
+      while (removed.get <= before && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      removed.get > before
     }
+    val gotPlain = MRJob.result(spark, plain, s"$booksDir/*.txt")
+      .collect().toSeq.sorted
+    val lostPlain = lostOneMore(0)
+    val removedBefore = removed.get
+    val outDir = java.nio.file.Files.createTempDirectory("executor-loss-out")
+    MRJob.run(spark, combining, s"$booksDir/*.txt", outDir.toString)
+    val lostCombiner = lostOneMore(removedBefore)
+    spark.stop()
+    // output appears once: every key in exactly one line of one file
+    val written = outDir.toFile.listFiles().filter(_.getName.startsWith("part-"))
+      .toSeq.flatMap(f => scala.io.Source.fromFile(f, "UTF-8").getLines().toList)
+    val keys = written.map(_.split(' ').head)
+    val checks = Seq(
+      "plain" -> (lostPlain && gotPlain == expected),
+      "combiner" -> (lostCombiner && written.sorted == expected &&
+        keys.distinct.size == keys.size))
+    checks.foreach { case (path, ok) =>
+      println(s"EXECUTOR_LOSS_${if (ok) "OK" else "MISMATCH"} $path")
+    }
+    if (!checks.forall(_._2)) sys.exit(1)
   }
+
+  /** Kills the whole executor JVM, not the task, on the first attempt of
+    * the map task that reads sherlock: the reference's worker-process
+    * crash, not a task exception. */
+  private def crash(file: String): Unit =
+    if (file.contains("sherlock") && TaskContext.get().attemptNumber() == 0) {
+      System.err.println("[executor-loss] killing executor " +
+        s"${org.apache.spark.SparkEnv.get.executorId} mid-job")
+      Runtime.getRuntime.halt(137) // no shutdown hooks — a real crash
+    }
 }

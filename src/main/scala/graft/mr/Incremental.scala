@@ -1,75 +1,39 @@
 package graft.mr
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** Incremental twin of the MRApp surface (SURVEY.md §7.3): the plain
-  * `reduce(key, values)` contract materializes every group in memory
-  * (like the reference, /root/reference/mr/worker.go:109) — fine for
-  * parity, wrong for unbounded groups at 100 TB. Apps whose reduce is
-  * a monoid implement this trait instead and run through a typed
-  * Aggregator: Spark then does map-side partial aggregation and never
-  * holds a whole group anywhere.
+/** An app whose reduce is a monoid over lifted values (SURVEY.md §7.3).
+  * The plain `reduce(key, values)` contract materializes every group in
+  * memory (like the reference, mr/worker.go:109) — fine
+  * for parity, wrong for unbounded groups. [[MRJob]] runs these apps with
+  * the paper's §4.3 combiner: values are folded map-side before the
+  * shuffle and the partial buffers merged reduce-side, so no whole group
+  * is held anywhere. The buffer's ClassTag picks the shuffle serializer.
   */
-trait IncrementalApp[B] extends MRApp {
+abstract class IncrementalApp[B](implicit val bufferTag: ClassTag[B]) extends MRApp {
   def zero: B
   def lift(value: String): B
   def combine(a: B, b: B): B
   def finish(key: String, buf: B): String
-  def bufferEncoder: Encoder[B]
 
   /** The non-incremental contract, derived — keeps every incremental
-    * app runnable through plain MRJob and the sequential oracle. */
+    * app runnable through the sequential oracle. */
   final def reduce(key: String, values: Seq[String]): String =
     finish(key, values.map(lift).foldLeft(zero)(combine))
 }
 
 object Incremental {
-  /** runJob with partial aggregation: flatMap → groupByKey →
-    * Aggregator (map-side combine before the shuffle — the paper's
-    * §4.3 combiner refinement the reference never implemented). */
+  /** [[MRJob.result]]: the combiner is part of the one runner. */
   def result[B](spark: SparkSession, app: IncrementalApp[B],
-      inputGlob: String): Dataset[String] = {
-    import spark.implicits._
-    val agg = new Aggregator[KV, B, B] {
-      def zero: B = app.zero
-      def reduce(b: B, kv: KV): B = app.combine(b, app.lift(kv.value))
-      def merge(a: B, b: B): B = app.combine(a, b)
-      def finish(b: B): B = b // key-aware finish applied after the agg
-      def bufferEncoder: Encoder[B] = app.bufferEncoder
-      def outputEncoder: Encoder[B] = app.bufferEncoder
-    }
-    MRJob.mapped(spark, app, inputGlob)
-      .groupByKey(_.key)
-      .agg(agg.toColumn)
-      .map { case (k, b) => s"$k ${app.finish(k, b)}" }
-  }
+      inputGlob: String): Dataset[String] =
+    MRJob.result(spark, app, inputGlob)
 }
 
-/** Incremental word count: buffer = running count. */
-object WordCountInc extends IncrementalApp[Long] {
-  def map(filename: String, contents: String): Seq[KV] =
-    Apps.WordCount.map(filename, contents)
-  def zero: Long = 0L
-  def lift(v: String): Long = 1L
-  def combine(a: Long, b: Long): Long = a + b
-  def finish(key: String, buf: Long): String = buf.toString
-  def bufferEncoder: Encoder[Long] = Encoders.scalaLong
-}
-
-/** Incremental credit count-by-agency. */
-object CreditInc extends IncrementalApp[Long] {
-  def map(filename: String, contents: String): Seq[KV] =
-    Apps.Credit.map(filename, contents)
-  def zero: Long = 0L
-  def lift(v: String): Long = 1L
-  def combine(a: Long, b: Long): Long = a + b
-  def finish(key: String, buf: Long): String = buf.toString
-  def bufferEncoder: Encoder[Long] = Encoders.scalaLong
-}
-
-/** Incremental indexer: buffer = distinct doc set (bounded by corpus
-  * doc count, not values count). */
+/** Incremental indexer: buffer = distinct doc set. [[Apps.Indexer]]
+  * stays a plain app, since a map-side set union was measured no faster
+  * on the mr_text workload; this one exercises the combiner with a
+  * non-primitive buffer. */
 object IndexerInc extends IncrementalApp[Set[String]] {
   def map(filename: String, contents: String): Seq[KV] =
     Apps.Indexer.map(filename, contents)
@@ -78,6 +42,4 @@ object IndexerInc extends IncrementalApp[Set[String]] {
   def combine(a: Set[String], b: Set[String]): Set[String] = a union b
   def finish(key: String, buf: Set[String]): String =
     s"${buf.size} ${buf.toSeq.sorted.mkString(",")}"
-  def bufferEncoder: Encoder[Set[String]] =
-    org.apache.spark.sql.Encoders.kryo[Set[String]]
 }

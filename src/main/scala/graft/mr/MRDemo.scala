@@ -1,8 +1,10 @@
 package graft.mr
 
 /** CLI driver for the generic MR surface: run a named app over an input
-  * glob, write nReduce text partitions — the mrcoordinator/mrworker
-  * entry points collapsed into one spark-submit-able main.
+  * glob through [[MRJob.run]], writing nReduce key-sorted text files
+  * (`hash(key) mod nReduce` partitioning, §4.1–4.2) — the
+  * mrcoordinator/mrworker entry points collapsed into one
+  * spark-submit-able main.
   *
   * Usage: MRDemo <wc|indexer|credit|metadata|filecount> <inputGlob> <outDir> [nReduce]
   */
@@ -21,8 +23,8 @@ object MRDemo {
     require(args.length >= 3, usage)
     val app = apps.getOrElse(args(0),
       throw new IllegalArgumentException(s"unknown app '${args(0)}' — $usage"))
-    // validated before the session starts: a non-positive count would
-    // otherwise fail only inside Spark's Repartition, after startup
+    // validated before the session starts: MRJob.run rejects a
+    // non-positive count too, but only after the session's startup
     val nReduce =
       if (args.length <= 3) 10
       else args(3).toIntOption.filter(_ > 0).getOrElse(

@@ -1,17 +1,28 @@
 package graft.mr
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import scala.collection.immutable.VectorBuilder
+import org.apache.hadoop.fs.Path
+import org.apache.spark.{Aggregator, HashPartitioner, SparkContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** The reference engine's portable contract (SURVEY.md §2.4):
   * a string key/value pair, a Map/Reduce plugin pair, and a job runner.
   *
-  * Mirrors /root/reference/mr/worker.go:18-21 (KeyValue) and
-  * /root/reference/mr-main/mrworker.go:34-51 (plugin surface), but the
-  * pipeline itself is Spark-native: wholeTextFiles → flatMap →
-  * groupByKey → mapGroups → text sink. Shuffle partitioning, the
-  * map→reduce barrier, task retry, speculative execution and atomic
-  * output commit are all Spark's own (reference F3/F7/F9/F11 —
-  * /root/reference/mr/coordinator.go:170-192, worker.go:141-146).
+  * Mirrors the reference's mr/worker.go:18-21 (KeyValue) and
+  * mr-main/mrworker.go:34-51 (plugin surface). A job is
+  * one Spark shuffle, shaped like the paper's execution overview:
+  *  - §3.1 steps 1–3: whole input files, one map task per core, each
+  *    running `app.map`;
+  *  - §4.1: the KV pairs go to reduce partition `hash(key) mod R`
+  *    (`HashPartitioner`);
+  *  - §4.3: an [[IncrementalApp]] combines map-side in the same shuffle;
+  *  - §3.1 steps 4–6: each reduce task sorts its partition by key
+  *    (Spark's spillable external sorter) and reduces the contiguous
+  *    key runs, so each output file is key-sorted (§4.2).
+  * The map→reduce barrier, task retry, speculative execution and atomic
+  * output commit are Spark's and Hadoop's own (reference F3/F7/F9/F11 —
+  * mr/coordinator.go:170-192, worker.go:141-146).
   */
 case class KV(key: String, value: String)
 
@@ -22,38 +33,78 @@ trait MRApp extends Serializable {
 
 object MRJob {
 
-  /** Shared ingest stage: whole files → app.map KV pairs (filename
-    * derivation lives in exactly one place — Incremental reuses it). */
-  def mapped(spark: SparkSession, app: MRApp, inputGlob: String): Dataset[KV] = {
-    import spark.implicits._
-    spark.sparkContext
-      .wholeTextFiles(inputGlob)
-      .toDS()
-      .flatMap { case (file, contents) =>
-        app.map(file.split('/').last, contents)
-      }
+  /** The reference's fixed reduce fan-in, mr-main/mrcoordinator.go:25. */
+  private val DefaultReduce = 10
+
+  /** §3.1 steps 1–3: whole files → app.map KV pairs, with as many map
+    * tasks as cores (wholeTextFiles' own default is at most 2). */
+  private def kvs(sc: SparkContext, app: MRApp, inputGlob: String): RDD[KV] =
+    sc.wholeTextFiles(inputGlob, sc.defaultParallelism)
+      .flatMap { case (file, contents) => app.map(file.split('/').last, contents) }
+
+  /** The map stage alone, as a Dataset of KV pairs. */
+  def mapped(spark: SparkSession, app: MRApp, inputGlob: String): Dataset[KV] =
+    spark.createDataset(kvs(spark.sparkContext, app, inputGlob))(Encoders.product[KV])
+
+  /** Output lines ("key value" — the reference's format,
+    * mr/worker.go:156) of `nReduce` reduce partitions: partition i holds
+    * exactly the keys with `hash(key) mod nReduce == i`, sorted. */
+  private def reduced(sc: SparkContext, app: MRApp, inputGlob: String,
+      nReduce: Int): RDD[String] = {
+    require(nReduce > 0, s"nReduce must be positive, got $nReduce")
+    val pairs = kvs(sc, app, inputGlob).map(kv => (kv.key, kv.value))
+    val part = new HashPartitioner(nReduce)
+    app match {
+      case inc: IncrementalApp[b] =>
+        // §4.3 combiner: the monoid folds values map-side and merges the
+        // partial buffers reduce-side, so no whole group is ever held
+        import inc.bufferTag
+        new ShuffledRDD[String, String, b](pairs, part)
+          .setKeyOrdering(Ordering.String)
+          .setAggregator(Aggregator[String, String, b](
+            inc.lift, (buf, v) => inc.combine(buf, inc.lift(v)), inc.combine))
+          .setMapSideCombine(true)
+          .map { case (key, buf) => s"$key ${inc.finish(key, buf)}" }
+      case _ =>
+        new ShuffledRDD[String, String, String](pairs, part)
+          .setKeyOrdering(Ordering.String)
+          .mapPartitions(reduceRuns(app, _))
+    }
   }
 
-  /** The distributed pipeline as a Dataset of output lines
-    * ("key value" — the reference's format, mr/worker.go:156).
-    * Output row order is an unordered bag, exactly like the reference
+  /** §3.1 step 5: one `app.reduce` call per run of equal keys in a
+    * key-sorted partition. */
+  private def reduceRuns(app: MRApp, sorted: Iterator[(String, String)]): Iterator[String] =
+    new Iterator[String] {
+      private val in = sorted.buffered
+      def hasNext: Boolean = in.hasNext
+      def next(): String = {
+        val key = in.head._1
+        val values = new VectorBuilder[String]
+        while (in.hasNext && in.head._1 == key) values += in.next()._2
+        s"$key ${app.reduce(key, values.result())}"
+      }
+    }
+
+  /** The distributed pipeline as a Dataset of output lines. Row order
+    * across partitions is an unordered bag, exactly like the reference
     * (comparisons must sort — mr-main/test-mr.sh:58). */
-  def result(spark: SparkSession, app: MRApp, inputGlob: String): Dataset[String] = {
-    import spark.implicits._
-    mapped(spark, app, inputGlob)
-      .groupByKey(_.key)
-      .mapGroups { (key, kvs) =>
-        s"$key ${app.reduce(key, kvs.map(_.value).toSeq)}"
-      }
-  }
+  def result(spark: SparkSession, app: MRApp, inputGlob: String): Dataset[String] =
+    spark.createDataset(reduced(spark.sparkContext, app, inputGlob, DefaultReduce))(
+      Encoders.STRING)
 
-  /** Full job: run and write nReduce text partitions (nReduce=10 is the
-    * reference's fixed fan-in, /root/reference/mr-main/mrcoordinator.go:25). */
+  /** Full job: write `nReduce` key-sorted text files, part-0000i holding
+    * reduce partition i (§4.2). An existing `outDir` is replaced; Hadoop's
+    * FileOutputCommitter makes the output visible only once complete and
+    * marks it with `_SUCCESS`. */
   def run(spark: SparkSession, app: MRApp, inputGlob: String, outDir: String,
-      nReduce: Int = 10): Unit =
-    result(spark, app, inputGlob)
-      .repartition(nReduce)
-      .write.mode(SaveMode.Overwrite).text(outDir)
+      nReduce: Int = DefaultReduce): Unit = {
+    val sc = spark.sparkContext
+    val lines = reduced(sc, app, inputGlob, nReduce)
+    val out = new Path(outDir)
+    out.getFileSystem(sc.hadoopConfiguration).delete(out, true)
+    lines.saveAsTextFile(outDir)
+  }
 
   /** Sequential oracle: same semantics in one driver-side pass, global
     * key sort then contiguous-run reduce — the mrsequential.go:27-89

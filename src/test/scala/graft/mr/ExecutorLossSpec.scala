@@ -6,7 +6,8 @@ import graft.SparkTestSession
 /** Forks [[ExecutorLossCheck]] into its own JVM (local-cluster needs
   * multi-process executors and a fresh SparkContext; the suite's
   * shared local[4] context is JVM-singleton) and asserts the job
-  * survived a mid-job executor kill with oracle-equal output — the
+  * survived a mid-job executor kill with oracle-equal output, on the
+  * plain and the combiner reduce path — the
   * true analog of the reference's worker-respawn crash test
   * (/root/reference/mr-main/test-mr.sh:222-271), exercising
   * executor-loss recovery rather than task retry (InvariantsSpec's
@@ -44,7 +45,7 @@ class ExecutorLossSpec extends AnyFunSuite {
     pb.redirectErrorStream(true)
     pb.redirectOutput(out)
     val p = pb.start()
-    // generous bound: cluster spin-up + respawn + 8 map tasks; a hang
+    // generous bound: cluster spin-up + two jobs, each with a respawn; a hang
     // must fail the test, not the suite's global timeout
     val finished = p.waitFor(240, java.util.concurrent.TimeUnit.SECONDS)
     if (!finished) p.destroyForcibly()
@@ -57,8 +58,11 @@ class ExecutorLossSpec extends AnyFunSuite {
     // the job still matched the sequential oracle
     assert(log.contains("exited with code 137"),
       s"executor kill never fired; tail:\n${log.takeRight(4000)}")
-    assert(log.contains("EXECUTOR_LOSS_OK"),
-      s"no oracle-equal completion; tail:\n${log.takeRight(4000)}")
+    // both reduce paths recovered: the plain contiguous-run reduce and
+    // the §4.3 combiner whose MRJob.run files hold each key once
+    for (path <- Seq("plain", "combiner"))
+      assert(log.contains(s"EXECUTOR_LOSS_OK $path"),
+        s"no oracle-equal $path completion; tail:\n${log.takeRight(4000)}")
     assert(p.exitValue() == 0, s"exit ${p.exitValue()}")
     out.delete()
   }

@@ -1,10 +1,14 @@
 package graft.mr
 
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.LongAdder
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestSession
 
-/** Incremental (Aggregator) apps must agree with their materializing
-  * twins and the sequential oracle. */
+/** Incremental apps, which MRJob runs with the §4.3 map-side combiner,
+  * must agree with their materializing twins and the sequential oracle. */
 class IncrementalSpec extends AnyFunSuite {
   import SparkTestSession._
 
@@ -28,5 +32,41 @@ class IncrementalSpec extends AnyFunSuite {
     val got = Incremental.result(spark, CreditInc, s"$creditDir/*.csv")
       .collect().toSeq.sorted
     assert(got == MRJob.sequential(Apps.Credit, creditFiles).sorted)
+  }
+
+  test("§4.3 combiner: MRJob.run(WordCount) shuffles fewer records than map-output pairs") {
+    val tag = "graft.spec.combiner"
+    val jobs = ConcurrentHashMap.newKeySet[Int]()
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    val ended = ConcurrentHashMap.newKeySet[Int]()
+    val written = new LongAdder
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty(tag) != null) {
+          jobs.add(j.jobId); j.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          written.add(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (jobs.contains(j.jobId)) ended.add(j.jobId)
+    }
+    val sc = spark.sparkContext
+    val out = java.nio.file.Files.createTempDirectory("combiner").toString
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "1")
+    try MRJob.run(spark, Apps.WordCount, s"$booksDir/*.txt", out)
+    finally sc.setLocalProperty(tag, null)
+    // a job's task ends reach the listener before its job end; bounded wait
+    val deadline = System.currentTimeMillis() + 10000
+    while ((jobs.isEmpty || ended.size < jobs.size) &&
+      System.currentTimeMillis() < deadline) Thread.sleep(50)
+    sc.removeSparkListener(listener)
+    assert(!jobs.isEmpty && ended.size == jobs.size, "job end never delivered")
+    val pairs = booksLocal().map { case (f, c) => Apps.WordCount.map(f, c).size }.sum
+    assert(written.sum > 0 && written.sum < pairs,
+      s"shuffle wrote ${written.sum} records for $pairs map-output pairs")
+    val got = spark.read.text(out).collect().map(_.getString(0)).toSeq.sorted
+    assert(got == MRJob.sequential(Apps.WordCount, booksLocal()).sorted)
   }
 }

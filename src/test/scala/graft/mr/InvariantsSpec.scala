@@ -51,7 +51,7 @@ class InvariantsSpec extends AnyFunSuite {
           Apps.WordCount.reduce(k, v)
       }
       MRJob.result(spark, slowed, s"$booksDir/*.txt").count()
-      // listener events are async; poll until the 8 map + reduce task
+      // listener events are async; poll until 8 map and reduce task
       // ends have been delivered (bounded wait)
       val deadline = System.currentTimeMillis() + 10000
       while (intervals.size() < 8 && System.currentTimeMillis() < deadline)
@@ -70,12 +70,15 @@ class InvariantsSpec extends AnyFunSuite {
     // mrapps/rtiming.go:64-86) — mtiming's any-two-tasks overlap is
     // satisfiable by map-only concurrency, so this test filters the
     // listener intervals by STAGE and asserts the overlap within the
-    // post-shuffle (mapGroups) stage. 16 fixed keys spread over the 4
-    // shuffle partitions; each reduce sleeps long enough that serial
-    // execution could not interleave. AQE partition coalescing is
-    // disabled for the job — it would legitimately fuse the tiny test
-    // shuffle into ONE reduce task, which is exactly the degenerate
-    // case the reference's probe exists to rule out.
+    // post-shuffle (reduce) stage. 16 fixed keys spread over MRJob's
+    // hash(key) mod R reduce partitions; each reduce sleeps long enough
+    // that serial execution could not interleave. MR jobs are RDD
+    // shuffles, which AQE never coalesces, so the setting below does
+    // not act on the reduce stage today. It stays off so that a runner
+    // put back on a SQL exchange would still get one reduce task per
+    // partition: AQE would otherwise fuse the tiny test shuffle into
+    // ONE reduce task, the degenerate case the reference's probe rules
+    // out.
     val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
     val prior = spark.conf.get(coalesceKey)
     val tasks = new ConcurrentLinkedQueue[(Int, Long, Long)]()
@@ -94,7 +97,8 @@ class InvariantsSpec extends AnyFunSuite {
         }
       }
       MRJob.result(spark, slowReduce, s"$booksDir/*.txt").count()
-      // 8 map + 4 reduce task ends, delivered async — bounded wait
+      // map + reduce task ends (one map task per core, 10 reduce
+      // tasks), delivered async — bounded wait
       val deadline = System.currentTimeMillis() + 10000
       while (tasks.size() < 12 && System.currentTimeMillis() < deadline)
         Thread.sleep(50)

@@ -1,0 +1,48 @@
+package graft.mr
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestSession
+
+/** The paper's partitioning and ordering guarantees on `MRJob.run`'s
+  * files: reduce partition i holds exactly the keys with
+  * `hash(key) mod R == i` (§4.1), and within it keys come in increasing
+  * order (§4.2). Checked on the combiner path (word count) and the plain
+  * contiguous-run reduce (indexer). */
+class MRPartitionSpec extends AnyFunSuite {
+  import SparkTestSession._
+
+  /** The lines of each part file of one run, in partition order. */
+  private def runParts(app: MRApp, r: Int): Seq[(String, Seq[String])] = {
+    val out = Files.createTempDirectory(s"mrpart$r")
+    MRJob.run(spark, app, s"$booksDir/*.txt", out.toString, nReduce = r)
+    Files.list(out).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("part-")).toSeq.sorted
+      .map(n => n -> Files.readAllLines(out.resolve(n), UTF_8).asScala.toSeq)
+  }
+
+  for ((label, app) <- Seq("wordcount (combiner)" -> Apps.WordCount,
+      "indexer (plain reduce)" -> Apps.Indexer); r <- Seq(1, 3, 10)) {
+    test(s"$label, nReduce=$r: file i holds hash(key) mod R == i, key-sorted, each key once") {
+      val parts = runParts(app, r)
+      assert(parts.map(_._1) == (0 until r).map(i => f"part-$i%05d"))
+      val keys = parts.map(_._2.map(_.split(' ').head))
+      keys.zipWithIndex.foreach { case (ks, i) =>
+        val misplaced = ks.filter(k => Math.floorMod(k.hashCode, r) != i)
+        assert(misplaced.isEmpty, s"keys outside partition $i: ${misplaced.take(5)}")
+        assert(ks == ks.sorted, s"part $i is not sorted by key")
+      }
+      val all = keys.flatten
+      assert(all.distinct.size == all.size, "a key appears twice")
+      assert(parts.flatMap(_._2).sorted == MRJob.sequential(app, booksLocal()).sorted)
+    }
+  }
+
+  test("nReduce must be positive") {
+    val out = Files.createTempDirectory("mrpart0")
+    intercept[IllegalArgumentException](
+      MRJob.run(spark, Apps.WordCount, s"$booksDir/*.txt", out.toString, nReduce = 0))
+  }
+}
