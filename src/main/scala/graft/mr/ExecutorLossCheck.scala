@@ -10,23 +10,25 @@ import org.apache.spark.sql.SparkSession
   * test-mr.sh:222-271, mrapps/crash.go): the reference kills whole
   * WORKER PROCESSES mid-job and respawns them; the task-retry spec
   * (InvariantsSpec "crash") only throws inside a task, which exercises
-  * task re-attempt, not executor loss. Here a map task kills its
-  * entire executor JVM (System.exit — the process dies, taking every
-  * concurrently-running task with it), and the job must still finish
-  * with output equal to the fault-free sequential oracle: Spark marks
-  * the executor lost, re-schedules its tasks on the surviving /
-  * relaunched executor, and the standalone worker respawns the dead
-  * one.
+  * task re-attempt, not executor loss. Here a task kills its entire
+  * executor JVM (Runtime.halt — the process dies, taking every
+  * concurrently-running task and its shuffle files with it), and the
+  * job must still finish with output equal to the fault-free
+  * sequential oracle: Spark marks the executor lost, re-runs the lost
+  * map outputs and tasks on the surviving / relaunched executor, and
+  * the standalone worker respawns the dead one.
   *
   * Runs as a MAIN in its own JVM because `local-cluster[2,1,1024]`
   * needs multi-process executors and a fresh SparkContext — the test
   * suite's shared local[4] context is JVM-singleton and must not be
   * stopped. Two jobs each lose an executor: the plain reduce path via
-  * `MRJob.result`, and the combiner path via `MRJob.run`, whose written
-  * files must hold each key once (paper §3.3: lost work runs again,
-  * output appears once). ExecutorLossSpec forks this main and asserts
-  * on one EXECUTOR_LOSS_OK marker per path; exit code 0 ⇔ both matched
-  * the oracle.
+  * `MRJob.result`, killed in a map task, and the combiner path via
+  * `MRJob.run`, killed in a reduce task midway through writing its
+  * temporary file. The written directory must hold exactly the R part
+  * files and `_SUCCESS`, with each key once (paper §3.3: lost work runs
+  * again, output appears once). ExecutorLossSpec forks this main and
+  * asserts on one EXECUTOR_LOSS_OK marker per path; exit code 0 ⇔ both
+  * matched the oracle.
   */
 object ExecutorLossCheck {
   def main(args: Array[String]): Unit = {
@@ -55,14 +57,24 @@ object ExecutorLossCheck {
       // attempt plenty of budget
       .getOrCreate()
     // the same word count twice: a plain MRApp through the sorted
-    // contiguous-run reduce, and the IncrementalApp through the §4.3
-    // combiner, which MRJob.run writes to files
+    // contiguous-run reduce, killed map-side, and the IncrementalApp
+    // through the §4.3 combiner, which MRJob.run writes to files, killed
+    // reduce-side
     val plain = new MRApp {
-      def map(f: String, c: String): Seq[KV] = { crash(f); Apps.WordCount.map(f, c) }
+      def map(f: String, c: String): Seq[KV] = {
+        if (f.contains("sherlock")) crash()
+        Apps.WordCount.map(f, c)
+      }
       def reduce(k: String, v: Seq[String]): String = Apps.WordCount.reduce(k, v)
     }
     val combining = new Apps.Count {
-      def map(f: String, c: String): Seq[KV] = { crash(f); Apps.WordCount.map(f, c) }
+      def map(f: String, c: String): Seq[KV] = Apps.WordCount.map(f, c)
+      override def finish(key: String, buf: Long): String = {
+        // only the first stage attempt kills: the resubmitted stage,
+        // which also re-runs the lost map outputs, must finish
+        if (key == "Sherlock" && TaskContext.get().stageAttemptNumber() == 0) crash()
+        super.finish(key, buf)
+      }
     }
     val inputs = new java.io.File(booksDir).listFiles()
       .sortBy(_.getName).toSeq.map { f =>
@@ -87,28 +99,31 @@ object ExecutorLossCheck {
     val lostPlain = lostOneMore(0)
     val removedBefore = removed.get
     val outDir = java.nio.file.Files.createTempDirectory("executor-loss-out")
-    MRJob.run(spark, combining, s"$booksDir/*.txt", outDir.toString)
+    MRJob.run(spark, combining, s"$booksDir/*.txt", outDir.toString, nReduce = 10)
     val lostCombiner = lostOneMore(removedBefore)
     spark.stop()
-    // output appears once: every key in exactly one line of one file
-    val written = outDir.toFile.listFiles().filter(_.getName.startsWith("part-"))
-      .toSeq.flatMap(f => scala.io.Source.fromFile(f, "UTF-8").getLines().toList)
+    // output appears once: the R part files and _SUCCESS, no temporary
+    // file of the killed attempt, and every key in exactly one line
+    val files = outDir.toFile.listFiles().map(_.getName).toSeq.sorted
+    val written = files.filter(_.startsWith("part-")).flatMap(f =>
+      scala.io.Source.fromFile(outDir.resolve(f).toFile, "UTF-8").getLines().toList)
     val keys = written.map(_.split(' ').head)
     val checks = Seq(
       "plain" -> (lostPlain && gotPlain == expected),
       "combiner" -> (lostCombiner && written.sorted == expected &&
-        keys.distinct.size == keys.size))
+        keys.distinct.size == keys.size &&
+        files == ("_SUCCESS" +: (0 until 10).map(i => f"part-$i%05d")).sorted))
     checks.foreach { case (path, ok) =>
       println(s"EXECUTOR_LOSS_${if (ok) "OK" else "MISMATCH"} $path")
     }
     if (!checks.forall(_._2)) sys.exit(1)
   }
 
-  /** Kills the whole executor JVM, not the task, on the first attempt of
-    * the map task that reads sherlock: the reference's worker-process
-    * crash, not a task exception. */
-  private def crash(file: String): Unit =
-    if (file.contains("sherlock") && TaskContext.get().attemptNumber() == 0) {
+  /** Kills the whole executor JVM, not the task, on a task's first
+    * attempt: the reference's worker-process crash, not a task
+    * exception. */
+  private def crash(): Unit =
+    if (TaskContext.get().attemptNumber() == 0) {
       System.err.println("[executor-loss] killing executor " +
         s"${org.apache.spark.SparkEnv.get.executorId} mid-job")
       Runtime.getRuntime.halt(137) // no shutdown hooks — a real crash

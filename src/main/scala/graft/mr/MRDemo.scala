@@ -2,9 +2,11 @@ package graft.mr
 
 /** CLI driver for the generic MR surface: run a named app over an input
   * glob through [[MRJob.run]], writing nReduce key-sorted text files
-  * (`hash(key) mod nReduce` partitioning, §4.1–4.2) — the
+  * (`hash(key) mod nReduce` partitioning, §4.1–4.2), each committed by
+  * a temporary file and an atomic rename (§3.3) — the
   * mrcoordinator/mrworker entry points collapsed into one
-  * spark-submit-able main.
+  * spark-submit-able main. `outDir` must be a POSIX path (no scheme, or
+  * `file:`).
   *
   * Usage: MRDemo <wc|indexer|credit|metadata|filecount> <inputGlob> <outDir> [nReduce]
   */
@@ -24,7 +26,9 @@ object MRDemo {
     val app = apps.getOrElse(args(0),
       throw new IllegalArgumentException(s"unknown app '${args(0)}' — $usage"))
     // validated before the session starts: MRJob.run rejects a
-    // non-positive count too, but only after the session's startup
+    // non-positive count and a non-local outDir too, but only after the
+    // session's startup
+    MRJob.outputDir(args(2))
     val nReduce =
       if (args.length <= 3) 10
       else args(3).toIntOption.filter(_ > 0).getOrElse(

@@ -1,8 +1,13 @@
 package graft.mr
 
+import java.io.{BufferedWriter, OutputStreamWriter}
+import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
+import java.util.Comparator
 import scala.collection.immutable.VectorBuilder
-import org.apache.hadoop.fs.Path
-import org.apache.spark.{Aggregator, HashPartitioner, SparkContext}
+import org.apache.spark.{Aggregator, HashPartitioner, SparkContext, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
@@ -19,10 +24,12 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
   *  - §4.3: an [[IncrementalApp]] combines map-side in the same shuffle;
   *  - §3.1 steps 4–6: each reduce task sorts its partition by key
   *    (Spark's spillable external sorter) and reduces the contiguous
-  *    key runs, so each output file is key-sorted (§4.2).
-  * The map→reduce barrier, task retry, speculative execution and atomic
-  * output commit are Spark's and Hadoop's own (reference F3/F7/F9/F11 —
-  * mr/coordinator.go:170-192, worker.go:141-146).
+  *    key runs, so each output file is key-sorted (§4.2);
+  *  - §3.3: each reduce task writes a private temporary file and
+  *    atomically renames it to its final name (reference F11 —
+  *    worker.go:141-146).
+  * The map→reduce barrier, task retry and speculative execution are
+  * Spark's own (reference F3/F7/F9 — mr/coordinator.go:170-192).
   */
 case class KV(key: String, value: String)
 
@@ -94,17 +101,59 @@ object MRJob {
       Encoders.STRING)
 
   /** Full job: write `nReduce` key-sorted text files, part-0000i holding
-    * reduce partition i (§4.2). An existing `outDir` is replaced; Hadoop's
-    * FileOutputCommitter makes the output visible only once complete and
-    * marks it with `_SUCCESS`. */
+    * reduce partition i (§4.2). An existing `outDir` is replaced first.
+    * Each reduce task attempt writes its lines to a private file under
+    * `outDir/_temporary` and renames it to its part file (§3.3), so a
+    * retried or speculative attempt leaves exactly one complete copy;
+    * once every partition is committed the driver removes `_temporary`
+    * (the files of failed attempts) and marks the output with `_SUCCESS`.
+    * A failed job leaves no `_SUCCESS`. `outDir` must be a POSIX path
+    * (see [[outputDir]]). */
   def run(spark: SparkSession, app: MRApp, inputGlob: String, outDir: String,
       nReduce: Int = DefaultReduce): Unit = {
+    val out = outputDir(outDir)
     val sc = spark.sparkContext
     val lines = reduced(sc, app, inputGlob, nReduce)
-    val out = new Path(outDir)
-    out.getFileSystem(sc.hadoopConfiguration).delete(out, true)
-    lines.saveAsTextFile(outDir)
+    deleteTree(out)
+    val temporary = Files.createDirectories(out.resolve("_temporary"))
+    val dir = out.toString
+    sc.runJob(lines, (ctx: TaskContext, part: Iterator[String]) => commit(dir, ctx, part))
+    deleteTree(temporary)
+    Files.createFile(out.resolve("_SUCCESS"))
   }
+
+  private val UriScheme = "([A-Za-z][A-Za-z0-9+.-]*):".r
+
+  /** `outDir` as an absolute local path, so every executor writes where
+    * the driver resolved it. §3.3's commit is a rename on a shared POSIX
+    * filesystem, which object stores do not provide atomically: any
+    * scheme other than `file:` is rejected before a job starts. */
+  private[mr] def outputDir(outDir: String): Path =
+    UriScheme.findPrefixMatchOf(outDir).map(_.group(1)) match {
+      case None => Paths.get(outDir).toAbsolutePath
+      case Some(s) if s.equalsIgnoreCase("file") => Paths.get(URI.create(outDir))
+      case Some(s) => throw new IllegalArgumentException(
+        s"outDir must be a POSIX path: scheme '$s' in '$outDir' has no atomic rename")
+    }
+
+  /** §3.3 reduce-side commit of one task attempt: stream the lines,
+    * UTF-8 and `\n`-terminated, into a file named after the attempt,
+    * then rename it over the partition's part file. */
+  private def commit(dir: String, ctx: TaskContext, lines: Iterator[String]): Unit = {
+    val name = f"part-${ctx.partitionId()}%05d"
+    val tmp = Paths.get(dir, "_temporary", s"$name-${ctx.taskAttemptId()}")
+    val w = new BufferedWriter(new OutputStreamWriter(Files.newOutputStream(tmp), UTF_8))
+    try lines.foreach { line => w.write(line); w.write('\n') }
+    finally w.close()
+    Files.move(tmp, Paths.get(dir, name), ATOMIC_MOVE, REPLACE_EXISTING)
+  }
+
+  private def deleteTree(root: Path): Unit =
+    if (Files.exists(root)) {
+      val paths = Files.walk(root)
+      try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+      finally paths.close()
+    }
 
   /** Sequential oracle: same semantics in one driver-side pass, global
     * key sort then contiguous-run reduce — the mrsequential.go:27-89

@@ -7,7 +7,9 @@ import graft.SparkTestSession
   * multi-process executors and a fresh SparkContext; the suite's
   * shared local[4] context is JVM-singleton) and asserts the job
   * survived a mid-job executor kill with oracle-equal output, on the
-  * plain and the combiner reduce path — the
+  * plain reduce path (killed in a map task) and the combiner path
+  * (killed in a reduce task while it writes its temporary file, whose
+  * directory must hold only the R part files and `_SUCCESS`) — the
   * true analog of the reference's worker-respawn crash test
   * (/root/reference/mr-main/test-mr.sh:222-271), exercising
   * executor-loss recovery rather than task retry (InvariantsSpec's

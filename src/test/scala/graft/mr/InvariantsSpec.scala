@@ -1,7 +1,11 @@
 package graft.mr
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.TaskContext
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import org.apache.spark.{ExceptionFailure, TaskContext}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.util.LongAccumulator
 import org.scalatest.funsuite.AnyFunSuite
@@ -153,5 +157,48 @@ class InvariantsSpec extends AnyFunSuite {
     assert(!files.exists(_.startsWith("_temporary")))
     val got = spark.read.text(out).collect().map(_.getString(0)).toSeq.sorted
     assert(got == MRJob.sequential(Apps.FileCount, booksLocal()).sorted)
+  }
+
+  test("reduce crash mid-write: one committed copy per partition, stale files replaced") {
+    // §3.3: the failed attempt's temporary file never becomes output;
+    // the retry renames its own complete file into place
+    val out = Files.createTempDirectory("reducecrash")
+    Files.write(out.resolve("part-00042"), "stale 1\n".getBytes(UTF_8))
+    Files.write(out.resolve("junk.txt"), "junk".getBytes(UTF_8))
+    val expected = MRJob.sequential(Apps.WordCount, booksLocal())
+    // partition 1 of 3 writes its first key's line, then attempt 0 throws
+    val first = expected.map(_.split(' ').head)
+      .filter(k => Math.floorMod(k.hashCode, 3) == 1).min
+    val crashy = new MRApp {
+      def map(f: String, c: String): Seq[KV] = Apps.WordCount.map(f, c)
+      def reduce(k: String, v: Seq[String]): String = {
+        val ctx = TaskContext.get()
+        if (ctx.partitionId() == 1 && ctx.attemptNumber() == 0 && k != first)
+          throw new RuntimeException("injected reduce fault")
+        Apps.WordCount.reduce(k, v)
+      }
+    }
+    val faults = new AtomicInteger
+    val listener = new SparkListener {
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = t.reason match {
+        case e: ExceptionFailure if e.description.contains("injected reduce fault") =>
+          faults.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      MRJob.run(spark, crashy, s"$booksDir/*.txt", out.toString, nReduce = 3)
+      // listener events are async — bounded wait
+      val deadline = System.currentTimeMillis() + 10000
+      while (faults.get == 0 && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(faults.get == 1, "the injected reduce fault did not fire exactly once")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val files = Files.list(out).iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    assert(files == Seq("_SUCCESS", "part-00000", "part-00001", "part-00002"))
+    val got = files.filter(_.startsWith("part-"))
+      .flatMap(f => Files.readAllLines(out.resolve(f), UTF_8).asScala)
+    assert(got.sorted == expected.sorted)
   }
 }

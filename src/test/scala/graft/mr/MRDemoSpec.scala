@@ -26,4 +26,9 @@ class MRDemoSpec extends AnyFunSuite {
       assert(msg.contains("usage: MRDemo <"))
     }
   }
+
+  test("outDir must be a POSIX path: a remote scheme is named") {
+    for ((scheme, outDir) <- Seq("hdfs" -> "hdfs://nn/out", "s3a" -> "s3a://b/out"))
+      assert(rejects("wc", "in/*", outDir).contains(s"scheme '$scheme'"))
+  }
 }

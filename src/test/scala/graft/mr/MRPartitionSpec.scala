@@ -45,4 +45,11 @@ class MRPartitionSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       MRJob.run(spark, Apps.WordCount, s"$booksDir/*.txt", out.toString, nReduce = 0))
   }
+
+  for ((scheme, outDir) <- Seq("hdfs" -> "hdfs://nn/out", "s3a" -> "s3a://b/out"))
+    test(s"a $scheme:// outDir is rejected: §3.3's commit needs a POSIX rename") {
+      val e = intercept[IllegalArgumentException](
+        MRJob.run(spark, Apps.WordCount, s"$booksDir/*.txt", outDir))
+      assert(e.getMessage.contains(s"scheme '$scheme'"))
+    }
 }
