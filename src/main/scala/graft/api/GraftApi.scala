@@ -24,15 +24,12 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
   * [[graft.operators.Materialize]] (localCheckpoint policy — blocks
   * live on executors, freed when consumers are GC'd; see that object's
   * scaladoc for the preemptible-fleet trade-off and the
-  * `spark.graft.materialize=persist` escape hatch). Some entry points
-  * additionally PIN session-scoped shared scans (the LSH candidate
-  * pair table) for cross-query reuse: a long-lived session cycling
-  * through many corpora MUST call
-  * `graft.operators.Materialize.releaseShared(spark)` between corpora,
-  * both to release pinned executor storage and because pinned scans
-  * assume the data under a directory is immutable for the registry
-  * entry's lifetime. That call is part of this API's contract, not an
-  * internal detail.
+  * `spark.graft.materialize=persist` escape hatch). Nothing is cached
+  * across calls: every query builds its own intermediates from its
+  * input files, so rewriting a data directory mid-session needs no
+  * release call. [[GraftSession.releaseShared]] is optional: it frees
+  * the persisted static sides of ingest streams early instead of at
+  * application end.
   */
 object GraftSession {
   /** A SparkSession wired for graft: GraftExtensions (native
@@ -42,8 +39,10 @@ object GraftSession {
       master: String = s"local[${graft.Session.cpus}]"): SparkSession =
     graft.Session.build(appName, master)
 
-  /** Release every session-scoped pinned intermediate graft holds for
-    * this session's context — call between corpora. */
+  /** Optional: unpersist the static sides of this session's ingest
+    * streams ([[Streams.ingestVerdicts]]) now instead of at
+    * application end. Call it after those streams stop. Rewriting a
+    * data directory does not need it. */
   def releaseShared(spark: SparkSession): Unit =
     graft.operators.Materialize.releaseShared(spark)
 }
@@ -162,8 +161,8 @@ object Streams {
 
   /** [[ingestVerdicts]] plus the static side's release handle: call
     * it after the stream stops to free THIS stream's eval shingle set
-    * without dropping the session's other shared frames (the
-    * alternative, [[GraftSession.releaseShared]], evicts everything).
+    * without dropping the session's other streams' static sides (the
+    * alternative, [[GraftSession.releaseShared]], frees them all).
     * Idempotent; safe under a live stream (later micro-batches
     * recompute). */
   def ingestVerdictsReleasable(stampedDocs: DataFrame, evalDocs: DataFrame,

@@ -16,12 +16,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   *   - lineage is truncated, so iterative consumers (connected
   *     components) do not accumulate an analysis-time plan blowup.
   *
-  * Exception to the freed-when-GC'd contract: the session-scoped
-  * compute-once registry ([[sharedPinned]]) and its sibling caches
-  * hold STRONG refs for reuse across queries. Those are released by
-  * [[releaseShared]] or automatically when the SparkContext stops —
-  * a library caller cycling many data dirs through one long-lived
-  * session should call [[releaseShared]] between corpora.
+  * Nothing is shared across queries: each query builds its own
+  * intermediates from its input files, so rewriting a data directory
+  * mid-session needs no release call. The one strong reference kept
+  * past a query is an [[eagerStatic]] streaming side, unpersisted by
+  * [[releaseShared]] or when the SparkContext stops.
   *
   * The trade-off (know it before running on a preemptible fleet):
   * localCheckpoint stores blocks ONLY on executors and DISCARDS the
@@ -48,17 +47,6 @@ object Materialize {
   // ContextCleaner free the blocks, registry or not.
   private val tracked =
     new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_], AnyRef]()
-
-  // Strong set of PINNED checkpoint RDDs: session-scoped shared
-  // intermediates (e.g. the LPA label table both
-  // graph_label_propagation and graph_modularity consume) that a
-  // harness's between-query [[freeAll]] must NOT drop — the whole
-  // point of the pin is surviving until the next query reuses the
-  // blocks. Strong refs are deliberate: the owning cache (not the
-  // GC) decides the lifetime, released via [[unpin]].
-  private val pinned =
-    java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[org.apache.spark.rdd.RDD[_], java.lang.Boolean]())
 
   private def leafRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collectLeaves().collect {
@@ -88,10 +76,9 @@ object Materialize {
     * every subsequent micro-batch unrecoverably. This variant uses
     * `persist` + fill, keeping the plan: a concurrent
     * `clearCache`/unpersist merely degrades later micro-batches to a
-    * recompute. The frame is registered with [[onRelease]], so
-    * [[releaseShared]] / application end unpersists it — callers that
-    * stop the stream early and want the memory back sooner unpersist
-    * the returned frame themselves. */
+    * recompute. [[releaseShared]] or application end unpersists it —
+    * callers that stop the stream early and want the memory back
+    * sooner unpersist the returned frame themselves. */
   def eagerStatic(df: DataFrame): DataFrame = {
     val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     p.count()
@@ -122,7 +109,7 @@ object Materialize {
     * partitioning from input size, never a constant tuned to one
     * scale): the floor is the session's shuffle-partition setting —
     * exactly the layout the per-consumer exchange would have produced,
-    * config-scaled, not hard-coded — and when the frame's SOURCE pins
+    * config-scaled, not hard-coded — and when the frame's SOURCES
     * are materialized (their stored bytes readable driver-side with no
     * job, the [[hintSmall]] mechanism) the count grows so partitions
     * track the session's advisory partition size instead of growing
@@ -139,9 +126,9 @@ object Materialize {
     * Caveat (documented contract): the AQE flag flip is session-global
     * for the duration of the ONE materializing action, so callers must
     * not invoke this concurrently with other job-submitting threads of
-    * the same session (all current callers build shared cores from the
-    * single query-construction thread; operators.Par branches do not
-    * call it). */
+    * the same session (all current callers run on the single
+    * query-construction thread; operators.Par branches do not call
+    * it). */
   def eagerKeyed(df: DataFrame, keys: org.apache.spark.sql.Column*)
       : DataFrame = {
     val s = df.sparkSession
@@ -159,9 +146,9 @@ object Materialize {
 
   /** Measured bytes `df` will READ from materialized sources: like
     * [[storedBytes]] but summed per leaf REFERENCE, not per distinct
-    * RDD — a plan that scans the same pin twice (LPA's
+    * RDD — a plan that scans the same stored frame twice (LPA's
     * both-directions union of the pair table) reads and emits ~2× the
-    * pin's bytes, and the partition count must track that output
+    * frame's bytes, and the partition count must track that output
     * volume. None when any leaf is unmeasurable (same contract as
     * [[storedBytes]]). */
   private def storedBytesByRef(df: DataFrame): Option[Long] = {
@@ -241,157 +228,43 @@ object Materialize {
     }
   }
 
-  /** [[eagerCheckpoint]] plus a PIN: the stored blocks survive
-    * [[freeAll]] so a session-scoped cache (one query computing a
-    * table a later query reuses) keeps working across a harness's
-    * between-query cleanup. The caller owns the lifetime — pair every
-    * pin with an eventual [[unpin]] when the cache entry is evicted. */
-  def eagerPinned(df: DataFrame): DataFrame = {
-    val out = eagerCheckpoint(df)
-    pinned.synchronized { leafRdds(out).foreach(pinned.add) }
-    out
-  }
-
-  /** Pin an ALREADY-materialized frame's blocks in place — no copy.
-    * [[eagerPinned]] re-checkpoints (a full copy pass plus double
-    * storage); when the frame is already checkpoint-backed (an
-    * [[eager]]/[[eagerCheckpoint]] product, or a projection over one)
-    * pinning the existing blocks is value-identical and free. It also
-    * PRESERVES the stored layout: re-checkpointing under AQE records
-    * UnknownPartitioning (see [[eagerKeyed]]), which would throw away
-    * exactly the keyed layout an iterative consumer pinned the frame
-    * for. Caller owns the lifetime — pair with [[unpin]]/[[unpinKeep]]. */
-  def pinExisting(df: DataFrame): DataFrame = {
-    pinned.synchronized { leafRdds(df).foreach(pinned.add) }
-    df
-  }
-
-  /** Release a pinned frame: drop the pin AND free its blocks now.
-    * After this the frame is NOT recomputable (localCheckpoint) — only
-    * safe when the caller KNOWS no consumer retains the frame. */
-  def unpin(df: DataFrame): Unit = {
-    leafRdds(df).foreach { r =>
-      pinned.synchronized { pinned.remove(r) }
-      r.unpersist(blocking = true)
-      tracked.synchronized { tracked.remove(r) }
-    }
-  }
-
-  /** Drop a frame's pin WITHOUT freeing its blocks: the frame reverts
-    * to the ordinary weak-tracked lifetime (freed by the next harness
-    * [[freeAll]], or by GC + ContextCleaner once every consumer drops
-    * the plan). This is the only safe release when another thread may
-    * have just fetched the frame from a shared registry — a blocking
-    * free here would hand that thread a plan over missing,
-    * non-recomputable blocks. */
-  def unpinKeep(df: DataFrame): Unit =
-    pinned.synchronized { leafRdds(df).foreach(pinned.remove) }
-
-  // Session-scoped compute-once registry of pinned shared scans: a
-  // subtree several REGISTERED queries pay standalone (the LSH
-  // candidate-pair table under 9 dedup/graph queries, the distinct
-  // token table under the sweep family) is materialized by the FIRST
-  // consumer in a session and reused by the rest — the
-  // dedup_cluster_density share-the-scan discipline lifted to the
-  // session (round-9 verdict #6), generalizing GraphRank's LPA cache.
-  // Keyed by (SparkContext, key) so test sessions / Verify / perfbench
-  // never cross-contaminate; determinism of every shared subtree makes
-  // reuse value-identical to a recompute.
-  private val shared = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String), DataFrame]()
-
-  // Per-context release hooks: other session-scoped caches holding
-  // pinned frames (GraphRank's LPA core) register here so ONE call —
-  // [[releaseShared]] or the context-stop listener — evicts every
-  // strong reference the library holds for that context.
+  // Per-context release hooks: each [[eagerStatic]] side registers its
+  // unpersist here so ONE call — [[releaseShared]] or the context-stop
+  // listener — drops every strong reference the library holds for that
+  // context.
   private val releaseHooks = new java.util.concurrent.ConcurrentHashMap[
     org.apache.spark.SparkContext,
     List[() => Unit]]()
 
   // Contexts whose end-of-application listener is already installed —
   // without it, a long-lived JVM cycling through SparkSessions would
-  // accumulate permanently-pinned registries per dead context (the
-  // strong refs outlive the blocks they guard).
+  // keep one hook list per dead context.
   private val endListenerOn = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[
       org.apache.spark.SparkContext, java.lang.Boolean]())
 
-  private def ensureEndListener(sc: org.apache.spark.SparkContext): Unit =
+  private def onRelease(sc: org.apache.spark.SparkContext)(hook: () => Unit): Unit = {
     if (endListenerOn.add(sc))
       sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
           releaseContext(sc)
       })
-
-  /** Register a cleanup hook run when `sc`'s registries are released
-    * (explicit [[releaseShared]] or application end). */
-  def onRelease(sc: org.apache.spark.SparkContext)(hook: () => Unit): Unit = {
-    ensureEndListener(sc)
     releaseHooks.merge(sc, List(hook), (a, b) => b ++ a)
   }
 
   private def releaseContext(sc: org.apache.spark.SparkContext): Unit = {
-    val it = shared.keySet().iterator()
-    val mine = scala.collection.mutable.ArrayBuffer[
-      (org.apache.spark.SparkContext, String)]()
-    while (it.hasNext) { val k = it.next(); if (k._1 eq sc) mine += k }
-    mine.foreach { k =>
-      val df = shared.remove(k)
-      if (df != null) unpinKeep(df) // blocks follow the weak-tracked lifetime
-    }
     val hooks = releaseHooks.remove(sc)
     if (hooks != null) hooks.foreach(h => h())
     endListenerOn.remove(sc)
   }
 
-  /** Public release path for the compute-once registry: drops every
-    * shared entry (and registered sibling cache) of this session's
-    * context. Library callers cycling many data dirs through one
-    * session call this to stop pinned executor storage accumulating;
-    * it also runs automatically when the SparkContext stops. Blocks
-    * are not force-freed — frames still referenced by a live consumer
-    * stay readable and are reclaimed by GC + ContextCleaner (or a
-    * harness [[freeAll]]) once dropped. */
+  /** Unpersist every [[eagerStatic]] side of this session's context
+    * now instead of at application end. Optional: nothing else is
+    * held across queries, so rewriting a data directory never needs
+    * it. Call it after the streams those sides serve have stopped. */
   def releaseShared(spark: org.apache.spark.sql.SparkSession): Unit =
     releaseContext(spark.sparkContext)
-
-  /** Compute-once pinned materialization of a deterministic shared
-    * subtree. First caller per (session-context, key) pays and pins;
-    * later callers get the stored blocks. `build` must be a pure
-    * function of the key's inputs (all graft scans are: parquet dir +
-    * deterministic plan), and the key's inputs are assumed IMMUTABLE
-    * for the registry entry's lifetime — a caller that rewrites the
-    * parquet under a registered dir mid-session must [[releaseShared]]
-    * first or non-owner consumers serve the stale pinned snapshot.
-    *
-    * `refresh = true` marks the key's OWNER query: it always rebuilds
-    * and re-pins, so in a min-of-two-passes benchmark the scan's true
-    * build cost stays attributed to exactly one registered query
-    * instead of vanishing into "already pinned" on every second pass —
-    * the LPA-core honesty discipline. The DISPLACED frame is unpinned
-    * but not freed ([[unpinKeep]]): a concurrent reader that fetched
-    * it just before the swap keeps working; the blocks fall back to
-    * the weak-tracked lifetime. */
-  def sharedPinned(spark: org.apache.spark.sql.SparkSession, key: String,
-      refresh: Boolean = false)(build: => DataFrame): DataFrame = {
-    val k = (spark.sparkContext, key)
-    if (!refresh) {
-      val hit = shared.get(k)
-      if (hit != null) return hit
-    }
-    shared.synchronized {
-      if (!refresh) {
-        val again = shared.get(k)
-        if (again != null) return again
-      }
-      ensureEndListener(spark.sparkContext)
-      val df = eagerPinned(build)
-      val old = shared.put(k, df)
-      if (old != null) unpinKeep(old)
-      df
-    }
-  }
 
   /** Free every tracked checkpoint of `spark`'s context that is still
     * strongly reachable — for harnesses running many queries in one
@@ -406,10 +279,7 @@ object Materialize {
       while (it.hasNext) { val r = it.next(); if (r != null) buf += r }
       buf.toSeq
     }
-    live.filter { r =>
-      (r.sparkContext eq spark.sparkContext) &&
-        !pinned.synchronized(pinned.contains(r))
-    }.foreach { r =>
+    live.filter(_.sparkContext eq spark.sparkContext).foreach { r =>
       // blocking: the whole point is that removal completes BEFORE the
       // caller's next timed window starts — unpersist(false) merely
       // dispatches the removal to block-manager threads

@@ -44,14 +44,12 @@ object CorpusCuration {
     * The window sees only DUPLICATED gram positions of one doc —
     * bounded by doc length, not corpus size. */
   def duplicateSpans(s: SparkSession, d: String): DataFrame = {
-    // OWNER of the session-shared positional-gram table (refresh =
-    // true: the tokenize + posexplode cost stays attributed here;
-    // span_rewrite and winnowing read the pin)
-    val grams = Documents.shingles3Pos(s, d, refresh = true)
+    // materialized: the dup-gram agg and the hits join both read it
+    val grams = graft.operators.Materialize.eager(Documents.shingles3Pos(s, d))
     // "appears in >1 distinct doc" ⟺ min(doc) ≠ max(doc): one cheap
     // min/max agg instead of the two-phase distinct-count rewrite —
     // lazy, single consumer (see Documents.dupGrams3)
-    val dup = Documents.dupGrams3(s, d)
+    val dup = Documents.dupGrams3(grams)
     val hits = grams.join(dup, "g")
       .select(col("doc_id"), col("n"), col("pos"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
@@ -362,9 +360,6 @@ object CorpusCuration {
     * 64-bit shingle hash, the oracle on strings — identical counts
     * modulo 2^-64 collisions (ngramJaccard's documented convention). */
   def lshPrecision(s: SparkSession, d: String): DataFrame = {
-    // session-shared pair + shingle roots (round-9 verdict #6): the
-    // candidate table and the hashed shingle table are pinned once per
-    // session; this audit pays only its sampled-join marginal cost.
     // (doc_id, sh) projected from the (doc_id, source, sh) table stays
     // distinct — source is functionally dependent on doc_id.
     val pairs = graft.operators.Materialize.hintSmall(
@@ -372,8 +367,9 @@ object CorpusCuration {
         Documents.lshCandidatePairs(s, d)
           .filter(substring(md5(concat(col("doc_a").cast("string"), lit("_"),
             col("doc_b").cast("string"))), 1, 2) === "00")))
-    val shingled = Documents.shingledHashed(s, d)
-      .select(col("doc_id"), col("sh"))
+    // materialized: sizes and both intersection sides read it
+    val shingled = graft.operators.Materialize.eager(
+      Documents.shingledHashed(s, d).select(col("doc_id"), col("sh")))
     val sizes = shingled.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
     val a = shingled.select(col("doc_id").as("doc_a"), col("sh"))
     val b = shingled.select(col("doc_id").as("doc_b"), col("sh"))
@@ -589,11 +585,10 @@ object CorpusCuration {
     * are pruned by the same aggregate. All md5-lexicographic, no
     * floats. */
   def winnowingPairs(s: SparkSession, d: String): DataFrame = {
-    // positional grams from the session-shared pinned table (owner:
-    // text_duplicate_spans): the 1-based pos is an order-isomorphic
-    // relabeling of the 0-based posexplode index this read replaced,
-    // and the window below consumes only the ORDER, so fingerprints
-    // (and the output pairs) are identical
+    // positional grams: the 1-based pos is an order-isomorphic
+    // relabeling of the 0-based posexplode index, and the window below
+    // consumes only the ORDER, so fingerprints (and the output pairs)
+    // are the same either way
     val grams = Documents.shingles3Pos(s, d)
       .select(col("doc_id"), col("pos").as("p"), md5(col("g")).as("h"))
     val wWin = Window.partitionBy(col("doc_id")).orderBy(col("p"))

@@ -218,8 +218,9 @@ object Documents {
 
   /** Unsorted (doc_id, mh0..mh{NSIG-1}) MinHash signatures of a
     * (doc_id, text) frame — the one signature construction behind
-    * [[minhashSignatures]] and [[lshCandidatePairsAmong]]. */
-  private def signaturesOf(docs: DataFrame): DataFrame = {
+    * [[minhashSignatures]], [[bandedSigs]] and
+    * [[lshCandidatePairsAmong]]. */
+  private[queries] def signaturesOf(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"), explode(tokens(col("text"))).as("word"))
     val aggs = (0 until NSIG).map(j =>
       min(md5(concat(lit(j.toString), lit("|"), col("word")))).as(s"mh$j"))
@@ -246,145 +247,117 @@ object Documents {
 
   /** LSH candidate pairs: docs sharing any minhash band (2 sigs/band).
     * Self-join is band-bucketed — cost is sum of bucket² per band, not
-    * n²; at scale the band column is the shuffle key. */
-  /** Unsorted LSH candidate pairs — the form downstream consumers
-    * (dedup_lsh_precision's sampled audit) build on; dedupLshPairs
-    * adds only the oracle-facing global sort, which is pure waste for
-    * a consumer that re-aggregates. */
-  private[queries] def lshCandidatePairs(s: SparkSession, d: String,
-      refresh: Boolean = false): DataFrame =
-    // SESSION-SHARED (round-9 verdict #6): nine registered queries
-    // (the dedup sweeps/confirms plus the whole graph family) build on
-    // this exact pair table — the first consumer in a session pays the
-    // tokenize + minhash + band joins once and pins the result
-    // (~O(docs) rows; Σ bucket² bounded by the banding), the rest read
-    // the stored blocks. Deterministic, so reuse is value-identical —
-    // PROVIDED the parquet under `d` is immutable for the session
-    // (the sharedPinned contract): a caller that rewrites a dir
-    // mid-session must Materialize.releaseShared(s) first, or
-    // non-owner consumers here (and in tokDistinct/shingledHashed/
-    // minhashSigShared below) serve the stale pinned snapshot.
-    // OWNER (refresh=true): dedup_lsh_pairs — its benchmark time stays
-    // the true build cost (the LPA-core honesty discipline).
-    graft.operators.Materialize.sharedPinned(s, s"lsh_pairs|$d", refresh) {
-      // band keys as 64-bit hashes (8 bytes shuffled instead of a
-      // 68-char string; same pairs modulo 2^-64 collisions). Two
-      // disjoint joins — band-0 matches, then band-1-only matches
-      // (band-0 differs) — produce each pair exactly once, so no
-      // 10 M-row distinct shuffle (was ~5 s of the query at sf0.1).
-      // materialize the (tiny: one row per doc, 3 longs) signature table
-      // so the two joins × two sides don't re-run the tokenize+minhash
-      // agg (cold A/B at sf0.1: 2.3 s materialized vs 5.9 s not).
-      // The explicit repartition matters: AQE coalesces the materialized
-      // signature shuffle by its INPUT bytes (tiny) — but this join's
-      // OUTPUT is sum-of-bucket² pairs, so 2 coalesced partitions would
-      // serialize the expansion on 2 tasks (measured 4.4 s vs 1.9 s at
-      // sf0.1). Parallelism here must be sized to output work.
-      val sig2 = graft.operators.Materialize.eager(
-        bandedSigs(s, d).repartition(s.sparkContext.defaultParallelism))
-      // The OUTPUT layout needs the same discipline as the input: AQE
-      // sizes the join's result partitions by its (tiny) shuffle
-      // input, so past ~10× the pair table lands in a handful of
-      // multi-GiB partitions. The round-10 no-distinct rewrite
-      // silently removed the shuffle that used to re-spread it, and
-      // the owner's global sort inherited the giant partitions —
-      // dedup_lsh_pairs measured 41.8 s at 10× (24.8× its 1× time)
-      // vs 30.7 s with this spread restored; the 1×-to-10× A/B also
-      // rejected `hint("rebalance")` (43.9 s at 10× — AQE's
-      // rebalance did not split the expansion output here).
-      // HASH repartition on the (unique) pair key, not round-robin
-      // (r13, guide §2.5 note): a keyless repartition(n) first pays a
-      // LOCAL SORT of its whole input (sortBeforeRepartition, on by
-      // default so retried tasks reproduce the same placement) —
-      // DedupProbe measured that sort at ~2.9 s of the pin build's
-      // 4.4 s warm. Hashing the unique (doc_a, doc_b) key needs no
-      // sort (deterministic per row), spreads exactly as uniformly
-      // (keys are distinct, 4n·~60k buckets), and keeps the explicit
-      // partition count AQE cannot coalesce — the 10× scale-safety
-      // property the round-10 regression taught. Row placement is the
-      // only change; every consumer aggregates or re-sorts.
-      lshCandidatePairsFromSig(sig2)
-        .repartition(4 * s.sparkContext.defaultParallelism,
-          col("doc_a"), col("doc_b"))
-    }
+    * n²; at scale the band column is the shuffle key. Unsorted — the
+    * form downstream consumers build on; dedupLshPairs adds only the
+    * oracle-facing global sort, which is pure waste for a consumer
+    * that re-aggregates. Lazy: a query that reads the pairs more than
+    * once, or sizes a plan from them, materializes them itself. */
+  private[queries] def lshCandidatePairs(s: SparkSession, d: String): DataFrame =
+    lshCandidatePairsOfBands(bandedSigs(s, d))
 
-  /** (doc_id, b0, b1) banded signature projection — the shared root
-    * of the pair join AND the cluster contraction; callers decide
-    * materialization so a composite query (clusterDensity) computes
-    * the tokenize+minhash scan ONCE for both subtrees. */
+  /** The pair join over a banded signature table (doc_id, b0, b1). The
+    * band keys are 64-bit hashes (8 bytes shuffled instead of a
+    * 68-char string; same pairs modulo 2^-64 collisions). Two disjoint
+    * joins — band-0 matches, then band-1-only matches (band-0 differs)
+    * — produce each pair exactly once, so no 10 M-row distinct
+    * shuffle (was ~5 s of the query at sf0.1). */
+  private def lshCandidatePairsOfBands(bands: DataFrame): DataFrame = {
+    val s = bands.sparkSession
+    // materialize the (tiny: one row per doc, 3 longs) signature table
+    // so the two joins × two sides don't re-run the tokenize+minhash
+    // agg (cold A/B at sf0.1: 2.3 s materialized vs 5.9 s not). When
+    // `bands` is already materialized this is a repartition of the
+    // stored blocks — a tiny shuffle, not a recompute.
+    // The explicit repartition matters: AQE coalesces the materialized
+    // signature shuffle by its INPUT bytes (tiny) — but this join's
+    // OUTPUT is sum-of-bucket² pairs, so 2 coalesced partitions would
+    // serialize the expansion on 2 tasks (measured 4.4 s vs 1.9 s at
+    // sf0.1). Parallelism here must be sized to output work.
+    val sig2 = graft.operators.Materialize.eager(
+      bands.repartition(s.sparkContext.defaultParallelism))
+    // The OUTPUT layout needs the same discipline as the input: AQE
+    // sizes the join's result partitions by its (tiny) shuffle
+    // input, so past ~10× the pair table lands in a handful of
+    // multi-GiB partitions. The round-10 no-distinct rewrite
+    // silently removed the shuffle that used to re-spread it, and
+    // dedup_lsh_pairs' global sort inherited the giant partitions —
+    // it measured 41.8 s at 10× (24.8× its 1× time)
+    // vs 30.7 s with this spread restored; the 1×-to-10× A/B also
+    // rejected `hint("rebalance")` (43.9 s at 10× — AQE's
+    // rebalance did not split the expansion output here).
+    // HASH repartition on the (unique) pair key, not round-robin
+    // (r13, guide §2.5 note): a keyless repartition(n) first pays a
+    // LOCAL SORT of its whole input (sortBeforeRepartition, on by
+    // default so retried tasks reproduce the same placement) —
+    // DedupProbe measured that sort at ~2.9 s of the pair build's
+    // 4.4 s warm. Hashing the unique (doc_a, doc_b) key needs no
+    // sort (deterministic per row), spreads exactly as uniformly
+    // (keys are distinct, 4n·~60k buckets), and keeps the explicit
+    // partition count AQE cannot coalesce — the 10× scale-safety
+    // property the round-10 regression taught. Row placement is the
+    // only change; every consumer aggregates or re-sorts.
+    lshCandidatePairsFromSig(sig2)
+      .repartition(4 * s.sparkContext.defaultParallelism,
+        col("doc_a"), col("doc_b"))
+  }
+
+  /** (doc_id, b0, b1) banded signature projection — the root of the
+    * pair join AND the cluster contraction. Unsorted and lazy: callers
+    * decide materialization, so a composite query (clusterDensity,
+    * leakageSafeSplit) materializes it once and computes the
+    * tokenize+minhash scan ONCE for both subtrees. */
   private def bandedSigs(s: SparkSession, d: String): DataFrame =
-    bandsOf(minhashSigShared(s, d))
+    bandsOf(signaturesOf(documents(s, d)))
 
-  /** Session-shared distinct (doc_id, word) token table — the root
-    * scan the LSH tuning family (band sweep, threshold sweep) pays
-    * standalone; one tokenize+distinct per session instead of one per
-    * query (round-9 verdict #6). O(Σ distinct tokens) rows. */
-  private[queries] def tokDistinct(s: SparkSession, d: String,
-      refresh: Boolean = false): DataFrame =
-    graft.operators.Materialize.sharedPinned(s, s"tok_distinct|$d", refresh) {
-      documents(s, d)
-        .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
-        .distinct()
-    }
+  /** Distinct (doc_id, word) token table — the root scan of the LSH
+    * tuning family (band sweep, threshold sweep) and the corpus
+    * build's confirm stage. O(Σ distinct tokens) rows. */
+  private[queries] def tokDistinct(s: SparkSession, d: String): DataFrame =
+    documents(s, d)
+      .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
+      .distinct()
 
-  /** Session-shared hashed 3-gram shingle table (doc_id, source, sh),
-    * distinct. source is functionally dependent on doc_id, so a
-    * (doc_id, sh) projection is distinct too — one table serves the
-    * same-source pair metrics (ngram Jaccard/containment) AND the
-    * LSH precision audit. */
-  /** Session-shared POSITIONAL 3-gram table (doc_id, n, pos, g) —
-    * n = the doc's token count, pos 1-based. Three registered queries
-    * posexplode this same shingle stream standalone
-    * (text_duplicate_spans = owner, text_dedup_span_rewrite,
-    * text_winnowing_pairs); one tokenize + posexplode per session
-    * (r12 optimization round; A/B in OPTIMIZATION_r12.md). Distinct
-    * from [[shingledHashed]], which is position-free + distinct. */
-  private[queries] def shingles3Pos(s: SparkSession, d: String,
-      refresh: Boolean = false): DataFrame =
-    graft.operators.Materialize.sharedPinned(s, s"shingles3pos|$d",
-        refresh) {
-      // two-step construction is load-bearing: computing n in the
-      // SAME select as the posexplode measured 3-4× slower (the token
-      // count lands above the Generate and re-evaluates per exploded
-      // row — SpanProbe A/B, OPTIMIZATION_r12.md wave 6); the
-      // withColumn form pins n below the Generate, once per doc
-      val base = documents(s, d)
-        .select(col("doc_id"), col("text"))
-        .withColumn("n", size(tokens(col("text"))))
-      base.select(col("doc_id"), col("n"),
-          posexplode(shingles3(col("text"))).as(Seq("p", "g")))
-        .withColumn("pos", (col("p") + 1).cast("int"))
-        .select(col("doc_id"), col("n"), col("pos"), col("g"))
-    }
+  /** POSITIONAL 3-gram table (doc_id, n, pos, g) — n = the doc's token
+    * count, pos 1-based. text_duplicate_spans, text_dedup_span_rewrite
+    * and text_winnowing_pairs posexplode this same shingle stream.
+    * Distinct from [[shingledHashed]], which is position-free +
+    * distinct. */
+  private[queries] def shingles3Pos(s: SparkSession, d: String): DataFrame = {
+    // two-step construction is load-bearing: computing n in the
+    // SAME select as the posexplode measured 3-4× slower (the token
+    // count lands above the Generate and re-evaluates per exploded
+    // row — SpanProbe A/B, OPTIMIZATION_r12.md wave 6); the
+    // withColumn form pins n below the Generate, once per doc
+    val base = documents(s, d)
+      .select(col("doc_id"), col("text"))
+      .withColumn("n", size(tokens(col("text"))))
+    base.select(col("doc_id"), col("n"),
+        posexplode(shingles3(col("text"))).as(Seq("p", "g")))
+      .withColumn("pos", (col("p") + 1).cast("int"))
+      .select(col("doc_id"), col("n"), col("pos"), col("g"))
+  }
 
-  /** Duplicated-gram key set over [[shingles3Pos]]: grams appearing
-    * in MORE THAN ONE distinct doc ("min ≠ max", the cheap form) —
-    * LAZY on purpose: each consumer uses it exactly once, so the agg
-    * fuses into that consumer's job; a pinned variant was A/B'd and
-    * REJECTED (the extra materialization cost the owner more than the
-    * one cheap agg it saved the other consumer —
-    * OPTIMIZATION_r12.md wave 6). */
-  private[queries] def dupGrams3(s: SparkSession, d: String): DataFrame =
-    shingles3Pos(s, d).groupBy(col("g"))
+  /** Duplicated-gram key set over a [[shingles3Pos]] table: grams
+    * appearing in MORE THAN ONE distinct doc ("min ≠ max", the cheap
+    * form) — LAZY on purpose: each consumer uses it exactly once, so
+    * the agg fuses into that consumer's job; a materialized variant
+    * was A/B'd and REJECTED (the extra materialization cost more than
+    * the one cheap agg it saved — OPTIMIZATION_r12.md wave 6). */
+  private[queries] def dupGrams3(grams: DataFrame): DataFrame =
+    grams.groupBy(col("g"))
       .agg(min(col("doc_id")).as("d0"), max(col("doc_id")).as("d1"))
       .filter(col("d0") =!= col("d1")).select(col("g"))
 
-  private[queries] def shingledHashed(s: SparkSession, d: String,
-      refresh: Boolean = false): DataFrame =
-    graft.operators.Materialize.sharedPinned(s, s"shingles3|$d", refresh) {
-      documents(s, d).select(col("doc_id"), col("source"),
-          explode(shingles3(col("text"))).as("sh0"))
-        .select(col("doc_id"), col("source"), xxhash64(col("sh0")).as("sh"))
-        .distinct()
-    }
-
-  /** Session-shared materialized MinHash signature table (unsorted —
-    * consumers re-sort if oracle-facing). */
-  private[queries] def minhashSigShared(s: SparkSession, d: String,
-      refresh: Boolean = false): DataFrame =
-    graft.operators.Materialize.sharedPinned(s, s"minhash_sig|$d", refresh) {
-      minhashSignatures(s, d)
-    }
+  /** Hashed 3-gram shingle table (doc_id, source, sh), distinct.
+    * source is functionally dependent on doc_id, so a (doc_id, sh)
+    * projection is distinct too — one table serves the same-source
+    * pair metrics (ngram Jaccard/containment) AND the LSH precision
+    * audit. */
+  private[queries] def shingledHashed(s: SparkSession, d: String): DataFrame =
+    documents(s, d).select(col("doc_id"), col("source"),
+        explode(shingles3(col("text"))).as("sh0"))
+      .select(col("doc_id"), col("source"), xxhash64(col("sh0")).as("sh"))
+      .distinct()
 
   /** Banded candidate pairs restricted to a caller-supplied
     * (doc_id, text) frame: a doc's minhash signature depends only on
@@ -396,7 +369,7 @@ object Documents {
   // public: the graft.api.Dedup.candidatePairs library entry point
   def lshCandidatePairsAmong(docs: DataFrame): DataFrame = {
     val sig = bandsOf(signaturesOf(docs))
-    // same parallelism discipline as [[lshCandidatePairs]]: the band
+    // same parallelism discipline as [[lshCandidatePairsOfBands]]: the band
     // join's OUTPUT is sum-of-bucket² pairs, so an AQE-coalesced
     // 2-partition signature table would serialize the expansion
     lshCandidatePairsFromSig(graft.operators.Materialize.eager(
@@ -405,7 +378,7 @@ object Documents {
 
   /** Pair join over a caller-materialized banded signature table (must
     * already be repartitioned to output-work parallelism — see the
-    * AQE-coalescing note in [[lshCandidatePairs]]). */
+    * AQE-coalescing note in [[lshCandidatePairsOfBands]]). */
   private def lshCandidatePairsFromSig(sig2: DataFrame): DataFrame = {
     val a = sig2.as("a"); val b = sig2.as("b")
     val onB0 = a.join(b, col("a.b0") === col("b.b0") &&
@@ -419,8 +392,7 @@ object Documents {
   }
 
   def dedupLshPairs(s: SparkSession, d: String): DataFrame =
-    lshCandidatePairs(s, d, refresh = true)
-      .orderBy(col("doc_a"), col("doc_b"))
+    lshCandidatePairs(s, d).orderBy(col("doc_a"), col("doc_b"))
 
   val dedupLshPairsSql: String = {
     val sig = minhashSignaturesSql.replace("ORDER BY doc_id", "")
@@ -441,25 +413,9 @@ object Documents {
     * (operators.ConnectedComponents); oracle: recursive-CTE transitive
     * closure + MIN. */
   def dedupClusters(s: SparkSession, d: String): DataFrame =
-    // OWNER of the shared CC label table (refresh = true): the hub
-    // contraction + iterative CC cost stays attributed here
-    clusterLabelsShared(s, d, refresh = true)
+    dedupClustersFromSig(s, d,
+      graft.operators.Materialize.eager(bandedSigs(s, d)))
       .orderBy(col("doc_id"))
-
-  /** Session-shared pinned CC label table (doc_id, cluster_rep):
-    * THREE registered queries run the identical contracted-CC label
-    * pass over the same corpus — dedup_clusters (owner),
-    * dedup_cluster_density and doc_leakage_safe_split each paid the
-    * full hub contraction + iterative min-label rounds standalone.
-    * Deterministic, so reuse is value-identical — the LPA-core
-    * sharing discipline applied to CC (r12 optimization round; A/B
-    * in OPTIMIZATION_r12.md). */
-  private def clusterLabelsShared(s: SparkSession, d: String,
-      refresh: Boolean = false): DataFrame =
-    graft.operators.Materialize.sharedPinned(s, s"cc_labels|$d", refresh) {
-      dedupClustersFromSig(s, d,
-        graft.operators.Materialize.eager(bandedSigs(s, d)))
-    }
 
   /** Cluster labels over a caller-materialized banded signature table
     * — unsorted (the oracle-facing sort lives in [[dedupClusters]];
@@ -542,29 +498,24 @@ object Documents {
     * endpoint labels agree by construction, so ONE join on doc_a
     * suffices.
     *
-    * The CC labels come from the session-shared pinned table
-    * ([[clusterLabelsShared]], owner: dedup_clusters) and the banded
-    * signatures from the session-shared signature scan, so this
-    * composite pays only its own pair join + aggs (round-8 verdict,
-    * completed by the r12 CC sharing). The pair path materializes a
-    * repartition of the stored signature blocks (a tiny shuffle, not
-    * a recompute) because the pair join's parallelism must be sized
-    * to its OUTPUT work — see the AQE note in [[lshCandidatePairs]]. */
+    * ONE materialized banded-signature table feeds both the CC labels
+    * and the pair join, so the tokenize+minhash scan runs once. The
+    * pair path materializes a repartition of the stored signature
+    * blocks (a tiny shuffle, not a recompute) because the pair join's
+    * parallelism must be sized to its OUTPUT work — see the AQE note
+    * in [[lshCandidatePairsOfBands]]. */
   def clusterDensity(s: SparkSession, d: String): DataFrame = {
-    // labels from the session-shared pinned CC table (owner:
-    // dedup_clusters); this query pays only the pair join + aggs
-    val labels = clusterLabelsShared(s, d)
-      .select(col("doc_id"), col("cluster_rep"))
+    val sig = graft.operators.Materialize.eager(bandedSigs(s, d))
+    // materialized: two consumers (sizes, the edge join) and the
+    // size-gated broadcast below reads its stored bytes
+    val labels = graft.operators.Materialize.eager(
+      dedupClustersFromSig(s, d, sig))
     val sizes = labels.groupBy(col("cluster_rep"))
       .agg(count(lit(1)).as("n_nodes"))
       .filter(col("n_nodes") >= 2)
-    // r13: read the session-pinned pair table instead of re-running the
-    // band join from the signature scan (identical rows — the pin IS
-    // lshCandidatePairsFromSig over the same signatures; the rebuild
-    // here predated the pin), and broadcast the O(V) label table via
-    // the size gate so the Σ bucket² pair stream is never exchanged
-    // for this join
-    val edges = lshCandidatePairs(s, d)
+    // broadcast the O(V) label table via the size gate so the
+    // Σ bucket² pair stream is never exchanged for this join
+    val edges = lshCandidatePairsOfBands(sig)
       .join(graft.operators.Materialize.hintSmall(labels)
         .select(col("doc_id").as("doc_a"), col("cluster_rep")),
         "doc_a")
@@ -605,15 +556,11 @@ object Documents {
     * the split stable under re-ingest id reassignment, the splitCol
     * contract. */
   def leakageSafeSplit(s: SparkSession, d: String): DataFrame = {
-    // labels from the session-shared pinned CC table (owner:
-    // dedup_clusters); this query pays only its pair + split joins
-    val labels = clusterLabelsShared(s, d)
-      .select(col("doc_id"), col("cluster_rep"))
-    // r13: the session-pinned pair table replaces the standalone
-    // signature repartition + band join + eager copy (identical rows,
-    // clusterDensity note)
-    val pairs = lshCandidatePairs(s, d)
-      .select(col("doc_a"), col("doc_b"))
+    // one materialized signature table for both subtrees (the
+    // clusterDensity discipline)
+    val sig = graft.operators.Materialize.eager(bandedSigs(s, d))
+    val labels = dedupClustersFromSig(s, d, sig)
+    val pairs = lshCandidatePairsOfBands(sig)
     val docs = documents(s, d).select(col("doc_id"), col("text"))
     // ONE assignment frame carrying both schemes' splits, so the
     // Σ bucket² pair table is joined twice (doc_a, doc_b), not twice
@@ -859,11 +806,8 @@ object Documents {
     * under a 64-bit digest key at corpus scale, the same reasoning
     * that moved decontaminate off xxhash64). */
   def dedupIncremental(s: SparkSession, d: String): DataFrame = {
-    // r13: band strings derive from the session-shared signature pin
-    // (identical values — the pin IS minhashSignatures materialized);
-    // the standalone rebuild paid the tokenize+minhash agg again
     val sig2 = graft.operators.Materialize.eager(
-      minhashSigShared(s, d).select(col("doc_id"),
+      signaturesOf(documents(s, d)).select(col("doc_id"),
         concat(lit("b0_"), col("mh0"), lit("_"), col("mh1")).as("b0"),
         concat(lit("b1_"), col("mh2"), lit("_"), col("mh3")).as("b1"))
         .repartition(s.sparkContext.defaultParallelism))
@@ -940,13 +884,10 @@ object Documents {
   def ngramJaccard(s: SparkSession, d: String): DataFrame = {
     // shuffle/join on the 64-bit shingle hash, not the string (same
     // counts modulo 2^-64 collisions; oracle compares final pairs).
-    // Within ONE query ReuseExchange already shares the subtree (the
-    // round-6 cold A/B: 2.09 s unpersisted vs 2.35 s persisted), but
-    // the SESSION-shared pinned table wins across the ≥3 queries that
-    // rebuild it standalone (containment, precision audit) — verdict
-    // r9 #6; A/B in BASELINE.md. This query OWNS the table
-    // (refresh=true: its bench time keeps the shingle-scan cost).
-    val shingled = shingledHashed(s, d, refresh = true)
+    // Lazy despite two consumers: ReuseExchange already shares the
+    // subtree within the one job (the round-6 cold A/B: 2.09 s
+    // unpersisted vs 2.35 s persisted).
+    val shingled = shingledHashed(s, d)
     val a = shingled.as("a"); val b = shingled.as("b")
     val inter = a.join(b, col("a.sh") === col("b.sh") &&
         col("a.source") === col("b.source") &&
@@ -1015,7 +956,7 @@ object Documents {
     *
     * Scale shape: identical topology to ngramJaccard (shingle-hash
     * bucketed same-source self-join — per-shingle bucket bounded, no
-    * doc × doc), sharing the session-pinned shingle table with it. */
+    * doc × doc), on the same lazy shingle table (ngramJaccard note). */
   def ngramContainment(s: SparkSession, d: String): DataFrame = {
     val shingled = shingledHashed(s, d)
     val a = shingled.as("a"); val b = shingled.as("b")
@@ -1431,11 +1372,10 @@ object Documents {
   def bandSweep(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.expressions.Window
-    // session-shared roots (round-9 verdict #6): the signature scan is
-    // reused (owner: dedup_minhash_sig); THIS query owns tok_distinct
-    // (refresh=true — its bench time keeps the tokenize+distinct cost)
-    val sig = minhashSigShared(s, d)
-    val tok = tokDistinct(s, d, refresh = true)
+    // both roots materialized: each config reads the signatures, and
+    // card plus every config's two intersection joins read the tokens
+    val sig = graft.operators.Materialize.eager(signaturesOf(documents(s, d)))
+    val tok = graft.operators.Materialize.eager(tokDistinct(s, d))
     val card = graft.operators.Materialize.eager(
       tok.groupBy(col("doc_id")).agg(count(lit(1)).as("nw")))
     def config(bands: Column, b: Int, r: Int): DataFrame = {
@@ -1592,17 +1532,14 @@ object Documents {
     * the four thresholds are four tiny aggregations over it. */
   def thresholdSweep(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // session-shared candidate pairs + token scan (round-9 verdict
-    // #6): this query's cand table IS lshCandidatePairs — the
-    // standalone sig2 rebuild paid the tokenize+minhash+band joins a
-    // second time for identical rows
     val cand = lshCandidatePairs(s, d)
     val wCap = Window.partitionBy(col("doc_b")).orderBy(
       md5(concat(col("doc_a").cast("string"), lit("_"),
         col("doc_b").cast("string"))))
     val capped = cand.withColumn("rk", row_number().over(wCap))
       .filter(col("rk") <= 16).select(col("doc_a"), col("doc_b"))
-    val tok = tokDistinct(s, d)
+    // materialized: card and both intersection joins read it
+    val tok = graft.operators.Materialize.eager(tokDistinct(s, d))
     val card = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("nw"))
     val jac = graft.operators.Materialize.eager(capped
       .join(tok.select(col("doc_id").as("doc_a"), col("word")), "doc_a")
@@ -1688,9 +1625,7 @@ object Documents {
     "doc_filter_group_count" -> Query(filterGroupCount, filterGroupCountSql),
     "doc_metadata_agg" -> Query(metadataAgg, metadataAggSql),
     "dedup_exact" -> Query(dedupExact, dedupExactSql),
-    // OWNER of the shared signature scan: always rebuilds + re-pins
-    "dedup_minhash_sig" ->
-      Query((s, d) => minhashSigShared(s, d, refresh = true), minhashSignaturesSql),
+    "dedup_minhash_sig" -> Query(minhashSignatures, minhashSignaturesSql),
     "dedup_lsh_pairs" -> Query(dedupLshPairs, dedupLshPairsSql),
     "dedup_clusters" -> Query(dedupClusters, dedupClustersSql, Some(dedupClustersScripted)),
     "dedup_cluster_density" ->

@@ -27,37 +27,30 @@ import graft.Query
   */
 object GraphRank {
 
-  /** Session-shared pinned doc↔band-hub incidence table (doc_id, hub),
-    * distinct: BOTH rank queries over the bipartite duplication graph
-    * (pagerank_dups = owner, hits_scores) derive their edge lists from
-    * this same table — each previously paid the explode + hub
-    * aggregate + join + distinct standalone. Band keys stay md5-concat
-    * strings (the oracle groups on the same values); deterministic, so
-    * reuse is value-identical (r12 optimization round; A/B in
-    * OPTIMIZATION_r12.md). */
-  private def docHubShared(s: SparkSession, d: String,
-      refresh: Boolean = false): DataFrame =
-    graft.operators.Materialize.sharedPinned(s, s"doc_hub|$d", refresh) {
-      // materialized once: docBand feeds BOTH the hub aggregate and
-      // the join back, and each side would otherwise recompute the
-      // full MinHash signature pipeline (shingle + 4 hash folds/doc)
-      val docBand = graft.operators.Materialize.eager(
-        Documents.minhashSigShared(s, d) // session-shared signature scan
-          .select(col("doc_id"),
-            explode(array(
-              concat(lit("b0_"), col("mh0"), lit("_"), col("mh1")),
-              concat(lit("b1_"), col("mh2"), lit("_"), col("mh3"))))
-              .as("band")))
-      val hubs = docBand.groupBy(col("band"))
-        .agg(min(col("doc_id")).as("hub"))
-      docBand.join(hubs, "band")
-        .select(col("doc_id"), col("hub")).distinct()
-    }
+  /** Doc↔band-hub incidence table (doc_id, hub), distinct: BOTH rank
+    * queries over the bipartite duplication graph (pagerank_dups,
+    * hits_scores) derive their edge lists from it. Band keys stay
+    * md5-concat strings (the oracle groups on the same values). */
+  private def docHubOf(s: SparkSession, d: String): DataFrame = {
+    // materialized once: docBand feeds BOTH the hub aggregate and
+    // the join back, and each side would otherwise recompute the
+    // full MinHash signature pipeline (shingle + 4 hash folds/doc)
+    val docBand = graft.operators.Materialize.eager(
+      Documents.signaturesOf(graft.Tables.documents(s, d))
+        .select(col("doc_id"),
+          explode(array(
+            concat(lit("b0_"), col("mh0"), lit("_"), col("mh1")),
+            concat(lit("b1_"), col("mh2"), lit("_"), col("mh3"))))
+            .as("band")))
+    val hubs = docBand.groupBy(col("band"))
+      .agg(min(col("doc_id")).as("hub"))
+    docBand.join(hubs, "band")
+      .select(col("doc_id"), col("hub")).distinct()
+  }
 
   def pagerankDupGraph(s: SparkSession, d: String): DataFrame = {
-    // OWNER of the shared doc↔hub table (refresh = true): the build
-    // cost stays attributed to this query every pass
-    val docHub = docHubShared(s, d, refresh = true)
+    // materialized: both edge directions read it
+    val docHub = graft.operators.Materialize.eager(docHubOf(s, d))
     val edges = docHub
       .select((col("doc_id") * 2).as("src"), (col("hub") * 2 + 1).as("dst"))
       .union(docHub
@@ -126,11 +119,8 @@ object GraphRank {
     * O(E) joins per round on O(docs×bands)=O(n) edges, 1-row
     * broadcast normalizers, zero driver actions. */
   def hitsScores(s: SparkSession, d: String): DataFrame = {
-    // doc↔hub incidence from the session-shared pinned table (owner:
-    // pagerank_dups) — identical values, the build paid once per pass
-    val docHub = docHubShared(s, d)
     graft.operators.Hits.run(
-        docHub.select(col("doc_id").as("src"), col("hub").as("dst")),
+        docHubOf(s, d).select(col("doc_id").as("src"), col("hub").as("dst")),
         nIter = HitsIters)
       .select(col("id").as("doc_id"), col("hub_fp"))
       .orderBy(col("doc_id"))
@@ -228,19 +218,8 @@ object GraphRank {
     * extra full shuffle.) Wedges close against the full undirected
     * edge set via one equi-join; the final 1-row aggregates combine
     * via broadcast (whitelisted in PlanSpec). */
-  def triangleCount(s: SparkSession, d: String): DataFrame = {
-    val edges = graft.operators.Materialize.eager(
-      Documents.lshCandidatePairs(s, d)
-        .select(col("doc_a").as("u"), col("doc_b").as("v")))
-    // deg serves the shared ranked-adjacency build (orientation arms)
-    // AND the node-stats aggregate below — the session-shared pinned
-    // degree table (owner: graph_degree_histogram)
-    val deg = sharedDegrees(s, d)
-    // OWNER of the shared ranked adjacency (refresh = true): the
-    // orientation + md5 + rank-window cost stays attributed here
-    triangleCountParts(edges, deg,
-      rankedAdjacency(s, d, refresh = true)(rankedAdjacencyOn(edges, deg)))
-  }
+  def triangleCount(s: SparkSession, d: String): DataFrame =
+    triangleCountOn(Documents.lshCandidatePairs(s, d))
 
   private val CapK = 64
 
@@ -248,23 +227,6 @@ object GraphRank {
   private def degreesOf(edges: DataFrame): DataFrame =
     edges.select(col("u").as("id")).union(edges.select(col("v").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("dg"))
-
-  /** Session-shared pinned degree table (id, dg) of the LSH candidate
-    * graph — FIVE registered queries derive this same per-node count
-    * from the same pinned pair table (degree_histogram = owner with
-    * refresh=true, so the 2|E| agg's cost stays attributed to exactly
-    * one query; triangle_count, neighbor_jaccard,
-    * degree_assortativity and kcore's round-0 read the stored O(V)
-    * blocks). Deterministic, so reuse is value-identical — the
-    * lsh_pairs/ranked-adjacency sharing discipline applied to the
-    * degree agg (r12 optimization round, guide §2.4; A/B in
-    * OPTIMIZATION_r12.md). */
-  private def sharedDegrees(s: SparkSession, d: String,
-      refresh: Boolean = false): DataFrame =
-    graft.operators.Materialize.sharedPinned(s, s"graph_deg|$d", refresh) {
-      degreesOf(Documents.lshCandidatePairs(s, d)
-        .select(col("doc_a").as("u"), col("doc_b").as("v")))
-    }
 
   /** md5-ranked capped oriented adjacency (src, dst, rk ≤ [[CapK]]) of
     * an undirected edge list — the Suri–Vassilvitskii build both
@@ -310,21 +272,6 @@ object GraphRank {
     thinned.withColumn("rk", row_number().over(wr))
       .filter(col("rk") <= CapK).select(col("src"), col("dst"), col("rk"))
   }
-
-  /** Session-shared pinned [[rankedAdjacencyOn]] of the LSH candidate
-    * graph — two registered queries (triangle_count = owner,
-    * local_clustering) share it. Attribution caveat, not a free
-    * lunch: in sorted single-pass run order local_clustering builds
-    * first and the owner's refresh=true rebuilds anyway, so a
-    * one-pass Verify session pays the build twice; the sharing wins
-    * in min-of-two benchmarks (the non-owner's second pass reads the
-    * pin) and in any session where other consumers follow the owner.
-    * `build` is only evaluated when this call actually builds. */
-  private def rankedAdjacency(s: SparkSession, d: String,
-      refresh: Boolean = false)(build: => DataFrame): DataFrame =
-    graft.operators.Materialize.sharedPinned(s, s"ranked_adj|$d", refresh) {
-      build
-    }
 
   /** Core count over caller-supplied undirected edges (doc_a < doc_b,
     * distinct) — separated so specs can plant known triangle motifs. */
@@ -450,9 +397,9 @@ object GraphRank {
     * tighter bands — a finer instrument than one global number.
     *
     * Same Suri–Vassilvitskii machinery as [[triangleCount]] — in fact
-    * the SAME session-shared ranked adjacency ([[rankedAdjacency]]:
-    * degree orientation, deterministic md5 Bernoulli pre-thin,
-    * md5-ordered rank), of which this query takes the rk ≤
+    * the SAME ranked adjacency ([[rankedAdjacencyOn]]: degree
+    * orientation, deterministic md5 Bernoulli pre-thin, md5-ordered
+    * rank), of which this query takes the rk ≤
     * [[LocalCapK]] = 32 prefix: the wedge join is HARD-bounded at
     * O(n·C(K,2)) whatever the density, each node's cc is the standard
     * md5-sampled estimator (exact whenever its oriented out-degree
@@ -460,17 +407,8 @@ object GraphRank {
     * tested-denominator honesty column. Centers with fewer than 2
     * capped out-edges have no wedge to test and are excluded (their
     * cc is undefined, not zero). */
-  def localClustering(s: SparkSession, d: String): DataFrame = {
-    val edges = graft.operators.Materialize.eager(
-      Documents.lshCandidatePairs(s, d)
-        .select(col("doc_a").as("u"), col("doc_b").as("v")))
-    // the deg fetch lives INSIDE the by-name block: on a shared-pin
-    // hit this query pays neither the degree agg nor the rank window;
-    // on a cold build the degrees come from the shared pinned table
-    localClusteringParts(edges, rankedAdjacency(s, d) {
-      rankedAdjacencyOn(edges, sharedDegrees(s, d))
-    })
-  }
+  def localClustering(s: SparkSession, d: String): DataFrame =
+    localClusteringOn(Documents.lshCandidatePairs(s, d))
 
   private val LocalCapK = 32
 
@@ -486,11 +424,10 @@ object GraphRank {
 
   private def localClusteringParts(edges: DataFrame,
       ranked: DataFrame): DataFrame = {
-    // K = 32 cap = the rk ≤ 32 PREFIX of the session-shared K = 64
+    // K = 32 cap = the rk ≤ 32 PREFIX of triangle_count's K = 64
     // ranking (same md5 order, same 2·64 pre-thin): a deterministic
-    // md5 sample exactly as before, identical to a direct K = 32 rank
-    // wherever out-degrees ≤ 64·2, and the expensive orientation +
-    // rank window is computed once per session instead of per query
+    // md5 sample, identical to a direct K = 32 rank wherever
+    // out-degrees ≤ 64·2, from the one ranked-adjacency construction
     val capped = ranked.filter(col("rk") <= LocalCapK)
       .select(col("src"), col("dst"))
     // size-gated broadcast of the y-side (r13, triangleCountParts note)
@@ -519,10 +456,10 @@ object GraphRank {
 
   val localClusteringSql: String = {
     val sig = Documents.minhashSignaturesSql.replace("ORDER BY doc_id", "")
-    // mirrors the SHARED K=64 ranking (pre-thin threshold 2·64·2¹⁶ =
+    // mirrors the K=64 ranking (pre-thin threshold 2·64·2¹⁶ =
     // 8388608, identical to triangle_count's CTEs) then takes the
     // rk ≤ LocalCapK = 32 prefix — the engine reads the same prefix
-    // of the session-shared ranked adjacency
+    // of the same ranked adjacency
     s"""WITH sig AS ($sig),
        |banded AS (
        |  SELECT doc_id, 'b0_' || mh0 || '_' || mh1 AS band FROM sig
@@ -614,9 +551,9 @@ object GraphRank {
     val edges = graft.operators.Materialize.eager(
       Documents.lshCandidatePairs(s, d)
         .select(col("doc_a").as("u"), col("doc_b").as("v")))
-    // session-shared pinned degree table (owner: degree_histogram) —
-    // same values as the inline 2|E| agg this replaced
-    val deg = sharedDegrees(s, d)
+    // materialized: center, the neighbor-sum join (size-gated
+    // broadcast) and the node-level join all read it
+    val deg = graft.operators.Materialize.eager(degreesOf(edges))
     // any constant center preserves Pearson exactly (shift-invariant);
     // ⌊mean node degree⌋ keeps the deviations maxdeg-bounded
     val center = deg.agg(count(lit(1)).as("n_nodes"),
@@ -631,7 +568,7 @@ object GraphRank {
     // equalities, so the output (and the oracle) is bit-unchanged.
     val directed = edges.select(col("u").as("node"), col("v").as("other"))
       .union(edges.select(col("v").as("node"), col("u").as("other")))
-    // size-gated broadcast of the pinned degree table (r13): the 2|E|
+    // size-gated broadcast of the degree table (r13): the 2|E|
     // directed stream was shuffle-written for the SMJ-planned join
     // before AQE's broadcast rewrite
     val nbrSum = directed.crossJoin(broadcast(center))
@@ -732,11 +669,7 @@ object GraphRank {
     * consumers). No collect anywhere: the converged flag is computed
     * in-plan from the final degree table. */
   def kcore(s: SparkSession, d: String): DataFrame =
-    // round-0 degrees come from the session-shared pinned degree
-    // table (owner: degree_histogram) — identical values, one less
-    // 2|E| agg per run
-    kcoreOn(Documents.lshCandidatePairs(s, d),
-      deg0 = Some(sharedDegrees(s, d)))
+    kcoreOn(Documents.lshCandidatePairs(s, d))
 
   private[queries] val CoreK = 3
   // 32-round budget: with the fixpoint early-exit the Spark side only
@@ -750,8 +683,8 @@ object GraphRank {
 
   /** Core over caller-supplied undirected edges — separated so specs
     * can plant known cores and slow-peeling tails. */
-  def kcoreOn(pairs: DataFrame, k: Int = CoreK, rounds: Int = CoreRounds,
-      deg0: Option[DataFrame] = None): DataFrame = {
+  def kcoreOn(pairs: DataFrame, k: Int = CoreK, rounds: Int = CoreRounds)
+      : DataFrame = {
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("id")).union(e.select(col("v").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("dg"))
@@ -766,8 +699,7 @@ object GraphRank {
     // exactly one per DISTINCT edge set (r12 optimization round,
     // guide §2.4 — the values are identical, only the pass count
     // changes; A/B in OPTIMIZATION_r12.md).
-    var deg = deg0.getOrElse(
-      graft.operators.Materialize.eager(degrees(edges)))
+    var deg = graft.operators.Materialize.eager(degrees(edges))
     val nInit = deg.count()
     val init = deg.agg(count(lit(1)).as("n_nodes_initial"))
       .crossJoin(broadcast(edges.agg(count(lit(1)).as("n_edges_initial"))))
@@ -962,19 +894,22 @@ object GraphRank {
   private[queries] val LpaRounds = 8
 
   def labelPropagation(s: SparkSession, d: String): DataFrame =
-    lpaStats(graft.Tables.documents(s, d).select(col("doc_id")),
-      lpaCoreFor(s, d, LpaRounds, refresh = true))
+    labelPropagationOn(graft.Tables.documents(s, d).select(col("doc_id")),
+      lpaPairs(s, d))
 
-  /** The shared LPA core: runs the synchronous rounds and returns
-    * (labels, directed edges, converged, rounds that changed a
-    * label). Both graph_label_propagation and graph_modularity build
-    * on this — identical ops, so the LPA query's output is
-    * bit-unchanged by the extraction. */
+  /** The LSH candidate pairs, materialized: the LPA edge build reads
+    * them twice (both directions) and [[graft.operators.Materialize.eagerKeyed]]
+    * sizes its partitions from their stored bytes. */
+  private def lpaPairs(s: SparkSession, d: String): DataFrame =
+    graft.operators.Materialize.eager(Documents.lshCandidatePairs(s, d))
+
+  /** The LPA core: runs the synchronous rounds and returns (labels,
+    * directed edges, converged, rounds that changed a label). Both
+    * graph_label_propagation and graph_modularity build on this —
+    * identical ops, so the LPA query's output is bit-unchanged by the
+    * extraction. */
   private[queries] def lpaLabelsOn(docs: DataFrame, pairs: DataFrame,
-      rounds: Int,
-      checkpoint: DataFrame => DataFrame =
-        graft.operators.Materialize.eagerCheckpoint)
-      : (DataFrame, DataFrame, Boolean, Int) = {
+      rounds: Int): (DataFrame, DataFrame, Boolean, Int) = {
     // Edges materialized HASH-PARTITIONED AND SORTED BY u (r13,
     // guide §2.4): the neighbor join below is keyed on u EVERY round,
     // and the plain eager layout made each round's initial SMJ plan
@@ -999,7 +934,7 @@ object GraphRank {
     // either way (same equi-join).
     def small(df: DataFrame): DataFrame =
       graft.operators.Materialize.hintSmall(df)
-    var labels = checkpoint(
+    var labels = graft.operators.Materialize.eagerCheckpoint(
       docs.select(col("doc_id").as("id"), col("doc_id").as("label")))
     var converged = false
     var r = 0
@@ -1051,7 +986,7 @@ object GraphRank {
       val two63 = lit(new java.math.BigDecimal("9223372036854775808"))
       val two63m1 = lit(new java.math.BigDecimal("9223372036854775807"))
       val decoded = two63m1 - (col("s") % two63)
-      val next = checkpoint(
+      val next = graft.operators.Materialize.eagerCheckpoint(
         nbr.union(labels.select(col("id"), col("label")))
           .groupBy(col("id"), col("label")).agg(count(lit(1)).as("cnt"))
           .groupBy(col("id"))
@@ -1070,79 +1005,6 @@ object GraphRank {
     }
     val roundsUsed = if (converged) r - 1 else r
     (labels, edges, converged, roundsUsed)
-  }
-
-  /** Session-scoped shared LPA core for the REGISTERED (session,
-    * dataDir) path: graph_label_propagation always recomputes and
-    * refreshes the cache (its benchmark timing stays the true cost of
-    * the rounds), while graph_modularity reuses a live entry and only
-    * pays its marginal joins — the dedup_cluster_density
-    * share-the-scan discipline lifted from one query to the session
-    * (round-9 verdict #2). Entries pin their label/edge blocks via
-    * [[graft.operators.Materialize.eagerPinned]] so a harness's
-    * between-query freeAll cannot drop them mid-session; replacing an
-    * entry unpins (frees) the old blocks. Determinism makes the reuse
-    * sound: the rounds are a pure function of (docs, pairs), so the
-    * cached labels are bit-identical to a recompute. */
-  private val lpaCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String, Int),
-    (DataFrame, DataFrame, Boolean, Int)]()
-
-  // contexts whose Materialize release hook (evicting this cache) is
-  // already registered — one hook per context, not per refresh
-  private val lpaHookOn = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[
-      org.apache.spark.SparkContext, java.lang.Boolean]())
-
-  private def lpaCoreFor(s: SparkSession, d: String, rounds: Int,
-      refresh: Boolean): (DataFrame, DataFrame, Boolean, Int) = {
-    val key = (s.sparkContext, d, rounds)
-    val hit = lpaCache.get(key)
-    if (!refresh && hit != null) hit
-    else {
-      val core = lpaLabelsOn(
-        graft.Tables.documents(s, d).select(col("doc_id")),
-        Documents.lshCandidatePairs(s, d), rounds,
-        // intermediate rounds stay ordinary checkpoints (freed by the
-        // harness as usual); only the FINAL labels frame is pinned —
-        // in place (r13): the loop's outputs are already checkpoint-
-        // backed, so pinExisting skips the eagerPinned re-copy of the
-        // O(E) edge table (a full extra pass + double storage) and
-        // keeps the edges' keyed layout, which a re-checkpoint under
-        // AQE would erase (Materialize.eagerKeyed rationale)
-        graft.operators.Materialize.eagerCheckpoint)
-      val pinnedCore = (
-        graft.operators.Materialize.pinExisting(core._1),
-        graft.operators.Materialize.pinExisting(core._2),
-        core._3, core._4)
-      // evicted together with Materialize's shared registry (explicit
-      // releaseShared or context stop), so this cache's strong refs
-      // never outlive the session they serve; one hook per context
-      if (lpaHookOn.add(s.sparkContext))
-        graft.operators.Materialize.onRelease(s.sparkContext) { () =>
-          lpaHookOn.remove(s.sparkContext)
-          val it = lpaCache.keySet().iterator()
-          while (it.hasNext) {
-            val k = it.next()
-            if (k._1 eq s.sparkContext) {
-              val old = lpaCache.remove(k)
-              if (old != null) {
-                graft.operators.Materialize.unpinKeep(old._1)
-                graft.operators.Materialize.unpinKeep(old._2)
-              }
-            }
-          }
-        }
-      val old = lpaCache.put(key, pinnedCore)
-      if (old != null) {
-        // unpin WITHOUT freeing: a concurrent graph_modularity that
-        // fetched the old core just before this swap keeps working;
-        // the displaced blocks revert to the weak-tracked lifetime
-        graft.operators.Materialize.unpinKeep(old._1)
-        graft.operators.Materialize.unpinKeep(old._2)
-      }
-      pinnedCore
-    }
   }
 
   def labelPropagationOn(docs: DataFrame, pairs: DataFrame,
@@ -1187,17 +1049,13 @@ object GraphRank {
     * deterministic on both engines — snap ⌊×1000+0.5⌋ (the
     * assortativity stance).
     *
-    * Scale shape: the LPA rounds (O(E) each, shared core) dominate;
+    * Scale shape: the LPA rounds (O(E) each, the LPA core) dominate;
     * on top sit one edge-level label join (internal count), one
     * node-level label join + two hash-aggs (Σd_c²), and a broadcast
     * assembly of four 1-row aggregates. Nothing quadratic. */
   def modularity(s: SparkSession, d: String): DataFrame =
-    // reuses a live LPA core from this session (refresh = false): in a
-    // suite that just ran graph_label_propagation this query pays only
-    // its marginal label joins — the cached labels are bit-identical
-    // to a recompute (deterministic rounds), so the output is unchanged
-    modularityStats(graft.Tables.documents(s, d).select(col("doc_id")),
-      lpaCoreFor(s, d, LpaRounds, refresh = false))
+    modularityOn(graft.Tables.documents(s, d).select(col("doc_id")),
+      lpaPairs(s, d))
 
   def modularityOn(docs: DataFrame, pairs: DataFrame,
       rounds: Int = LpaRounds): DataFrame =
@@ -1206,7 +1064,7 @@ object GraphRank {
   private def modularityStats(docs: DataFrame,
       core: (DataFrame, DataFrame, Boolean, Int)): DataFrame = {
     val (labels, edges, converged, roundsUsed) = core
-    // labels is the pinned O(V) core table: the size-gated broadcast
+    // labels is the materialized O(V) core table: the size-gated broadcast
     // hint (Materialize.hintSmall, r13) makes the three label joins
     // static broadcast joins, so the O(E) edge scan is never exchanged
     // (the SMJ-planned form shuffle-wrote the 15 M-row edge table
@@ -1335,32 +1193,27 @@ object GraphRank {
     * Emitted degrees ARE the capped degrees (the sampled-estimator
     * stance: exact below the cap, declared sample above it). */
   def neighborJaccard(s: SparkSession, d: String): DataFrame =
-    // per-node degree from the session-shared pinned degree table
-    // (owner: degree_histogram): a node's directed-occurrence count IS
-    // its undirected degree, so the values are identical and the 2|E|
-    // agg is not re-paid here
-    neighborJaccardOn(Documents.lshCandidatePairs(s, d),
-      deg0 = Some(sharedDegrees(s, d)
-        .select(col("id").as("node"), col("dg"))))
+    neighborJaccardOn(Documents.lshCandidatePairs(s, d))
 
   /** Core audit over caller-supplied undirected edges (doc_a <
     * doc_b, distinct) — separated so specs can plant known motifs. */
-  def neighborJaccardOn(pairs: DataFrame,
-      deg0: Option[DataFrame] = None): DataFrame = {
+  def neighborJaccardOn(pairs: DataFrame): DataFrame = {
     val edges = graft.operators.Materialize.eager(
       pairs.select(col("doc_a").as("u"), col("doc_b").as("v")))
     val directed = edges
       .select(col("u").as("node"), col("v").as("nbr"))
       .union(edges.select(col("v").as("node"), col("u").as("nbr")))
-    val deg = deg0.getOrElse(
+    // a node's directed-occurrence count IS its undirected degree;
+    // materialized so the size-gated broadcast below can read its
+    // stored bytes
+    val deg = graft.operators.Materialize.eager(
       directed.groupBy(col("node")).agg(count(lit(1)).as("dg")))
     // one digest shared by the pre-thin filter and BOTH cap windows.
-    // hintSmall (r13): when deg is the materialized shared degree
-    // table, broadcast it statically so the 2|E| directed stream is
-    // never exchanged for this join (the SMJ-planned form shuffle-
-    // wrote all 15 M rows before AQE's rewrite — JaccardProbe V1 vs
-    // the full block: 2.0 s vs 4.4 s warm); a lazy deg fallback is
-    // left unhinted (hintSmall is a no-op on unmaterialized frames)
+    // hintSmall (r13): broadcast the O(V) degree table statically so
+    // the 2|E| directed stream is never exchanged for this join (the
+    // SMJ-planned form shuffle-wrote all 15 M rows before AQE's
+    // rewrite — JaccardProbe V1 vs the full block: 2.0 s vs 4.4 s
+    // warm)
     val hashed = directed.join(
       graft.operators.Materialize.hintSmall(deg), "node")
       .withColumn("m", md5(concat(col("node").cast("string"), lit("|"),
@@ -1508,14 +1361,13 @@ object GraphRank {
     * signal that predicts CC blowup, and the isolated-node mass is
     * the fraction of the corpus dedup will never touch.
     *
-    * Scale shape: one hash-agg over the (session-shared, Σ bucket²-
-    * bounded) pair table for degrees, a left join against the doc
+    * Scale shape: one hash-agg over the (Σ bucket²-bounded) pair
+    * table for degrees, a left join against the doc
     * spine for the zero-degree mass, then a ≤64-row bucket agg.
     * Nothing quadratic; the histogram is O(E) + O(V). */
   def degreeHistogram(s: SparkSession, d: String): DataFrame = {
-    // OWNER of the shared degree table (refresh = true): the 2|E| agg
-    // cost stays attributed to this query every pass
-    val deg = sharedDegrees(s, d, refresh = true)
+    val deg = degreesOf(Documents.lshCandidatePairs(s, d)
+        .select(col("doc_a").as("u"), col("doc_b").as("v")))
       .select(col("id"), col("dg").as("deg"))
     graft.Tables.documents(s, d).select(col("doc_id").as("id"))
       .join(deg, Seq("id"), "left")

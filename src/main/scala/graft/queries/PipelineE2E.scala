@@ -77,17 +77,12 @@ object PipelineE2E {
       .select(col("doc_id"), col("source"), col("text")))
 
     // 3. near-dup survivorship: banded candidates, capped confirm.
-    // The token table and the banded candidate-pair table are the
-    // session-shared pinned scans (Documents.tokDistinct /
-    // lshCandidatePairs — owners: the dedup family, which rebuilds
-    // them with refresh=true so their build cost stays attributed
-    // there). Reuse is value-identical by construction: a doc's
-    // minhash signature depends only on its own tokens, so the full
-    // table's pairs restricted to exact-dedup survivors equal the
-    // pairs computed among the survivors (the dedup_lsh_recall
-    // equivalence, proven by its oracle every run) — an earlier
-    // inline rebuild of the tokenize+minhash+band subtree here was
-    // the single largest cost of this query (cold A/B in BASELINE.md).
+    // The token table and the candidate pairs are built over the FULL
+    // corpus (Documents.tokDistinct / lshCandidatePairs) and then
+    // restricted: a doc's minhash signature depends only on its own
+    // tokens, so the full table's pairs restricted to exact-dedup
+    // survivors equal the pairs computed among the survivors (the
+    // dedup_lsh_recall equivalence, proven by its oracle every run).
     // No restriction is needed on the token side at all: `inter` only
     // looks up doc ids the restricted pairs carry, and a doc's token
     // count is the same number in the full table.
@@ -100,7 +95,8 @@ object PipelineE2E {
     // decided from real bytes instead of never
     val exactIds = graft.operators.Materialize.hintSmall(exact)
       .select(col("doc_id"))
-    val tok = Documents.tokDistinct(s, d)
+    // materialized: card and both intersection joins read it
+    val tok = eager(Documents.tokDistinct(s, d))
     val cand = Documents.lshCandidatePairs(s, d)
       .join(exactIds.select(col("doc_id").as("doc_a")), Seq("doc_a"),
         "left_semi")

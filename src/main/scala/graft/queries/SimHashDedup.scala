@@ -173,12 +173,11 @@ object SimHashDedup {
     * Σ bucket² join, never n²); the comparison is one full-outer
     * equi-join on the pair key and a 1-row rollup. */
   def methodAgreement(s: SparkSession, d: String): DataFrame = {
-    // the UNSORTED non-owner pair accessor: this consumer aggregates,
-    // so the oracle-facing sort is waste, and calling the refresh
-    // OWNER (dedupLshPairs) here would rebuild the session-pinned
-    // table instead of reading it
-    val lsh = Documents.lshCandidatePairs(s, d)
-      .select(col("doc_a"), col("doc_b"))
+    // the UNSORTED pair accessor: this consumer aggregates, so the
+    // oracle-facing sort is waste; materialized because the count
+    // and the semi probe below both read it
+    val lsh = graft.operators.Materialize.eager(
+      Documents.lshCandidatePairs(s, d))
     // materialized: TWO consumers below (the n_sim count and the semi
     // probe side) would otherwise each re-run the banded simhash
     // self-join subtree
@@ -190,14 +189,14 @@ object SimHashDedup {
     // n_lsh_only = n_lsh − n_both and n_sim_only = n_sim − n_both.
     // The previous full-outer spelling forced a sort-merge join of the
     // Σ bucket²-sized LSH pair table against a ~dozen-row side (full
-    // outer cannot broadcast — guide §3.1); this form scans the pinned
+    // outer cannot broadcast — guide §3.1); this form scans the materialized
     // pair table twice (count + broadcast LEFT SEMI probe) and never
     // shuffles or sorts it. A/B + plan diff in OPTIMIZATION_r12.md;
     // value-identical, oracle hash unchanged.
     val nLsh = lsh.agg(count(lit(1)).cast("long").as("n_lsh"))
     val nSim = sim.agg(count(lit(1)).cast("long").as("n_sim"))
     // hintSmall (r13): sim is materialized ~dozen rows, so the semi
-    // probe plans as a broadcast join statically and the pinned pair
+    // probe plans as a broadcast join statically and the materialized pair
     // table is never exchanged (the un-hinted initial plan was SMJ —
     // the shuffle write of the big side ran before AQE's rewrite)
     val nBoth = lsh.join(graft.operators.Materialize.hintSmall(sim),

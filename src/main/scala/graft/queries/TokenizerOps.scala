@@ -160,11 +160,9 @@ object TokenizerOps {
     * doc-local sort inside one hash-agg group. */
   def spanRewrite(s: SparkSession, d: String): DataFrame = {
     val base = documents(s, d).select(col("doc_id"), col("text"))
-    // positional grams + dup-gram keys from the session-shared pinned
-    // tables (owner: text_duplicate_spans) — identical values, the
-    // tokenize + posexplode + min/max agg paid once per session
-    val grams = Documents.shingles3Pos(s, d)
-    val dup = Documents.dupGrams3(s, d)
+    // materialized: the dup-gram agg and the covered join both read it
+    val grams = graft.operators.Materialize.eager(Documents.shingles3Pos(s, d))
+    val dup = Documents.dupGrams3(grams)
     val covered = grams.join(dup, "g")
       .select(col("doc_id"),
         explode(sequence(col("pos"), col("pos") + 2)).as("cp"))

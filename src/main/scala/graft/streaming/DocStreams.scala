@@ -163,11 +163,11 @@ object DocStreams {
   /** [[ingestVerdictStream]] plus a release handle for its static
     * side. The eval shingle set is persisted for the life of the
     * streaming query; without the handle the only release paths are
-    * `Materialize.releaseShared` (which also drops every OTHER
-    * session-shared frame) or application end — a session cycling
-    * many ingest streams over DIFFERENT eval corpora would accumulate
-    * one pinned shingle set per corpus with no way to drop just the
-    * finished stream's. (Identical `evalDocs` plans do NOT stack:
+    * `Materialize.releaseShared`, which is optional and also frees
+    * every OTHER stream's static side, or application end — a session
+    * cycling many ingest streams over DIFFERENT eval corpora would
+    * accumulate one persisted shingle set per corpus with no way to
+    * drop just the finished stream's. (Identical `evalDocs` plans do NOT stack:
     * Spark's CacheManager dedupes same-plan persists.) Call the
     * handle after the stream STOPS — releasing under a live stream is
     * safe but degrades later micro-batches to a recompute; calling it

@@ -15,9 +15,10 @@ class ApiExampleSpec extends AnyFunSuite
   import spark.implicits._
 
   // the streaming-facade test below persists an eagerStatic eval side
-  // that lives until releaseShared (the in-test releaseShared call of
-  // the FIRST test runs before it) — honor the library contract here
-  // too so the shared test session stays cache-clean for later suites
+  // that lives until releaseShared or application end (the in-test
+  // releaseShared call of the FIRST test runs before it) — free it
+  // early here so the shared test session stays cache-clean for later
+  // suites
   override def afterAll(): Unit =
     GraftSession.releaseShared(spark)
 

@@ -42,38 +42,6 @@ class MaterializeSpec extends AnyFunSuite {
     }
   }
 
-  test("sharedPinned: survives freeAll; refresh keeps the displaced frame; releaseShared evicts") {
-    val key = s"spec_shared_${System.nanoTime()}"
-    var builds = 0
-    def get(refresh: Boolean, n: Long) =
-      Materialize.sharedPinned(spark, key, refresh) {
-        builds += 1; spark.range(n).toDF("id")
-      }
-    val baseline = spark.sparkContext.getPersistentRDDs.size
-    val v1 = get(refresh = false, 500L)
-    assert(builds == 1 && v1.count() == 500L)
-    // second consumer: registry hit, no rebuild
-    assert(get(refresh = false, 999L).count() == 500L && builds == 1)
-    // a harness freeAll between queries must NOT drop the pin
-    Materialize.freeAll(spark)
-    assert(v1.count() == 500L, "pinned blocks must survive freeAll")
-    // owner refresh: rebuilds AND leaves the displaced frame readable
-    // (unpinned, not freed) for any concurrent holder
-    val v2 = get(refresh = true, 600L)
-    assert(builds == 2 && v2.count() == 600L)
-    assert(v1.count() == 500L,
-      "refresh must not free the displaced frame under a live holder")
-    // public release: registry evicted (next get rebuilds), blocks
-    // revert to the weak-tracked lifetime so freeAll reclaims them
-    Materialize.releaseShared(spark)
-    Materialize.freeAll(spark)
-    assert(spark.sparkContext.getPersistentRDDs.size <= baseline,
-      "releaseShared + freeAll must reclaim all spec-pinned blocks")
-    assert(get(refresh = false, 700L).count() == 700L && builds == 3)
-    Materialize.releaseShared(spark)
-    Materialize.freeAll(spark)
-  }
-
   test("keyedPartitions: config floor at test scale, linear growth past it, bounded") {
     val adv = 64L * 1024 * 1024
     // unknown source bytes -> the config floor, always
@@ -96,28 +64,24 @@ class MaterializeSpec extends AnyFunSuite {
   test("dedup queries leave no persistent RDD residue (CC snapshots freed)") {
     val d = "/root/testdata/sf0.001"
     // CC's per-iteration label snapshots must be freed as the loop
-    // advances; only the FINAL snapshot (backing the returned frame),
-    // the frames materialized by the query builder itself, and the
-    // session-shared pinned scan (minhash_sig) may remain until plan
-    // GC / release. Run the full clustering query and check the
-    // executor-storage watermark stays bounded.
+    // advances; only the FINAL snapshot (backing the returned frame)
+    // and the frames materialized by the query builder itself may
+    // remain until plan GC / freeAll. Run the full clustering query
+    // and check the executor-storage watermark stays bounded.
     val baseline = spark.sparkContext.getPersistentRDDs.size
     val out = graft.queries.Documents.dedupClusters(spark, d)
     assert(out.count() > 0)
-    // residue is bounded by the per-query materializations (sig2,
-    // withHubs, final CC snapshot, the pinned shared signature scan)
-    // — NOT maxIter label snapshots (freed in-loop) and not CC's sym
-    // (unpersisted on exit)
+    // residue is exactly the per-query materializations (sig2,
+    // withHubs, final CC snapshot) — NOT maxIter label snapshots
+    // (freed in-loop) and not CC's sym (unpersisted on exit)
     val residue = spark.sparkContext.getPersistentRDDs.size - baseline
-    assert(residue <= 5,
+    assert(residue <= 3,
       s"unexpected RDD residue ($residue new): " +
         spark.sparkContext.getPersistentRDDs.keys.toSeq.sorted)
-    // release the pinned registry, then the harness hook drops even
-    // that bounded residue synchronously (freeAll alone must NOT drop
-    // the pinned scan — the sharedPinned spec above covers that)
-    Materialize.releaseShared(spark)
+    // nothing is pinned across queries: the harness hook alone drops
+    // even that bounded residue synchronously
     Materialize.freeAll(spark)
     assert(spark.sparkContext.getPersistentRDDs.size <= baseline,
-      "releaseShared + freeAll must release every materialization")
+      "freeAll must release every materialization")
   }
 }

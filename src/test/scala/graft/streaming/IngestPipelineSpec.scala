@@ -18,10 +18,10 @@ class IngestPipelineSpec extends AnyFunSuite
   import SparkTestSession._
   import spark.implicits._
 
-  // the library contract for ingestVerdictStream callers: the stream's
-  // static eval side stays persisted until releaseShared — honor it so
-  // the shared test session stays cache-clean for later suites
-  // (CacheHygieneSpec pins that global invariant)
+  // an ingestVerdictStream's static eval side stays persisted until
+  // releaseShared or application end — free it early so the shared
+  // test session stays cache-clean for later suites (CacheHygieneSpec
+  // pins that global invariant)
   override def afterAll(): Unit =
     graft.operators.Materialize.releaseShared(spark)
 
@@ -151,8 +151,8 @@ class IngestPipelineSpec extends AnyFunSuite
       "without dropping the session's other shared frames") {
     // the gap the handle closes: a session cycling ingest streams over
     // DIFFERENT eval corpora could otherwise only release a finished
-    // stream's shingle set via releaseShared — which also evicts every
-    // other session-shared pinned frame
+    // stream's shingle set via releaseShared — which also frees every
+    // other stream's static side
     val evalDocs = Seq((901L, "release handle eval corpus words"))
       .toDF("doc_id", "text")
     def stamped(rows: Seq[(Long, String, Int)]) =

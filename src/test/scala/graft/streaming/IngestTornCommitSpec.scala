@@ -28,7 +28,8 @@ class IngestTornCommitSpec extends AnyFunSuite
   import IngestTornCommitSpec._
 
   // release the eagerStatic eval side each ingestVerdictStream call
-  // persisted (library callers do this when their streams are done)
+  // persisted now rather than at application end (optional for
+  // library callers; it keeps the shared test session cache-clean)
   override def afterAll(): Unit =
     graft.operators.Materialize.releaseShared(spark)
 
