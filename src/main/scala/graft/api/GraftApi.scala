@@ -16,9 +16,9 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
   *
   * Build sessions with [[GraftSession.create]] (or install
   * [[graft.functions.GraftExtensions]] yourself): the native Catalyst
-  * expressions (`simhash64`, `cosine_sim_f`, `sq_dist_f`, …) and the
-  * as-of join planner strategy are session extensions, and several
-  * entry points depend on them.
+  * expressions (`simhash64`, `minhash`, `cosine_sim_f`, `sq_dist_f`,
+  * …) and the as-of join planner strategy are session extensions, and
+  * several entry points depend on them.
   *
   * Intermediates: multi-consumer tables are materialized through
   * [[graft.operators.Materialize]] (localCheckpoint policy — blocks

@@ -33,32 +33,20 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object SimHashImpl {
-  private val md5Local = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
+/** The pieces every text kernel (SimHash, MinHash) shares: one md5
+  * per thread and THE letter-run tokenizer. */
+private[functions] object TextKernel {
+  val md5: ThreadLocal[java.security.MessageDigest] =
+    new ThreadLocal[java.security.MessageDigest] {
+      override def initialValue(): java.security.MessageDigest =
+        java.security.MessageDigest.getInstance("MD5")
+    }
 
-  /** Per-token hash = first 8 bytes of md5(utf8(token)), big-endian.
-    * md5 (not FNV/xxhash) so the signature is engine-portable: any SQL
-    * engine with md5() reproduces these bit votes from the hex string
-    * (`dedup_simhash`'s oracle does exactly that nibble-by-nibble). */
-  def tokenHash64(s: String): Long = {
-    val d = md5Local.get()
-    d.reset()
-    val bytes = d.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    var h = 0L
-    var i = 0
-    while (i < 8) { h = (h << 8) | (bytes(i) & 0xFFL); i += 1 }
-    h
-  }
-
-  /** Token = maximal run of Unicode letters (reference tokenizer),
-    * iterated by code point so supplementary-plane letters match the
-    * regex engines' \p{L} semantics. Every occurrence votes (simhash
-    * weights = term frequency, Charikar 2002 §3). */
-  def simhash64(text: String): Long = {
-    val votes = new Array[Int](64)
+  /** Calls `f(start, end)` for each token of `text`: a maximal run of
+    * Unicode letters (reference tokenizer), iterated by code point so
+    * supplementary-plane letters match the regex engines' \p{L}
+    * semantics — the tokens of `Documents.tokens`. */
+  def foreachToken(text: String)(f: (Int, Int) => Unit): Unit = {
     var i = 0
     val n = text.length
     while (i < n) {
@@ -72,13 +60,36 @@ object SimHashImpl {
         i += Character.charCount(cp)
         if (i < n) cp = text.codePointAt(i)
       }
-      if (i > start) {
-        val h = tokenHash64(text.substring(start, i))
-        var b = 0
-        while (b < 64) {
-          if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-          b += 1
-        }
+      if (i > start) f(start, i)
+    }
+  }
+}
+
+object SimHashImpl {
+  /** Per-token hash = first 8 bytes of md5(utf8(token)), big-endian.
+    * md5 (not FNV/xxhash) so the signature is engine-portable: any SQL
+    * engine with md5() reproduces these bit votes from the hex string
+    * (`dedup_simhash`'s oracle does exactly that nibble-by-nibble). */
+  def tokenHash64(s: String): Long = {
+    val d = TextKernel.md5.get()
+    d.reset()
+    val bytes = d.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    var h = 0L
+    var i = 0
+    while (i < 8) { h = (h << 8) | (bytes(i) & 0xFFL); i += 1 }
+    h
+  }
+
+  /** Every token occurrence votes (simhash weights = term frequency,
+    * Charikar 2002 §3). */
+  def simhash64(text: String): Long = {
+    val votes = new Array[Int](64)
+    TextKernel.foreachToken(text) { (start, end) =>
+      val h = tokenHash64(text.substring(start, end))
+      var b = 0
+      while (b < 64) {
+        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
+        b += 1
       }
     }
     var out = 0L
@@ -123,6 +134,10 @@ object GraftFunctions {
     org.apache.spark.sql.functions.call_function(
       "char_ngram_counts", c, org.apache.spark.sql.functions.lit(n))
 
+  def minhash(c: Column, n: Int): Column =
+    org.apache.spark.sql.functions.call_function(
+      "minhash", c, org.apache.spark.sql.functions.lit(n))
+
   /** Spark's native bloom build/probe pair (the expressions behind
     * runtime row-level filtering), surfaced with their upstream SQL
     * names — BloomPrefilter keys its sketch on xxhash64 longs through
@@ -135,60 +150,55 @@ object GraftFunctions {
   def mightContain(bloom: Column, value: Column): Column =
     org.apache.spark.sql.functions.call_function("might_contain", bloom, value)
 
-  private[functions] def bloomAggFromExprs(exprs: Seq[Expression]) = {
-    val es = arity("bloom_filter_agg", 3)(exprs)
-    new org.apache.spark.sql.catalyst.expressions.aggregate
-      .BloomFilterAggregate(es(0), es(1), es(2))
-  }
+  /** A size argument (n, k) must be a foldable integer literal: it
+    * shapes the expression or its buffer, so it cannot vary per row. */
+  private def literalInt(name: String, param: String)(e: Expression): Int =
+    (if (e.foldable) e.eval() else null) match {
+      case v: Number => v.intValue()
+      case _ => throw new IllegalArgumentException(
+        s"$name: $param must be a literal integer")
+    }
 
-  private[functions] def mightContainFromExprs(exprs: Seq[Expression]) = {
-    val es = arity("might_contain", 2)(exprs)
-    org.apache.spark.sql.catalyst.expressions
-      .BloomFilterMightContain(es(0), es(1))
-  }
-
-  /** The n argument must be a foldable integer literal (it is part of
-    * the expression's shape, not per-row data). */
-  private[functions] def ngramFromExprs(exprs: Seq[Expression]): CharNgramCounts = {
-    val es = arity("char_ngram_counts", 2)(exprs)
-    if (!es(1).foldable)
-      throw new IllegalArgumentException(
-        "char_ngram_counts: n must be a literal integer")
-    CharNgramCounts(es(0), es(1).eval().asInstanceOf[Number].intValue())
-  }
-
-  /** The k argument must be a foldable integer literal (it sizes the
-    * aggregation buffer, so it cannot vary per row). */
-  private[functions] def mgFromExprs(exprs: Seq[Expression]): MisraGriesAgg = {
-    val es = arity("misra_gries", 2)(exprs)
-    if (!es(1).foldable)
-      throw new IllegalArgumentException(
-        "misra_gries: k must be a literal integer")
-    MisraGriesAgg(es(0), es(1).eval().asInstanceOf[Number].intValue())
+  /** Every graft SQL function: name, expression class, builder — the
+    * one table behind both [[registerAll]] and [[GraftExtensions]]. */
+  private[functions] val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = {
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    Seq(
+      ("simhash64", classOf[SimHash64],
+        es => SimHash64(arity("simhash64", 1)(es).head)),
+      ("cosine_sim_f", classOf[CosineSimF],
+        es => { val e = arity("cosine_sim_f", 2)(es); CosineSimF(e(0), e(1)) }),
+      ("sq_dist_f", classOf[SqDistF],
+        es => { val e = arity("sq_dist_f", 2)(es); SqDistF(e(0), e(1)) }),
+      ("misra_gries", classOf[MisraGriesAgg], es => {
+        val e = arity("misra_gries", 2)(es)
+        MisraGriesAgg(e(0), literalInt("misra_gries", "k")(e(1)))
+      }),
+      ("char_ngram_counts", classOf[CharNgramCounts], es => {
+        val e = arity("char_ngram_counts", 2)(es)
+        CharNgramCounts(e(0), literalInt("char_ngram_counts", "n")(e(1)))
+      }),
+      ("minhash", classOf[MinHash], es => {
+        val e = arity("minhash", 2)(es)
+        MinHash(e(0), literalInt("minhash", "n")(e(1)))
+      }),
+      ("bloom_filter_agg", classOf[BloomFilterAggregate], es => {
+        val e = arity("bloom_filter_agg", 3)(es)
+        new BloomFilterAggregate(e(0), e(1), e(2))
+      }),
+      ("might_contain", classOf[BloomFilterMightContain], es => {
+        val e = arity("might_contain", 2)(es)
+        BloomFilterMightContain(e(0), e(1))
+      }))
   }
 
   /** SQL + Column registration: SELECT simhash64(text) FROM ... */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(arity("simhash64", 1)(exprs).head),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim_f", exprs => {
-        val e = arity("cosine_sim_f", 2)(exprs); CosineSimF(e(0), e(1))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sq_dist_f", exprs => {
-        val e = arity("sq_dist_f", 2)(exprs); SqDistF(e(0), e(1))
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries", mgFromExprs, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_ngram_counts", ngramFromExprs, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_filter_agg", bloomAggFromExprs, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "might_contain", mightContainFromExprs, "built-in")
-  }
+  def registerAll(spark: SparkSession): Unit =
+    all.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, build, "built-in")
+    }
 }
 
 /** SparkSessionExtensions entry point: inject the graft functions at
@@ -199,38 +209,10 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    e.injectFunction((FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) =>
-        SimHash64(GraftFunctions.arity("simhash64", 1)(exprs).head)))
-    e.injectFunction((FunctionIdentifier("cosine_sim_f"),
-      new ExpressionInfo(classOf[CosineSimF].getName, "cosine_sim_f"),
-      (exprs: Seq[Expression]) => {
-        val es = GraftFunctions.arity("cosine_sim_f", 2)(exprs)
-        CosineSimF(es(0), es(1))
-      }))
-    e.injectFunction((FunctionIdentifier("sq_dist_f"),
-      new ExpressionInfo(classOf[SqDistF].getName, "sq_dist_f"),
-      (exprs: Seq[Expression]) => {
-        val es = GraftFunctions.arity("sq_dist_f", 2)(exprs)
-        SqDistF(es(0), es(1))
-      }))
-    e.injectFunction((FunctionIdentifier("misra_gries"),
-      new ExpressionInfo(classOf[MisraGriesAgg].getName, "misra_gries"),
-      (exprs: Seq[Expression]) => GraftFunctions.mgFromExprs(exprs)))
-    e.injectFunction((FunctionIdentifier("char_ngram_counts"),
-      new ExpressionInfo(classOf[CharNgramCounts].getName, "char_ngram_counts"),
-      (exprs: Seq[Expression]) => GraftFunctions.ngramFromExprs(exprs)))
-    e.injectFunction((FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_filter_agg"),
-      (exprs: Seq[Expression]) => GraftFunctions.bloomAggFromExprs(exprs)))
-    e.injectFunction((FunctionIdentifier("might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "might_contain"),
-      (exprs: Seq[Expression]) => GraftFunctions.mightContainFromExprs(exprs)))
+    GraftFunctions.all.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
     e.injectPlannerStrategy(_ => graft.plans.AsOfStrategy)
     e.injectOptimizerRule(_ => graft.plans.PruneAsOfJoinColumns)
   }

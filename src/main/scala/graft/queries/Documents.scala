@@ -24,7 +24,9 @@ object Documents {
     * (unicode.IsLetter complement ≈ \p{L}, wc.go:23-26), case-sensitive.
     * THE tokenizer of the corpus tier: shared by every query that
     * splits text (shingles, BM25/TF-IDF, repetition, chunking) so a
-    * definition tweak can never fork the surface. */
+    * definition tweak can never fork the surface. The native kernels
+    * (`simhash64`, `minhash`) walk the same letter runs in
+    * `functions.TextKernel.foreachToken`; MinHashSpec pins the two equal. */
   private[graft] def tokens(c: Column): Column =
     filter(split(c, "[^\\p{L}]+"), t => length(t) > 0)
 
@@ -179,52 +181,36 @@ object Documents {
     * (Broder '97). 4 signatures here; LSH banding in dedupLshPairs. */
   private[graft] val NSIG = 4
 
-  /** The signature+banding computation as a PURE PROJECTION over a
-    * documents frame (array_min over transform — no explode, no agg,
-    * no shuffle): (doc_id, b0, b1) with the same md5-minhash values
-    * and md5-concat band keys as the batch signature path, by shared
-    * construction. Interpreted (higher-order fns are codegen-fallback),
-    * so batch queries prefer [[minhashSignatures]]' codegen'd
-    * explode+partial-agg — but a STREAM needs statelessness, and this
-    * form is what streaming.DocStreams bands arriving docs with.
-    * DocStreamsSpec pins the two forms equal on the same input. */
-  private[graft] def bandedSignatureProjection(docs: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val sigs = (0 until NSIG).map(j =>
-      array_min(transform(col("ws"),
-        w => md5(concat(lit(j.toString), lit("|"), w)))).as(s"mh$j"))
-    docs
-      .withColumn("ws", array_distinct(tokens(col("text"))))
-      .filter(size(col("ws")) > 0) // token-less docs have no signature
-      .select(col("doc_id") +: sigs: _*)
-      .select(col("doc_id"),
-        concat(lit("b0_"), col("mh0"), lit("_"), col("mh1")).as("b0"),
-        concat(lit("b1_"), col("mh2"), lit("_"), col("mh3")).as("b1"))
-  }
-  def minhashSignatures(s: SparkSession, d: String): DataFrame = {
-    // A MIN over tokens needs NO distinct (duplicates cannot change a
-    // min), so the agg partial-combines map-side and the shuffle
-    // carries ONE row per doc — O(docs), never O(tokens). The naive
-    // explode→distinct→groupBy form shuffled the whole token table;
-    // the other extreme (array_min over transform, a true zero-shuffle
-    // projection) was cold-A/B'd SLOWER here (1.1→1.6 s at sf0.1):
-    // higher-order functions are codegen-fallback, so per-element
-    // interpreted eval loses to codegen'd explode+agg — that
-    // projection form lives on in streaming.DocStreams, where
-    // statelessness (not CPU) is the requirement and values are
-    // identical by construction.
+  /** (doc_id, b0, b1) with the md5-concat STRING band keys
+    * ('b0_'||mh0||'_'||mh1, 'b1_'||mh2||'_'||mh3) — the band values
+    * the oracles group on. Built over [[signaturesOf]], so the batch
+    * tier and streaming.DocStreams band arriving docs with one kernel. */
+  private[graft] def bandedSignatureProjection(docs: DataFrame): DataFrame =
+    signaturesOf(docs).select(col("doc_id"),
+      concat(lit("b0_"), col("mh0"), lit("_"), col("mh1")).as("b0"),
+      concat(lit("b1_"), col("mh2"), lit("_"), col("mh3")).as("b1"))
+
+  /** `dedup_minhash_sig`: [[signaturesOf]] the `documents` table, in
+    * doc_id order (the oracle-facing sort). */
+  def minhashSignatures(s: SparkSession, d: String): DataFrame =
     signaturesOf(documents(s, d)).orderBy(col("doc_id"))
-  }
 
   /** Unsorted (doc_id, mh0..mh{NSIG-1}) MinHash signatures of a
     * (doc_id, text) frame — the one signature construction behind
-    * [[minhashSignatures]], [[bandedSigs]] and
-    * [[lshCandidatePairsAmong]]. */
-  private[queries] def signaturesOf(docs: DataFrame): DataFrame = {
-    val tok = docs.select(col("doc_id"), explode(tokens(col("text"))).as("word"))
-    val aggs = (0 until NSIG).map(j =>
-      min(md5(concat(lit(j.toString), lit("|"), col("word")))).as(s"mh$j"))
-    tok.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+    * every MinHash query, the LSH pair join and the streaming band
+    * join. A pure per-doc projection of the native `minhash`
+    * expression (codegen'd; no explode, no aggregate, no shuffle), so
+    * it also runs on a stream. Token-less docs have no signature and
+    * no row: they are dropped by a letter test on the text, where
+    * `minhash` is NULL — a filter on the signature column itself would
+    * be pushed below the projection and compute every signature twice. */
+  private[graft] def signaturesOf(docs: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.registerAll(docs.sparkSession)
+    docs.filter(col("text").rlike("\\p{L}"))
+      .select(col("doc_id"),
+        graft.functions.GraftFunctions.minhash(col("text"), NSIG).as("mh"))
+      .select(col("doc_id") +:
+        (0 until NSIG).map(j => col("mh").getItem(j).as(s"mh$j")): _*)
   }
 
   /** (doc_id, b0, b1): two bands of two signatures each, keyed by a
@@ -253,7 +239,7 @@ object Documents {
     * that re-aggregates. Lazy: a query that reads the pairs more than
     * once, or sizes a plan from them, materializes them itself. */
   private[queries] def lshCandidatePairs(s: SparkSession, d: String): DataFrame =
-    lshCandidatePairsOfBands(bandedSigs(s, d))
+    lshCandidatePairsOfBands(bandedSigs(documents(s, d)))
 
   /** The pair join over a banded signature table (doc_id, b0, b1). The
     * band keys are 64-bit hashes (8 bytes shuffled instead of a
@@ -301,13 +287,13 @@ object Documents {
         col("doc_a"), col("doc_b"))
   }
 
-  /** (doc_id, b0, b1) banded signature projection — the root of the
-    * pair join AND the cluster contraction. Unsorted and lazy: callers
-    * decide materialization, so a composite query (clusterDensity,
-    * leakageSafeSplit) materializes it once and computes the
-    * tokenize+minhash scan ONCE for both subtrees. */
-  private def bandedSigs(s: SparkSession, d: String): DataFrame =
-    bandsOf(signaturesOf(documents(s, d)))
+  /** (doc_id, b0, b1) banded signature projection of a documents
+    * frame — the root of the pair join AND the cluster contraction.
+    * Unsorted and lazy: callers decide materialization, so a composite
+    * query (clusterDensity, leakageSafeSplit) materializes it once and
+    * computes the minhash scan ONCE for both subtrees. */
+  private def bandedSigs(docs: DataFrame): DataFrame =
+    bandsOf(signaturesOf(docs))
 
   /** Distinct (doc_id, word) token table — the root scan of the LSH
     * tuning family (band sweep, threshold sweep) and the corpus
@@ -368,7 +354,7 @@ object Documents {
     * equivalence on every run). */
   // public: the graft.api.Dedup.candidatePairs library entry point
   def lshCandidatePairsAmong(docs: DataFrame): DataFrame = {
-    val sig = bandsOf(signaturesOf(docs))
+    val sig = bandedSigs(docs)
     // same parallelism discipline as [[lshCandidatePairsOfBands]]: the band
     // join's OUTPUT is sum-of-bucket² pairs, so an AQE-coalesced
     // 2-partition signature table would serialize the expansion
@@ -412,16 +398,21 @@ object Documents {
     * keep/drop decision). Spark side: iterative min-label propagation
     * (operators.ConnectedComponents); oracle: recursive-CTE transitive
     * closure + MIN. */
-  def dedupClusters(s: SparkSession, d: String): DataFrame =
-    dedupClustersFromSig(s, d,
-      graft.operators.Materialize.eager(bandedSigs(s, d)))
+  def dedupClusters(s: SparkSession, d: String): DataFrame = {
+    val docs = documents(s, d)
+    dedupClustersFromSig(docs,
+      graft.operators.Materialize.eager(bandedSigs(docs)))
       .orderBy(col("doc_id"))
+  }
 
-  /** Cluster labels over a caller-materialized banded signature table
-    * — unsorted (the oracle-facing sort lives in [[dedupClusters]];
-    * composite consumers re-aggregate and a sort would be waste). */
-  private def dedupClustersFromSig(
-      s: SparkSession, d: String, sig2: DataFrame): DataFrame = {
+  /** Cluster labels of `docs` over its caller-materialized banded
+    * signature table — unsorted (the oracle-facing sort lives in
+    * [[dedupClusters]]; composite consumers re-aggregate and a sort
+    * would be waste). The caller passes the documents frame it banded,
+    * so a query reads the table once. */
+  private def dedupClustersFromSig(docs: DataFrame, sig2: DataFrame)
+      : DataFrame = {
+    val s = docs.sparkSession
     // Contract the graph before CC, twice over:
     // 1. docs sharing a band value form a clique ≡ a star to its min
     //    member (the hub) — O(n) edges instead of O(n²) pairs
@@ -454,7 +445,7 @@ object Documents {
         col("h1") === col("hid1"))
       .select(col("doc_id"), least(col("c0"), col("c1")).as("component"))
     // docs with no tokens never enter sig2: they are their own cluster
-    documents(s, d).select(col("doc_id"))
+    docs.select(col("doc_id"))
       .join(docComp, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("cluster_rep"))
@@ -505,11 +496,12 @@ object Documents {
     * parallelism must be sized to its OUTPUT work — see the AQE note
     * in [[lshCandidatePairsOfBands]]. */
   def clusterDensity(s: SparkSession, d: String): DataFrame = {
-    val sig = graft.operators.Materialize.eager(bandedSigs(s, d))
+    val docs = documents(s, d)
+    val sig = graft.operators.Materialize.eager(bandedSigs(docs))
     // materialized: two consumers (sizes, the edge join) and the
     // size-gated broadcast below reads its stored bytes
     val labels = graft.operators.Materialize.eager(
-      dedupClustersFromSig(s, d, sig))
+      dedupClustersFromSig(docs, sig))
     val sizes = labels.groupBy(col("cluster_rep"))
       .agg(count(lit(1)).as("n_nodes"))
       .filter(col("n_nodes") >= 2)
@@ -558,10 +550,10 @@ object Documents {
   def leakageSafeSplit(s: SparkSession, d: String): DataFrame = {
     // one materialized signature table for both subtrees (the
     // clusterDensity discipline)
-    val sig = graft.operators.Materialize.eager(bandedSigs(s, d))
-    val labels = dedupClustersFromSig(s, d, sig)
-    val pairs = lshCandidatePairsOfBands(sig)
     val docs = documents(s, d).select(col("doc_id"), col("text"))
+    val sig = graft.operators.Materialize.eager(bandedSigs(docs))
+    val labels = dedupClustersFromSig(docs, sig)
+    val pairs = lshCandidatePairsOfBands(sig)
     // ONE assignment frame carrying both schemes' splits, so the
     // Σ bucket² pair table is joined twice (doc_a, doc_b), not twice
     // PER SCHEME — at 10× the pair joins dominate and this halves them
@@ -807,9 +799,7 @@ object Documents {
     * that moved decontaminate off xxhash64). */
   def dedupIncremental(s: SparkSession, d: String): DataFrame = {
     val sig2 = graft.operators.Materialize.eager(
-      signaturesOf(documents(s, d)).select(col("doc_id"),
-        concat(lit("b0_"), col("mh0"), lit("_"), col("mh1")).as("b0"),
-        concat(lit("b1_"), col("mh2"), lit("_"), col("mh3")).as("b1"))
+      bandedSignatureProjection(documents(s, d))
         .repartition(s.sparkContext.defaultParallelism))
     val corpus = sig2.filter(col("doc_id") % 5 =!= 4)
       .select(col("doc_id").as("old_id"), col("b0").as("ob0"), col("b1").as("ob1"))

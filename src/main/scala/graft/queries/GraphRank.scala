@@ -36,12 +36,8 @@ object GraphRank {
     // the join back, and each side would otherwise recompute the
     // full MinHash signature pipeline (shingle + 4 hash folds/doc)
     val docBand = graft.operators.Materialize.eager(
-      Documents.signaturesOf(graft.Tables.documents(s, d))
-        .select(col("doc_id"),
-          explode(array(
-            concat(lit("b0_"), col("mh0"), lit("_"), col("mh1")),
-            concat(lit("b1_"), col("mh2"), lit("_"), col("mh3"))))
-            .as("band")))
+      Documents.bandedSignatureProjection(graft.Tables.documents(s, d))
+        .select(col("doc_id"), explode(array(col("b0"), col("b1"))).as("band")))
     val hubs = docBand.groupBy(col("band"))
       .agg(min(col("doc_id")).as("hub"))
     docBand.join(hubs, "band")
