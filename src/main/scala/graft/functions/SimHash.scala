@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -193,12 +194,14 @@ object GraftFunctions {
       }))
   }
 
-  /** SQL + Column registration: SELECT simhash64(text) FROM ... */
-  def registerAll(spark: SparkSession): Unit =
-    all.foreach { case (name, _, build) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, build, "built-in")
-    }
+  /** SQL + Column registration: SELECT simhash64(text) FROM ...
+    * Only names the session lacks, so a repeat call replaces nothing. */
+  def registerAll(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    all.filterNot(f => registry.functionExists(FunctionIdentifier(f._1)))
+      .foreach { case (name, _, build) =>
+        registry.createOrReplaceTempFunction(name, build, "built-in") }
+  }
 }
 
 /** SparkSessionExtensions entry point: inject the graft functions at
@@ -207,7 +210,6 @@ object GraftFunctions {
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
     import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
     GraftFunctions.all.foreach { case (name, cls, build) =>
       e.injectFunction((FunctionIdentifier(name),

@@ -136,32 +136,12 @@ object Materialize {
       s.sessionState.conf.numShufflePartitions,
       s.sessionState.conf.getConf(
         org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
-      storedBytesByRef(df))
+      storedBytes(df, perRef = true))
     val k = "spark.sql.adaptive.enabled"
     val prev = s.conf.get(k)
     s.conf.set(k, "false")
     try eager(df.repartition(n, keys: _*).sortWithinPartitions(keys: _*))
     finally s.conf.set(k, prev)
-  }
-
-  /** Measured bytes `df` will READ from materialized sources: like
-    * [[storedBytes]] but summed per leaf REFERENCE, not per distinct
-    * RDD — a plan that scans the same stored frame twice (LPA's
-    * both-directions union of the pair table) reads and emits ~2× the
-    * frame's bytes, and the partition count must track that output
-    * volume. None when any leaf is unmeasurable (same contract as
-    * [[storedBytes]]). */
-  private def storedBytesByRef(df: DataFrame): Option[Long] = {
-    val rdds = df.queryExecution.analyzed.collectLeaves().collect {
-      case l: LogicalRDD => l.rdd
-    }
-    if (rdds.isEmpty) None
-    else {
-      val infos = df.sparkSession.sparkContext.getRDDStorageInfo
-        .map(i => i.id -> (i.memSize + i.diskSize)).toMap
-      val sizes = rdds.map(r => infos.get(r.id))
-      if (sizes.exists(_.isEmpty)) None else Some(sizes.flatten.sum)
-    }
   }
 
   /** Partition count for [[eagerKeyed]] — pure so MaterializeSpec can
@@ -189,16 +169,21 @@ object Materialize {
   /** Stored footprint of a materialized frame's checkpoint blocks, if
     * every leaf is a tracked-storage RDD the block manager still
     * reports — the driver-side, zero-job size read that [[hintSmall]]
-    * decides from. */
-  private def storedBytes(df: DataFrame): Option[Long] = {
+    * decides from. `perRef` sums per leaf REFERENCE, not per distinct
+    * RDD: a plan that scans the same stored frame twice (LPA's
+    * both-directions union of the pair table) reads and emits ~2× the
+    * frame's bytes, and [[eagerKeyed]]'s partition count must track
+    * that output volume. */
+  private def storedBytes(df: DataFrame, perRef: Boolean = false)
+      : Option[Long] = {
     val rdds = leafRdds(df)
     if (rdds.isEmpty) None
     else {
-      val ids = rdds.map(_.id).toSet
       val infos = df.sparkSession.sparkContext.getRDDStorageInfo
-        .filter(i => ids.contains(i.id))
-      if (infos.length != ids.size) None
-      else Some(infos.map(i => i.memSize + i.diskSize).sum)
+        .map(i => i.id -> (i.memSize + i.diskSize)).toMap
+      val sizes = (if (perRef) rdds else rdds.distinctBy(_.id))
+        .map(r => infos.get(r.id))
+      if (sizes.exists(_.isEmpty)) None else Some(sizes.flatten.sum)
     }
   }
 

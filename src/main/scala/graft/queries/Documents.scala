@@ -206,12 +206,15 @@ object Documents {
     * be pushed below the projection and compute every signature twice. */
   private[graft] def signaturesOf(docs: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.registerAll(docs.sparkSession)
-    docs.filter(col("text").rlike("\\p{L}"))
+    docs.filter(hasLetter)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.minhash(col("text"), NSIG).as("mh"))
       .select(col("doc_id") +:
         (0 until NSIG).map(j => col("mh").getItem(j).as(s"mh$j")): _*)
   }
+
+  /** Whether a doc's text has a letter, i.e. a token: NULL for NULL text. */
+  private val hasLetter: Column = col("text").rlike("\\p{L}")
 
   /** (doc_id, b0, b1): two bands of two signatures each, keyed by a
     * 64-bit hash — the one banding behind every LSH pair join. */
@@ -409,10 +412,10 @@ object Documents {
     * signature table — unsorted (the oracle-facing sort lives in
     * [[dedupClusters]]; composite consumers re-aggregate and a sort
     * would be waste). The caller passes the documents frame it banded,
-    * so a query reads the table once. */
+    * so a query reads the table once. Hubs are per-band window
+    * minimums, and each doc's label is one join on its band-0 hub. */
   private def dedupClustersFromSig(docs: DataFrame, sig2: DataFrame)
       : DataFrame = {
-    val s = docs.sparkSession
     // Contract the graph before CC, twice over:
     // 1. docs sharing a band value form a clique ≡ a star to its min
     //    member (the hub) — O(n) edges instead of O(n²) pairs
@@ -421,34 +424,31 @@ object Documents {
     //    doc carries both): every component's min doc is provably a
     //    hub (the min belongs to some band whose hub ≤ it and is in
     //    the same component), so doc labels follow with one join:
-    //    component(doc) = min(comp(h0), comp(h1)). The iterative
+    //    component(doc) = comp(h0) (below). The iterative
     //    working set shrinks from every doc to the distinct band
     //    values (5× here; at 100 TB the ratio is the mean cluster
     //    size). Cold A/B at sf0.1: 5.6 s vs 6.1 s, identical rows.
-    // Materialize.eager for both multi-consumer tables: block reuse
-    // with no CacheManager entry left behind for callers (policy +
+    // Materialize.eager: the hub table has several consumers (policy +
     // executor-loss trade-off documented in operators.Materialize)
-    val h0 = sig2.groupBy(col("b0")).agg(min(col("doc_id")).as("h0"))
-    val h1 = sig2.groupBy(col("b1")).agg(min(col("doc_id")).as("h1"))
-    val withHubs = graft.operators.Materialize.eager(
-      sig2.join(h0, "b0").join(h1, "b1"))
+    import org.apache.spark.sql.expressions.Window
+    val withHubs = graft.operators.Materialize.eager(sig2
+      .withColumn("h0", min(col("doc_id")).over(Window.partitionBy("b0")))
+      .withColumn("h1", min(col("doc_id")).over(Window.partitionBy("b1"))))
+    // no distinct here: CC's own init and symmetrizing distincts cover it
     val hubNodes = withHubs.select(col("h0").as("id"))
-      .union(withHubs.select(col("h1").as("id"))).distinct()
+      .union(withHubs.select(col("h1").as("id")))
     val hubEdges = withHubs.filter(col("h0") =!= col("h1"))
-      .select(col("h0").as("src"), col("h1").as("dst")).distinct()
-    val hubCC = graft.operators.ConnectedComponents.run(s, hubNodes, hubEdges)
-      .toDF("hid", "comp")
-    val docComp = withHubs
-      .join(hubCC.select(col("hid").as("hid0"), col("comp").as("c0")),
-        col("h0") === col("hid0"))
-      .join(hubCC.select(col("hid").as("hid1"), col("comp").as("c1")),
-        col("h1") === col("hid1"))
-      .select(col("doc_id"), least(col("c0"), col("c1")).as("component"))
-    // docs with no tokens never enter sig2: they are their own cluster
-    docs.select(col("doc_id"))
-      .join(docComp, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("component"), col("doc_id")).as("cluster_rep"))
+      .select(col("h0").as("src"), col("h1").as("dst"))
+    val hubCC = graft.operators.Materialize.hintSmall(graft.operators
+      .ConnectedComponents.run(docs.sparkSession, hubNodes, hubEdges))
+    // a doc with h0 ≠ h1 put the edge h0—h1 into the hub graph, so
+    // least(comp(h0), comp(h1)) == comp(h0): one label join per doc.
+    // Docs with no tokens never enter sig2: they are their own cluster
+    // (the exact complement of signaturesOf's filter, NULL text included)
+    withHubs.join(hubCC, col("h0") === col("id"))
+      .select(col("doc_id"), col("component").as("cluster_rep"))
+      .union(docs.filter(!coalesce(hasLetter, lit(false)))
+        .select(col("doc_id"), col("doc_id").as("cluster_rep")))
   }
 
   val dedupClustersSql: String = {

@@ -136,4 +136,33 @@ class MinHashSpec extends AnyFunSuite {
     assert(sig.collect().map(r => r.getLong(0) -> (1 to n).map(r.getString)).toMap ==
       composed(docs))
   }
+
+  test("registerAll on a GraftExtensions session replaces nothing and " +
+      "logs no replacement WARN; minhash still resolves") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("registerAll-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warned.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry")
+      .asInstanceOf[Logger]
+    logger.addAppender(capture)
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("minhash")
+    val before = spark.sessionState.functionRegistry.lookupFunction(id)
+    try { GraftFunctions.registerAll(spark); GraftFunctions.registerAll(spark) }
+    finally { logger.removeAppender(capture); capture.stop() }
+    assert(warned.isEmpty, s"registerAll replaced functions: $warned")
+    // the extension's entry (class name MinHash) is the one still there
+    val after = spark.sessionState.functionRegistry.lookupFunction(id)
+    assert(after.map(_.getClassName) == Some(classOf[MinHash].getName))
+    assert(after == before)
+    assert(spark.sql("SELECT size(minhash('a b', 2))").head().getInt(0) == 2)
+  }
 }

@@ -66,4 +66,43 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(1)).distinct
     assert(got.toSeq == Seq(1L), "a path graph is one component")
   }
+
+  test("a nodes-only graph converges in one round") {
+    val nodes = Seq(3L, 1L, 2L).toDF("id")
+    val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
+    // maxIter = 1: a second round would be non-convergence and throw
+    val got = ConnectedComponents.run(spark, nodes, edges, maxIter = 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+  }
+
+  test("an edge endpoint missing from nodes still gets its min label") {
+    // 1 and 7 appear only as endpoints; 1 is the component's min and
+    // must reach 10 and 11 through the missing node
+    val nodes = Seq(10L, 11L, 20L).toDF("id")
+    val edges = Seq((10L, 1L), (1L, 11L), (20L, 7L)).toDF("src", "dst")
+    val got = ConnectedComponents.run(spark, nodes, edges)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(got == Map(1L -> 1L, 10L -> 1L, 11L -> 1L, 7L -> 7L, 20L -> 7L))
+  }
+
+  test("a failing run leaves no cached edges in the session") {
+    import org.apache.spark.sql.functions.{col, udf}
+    // a range, not a local Seq: the optimizer would fold a UDF over a
+    // LocalRelation at persist time, before the edges are cached
+    val boom = udf((x: Long) =>
+      if (x == 3L) throw new IllegalStateException("boom") else x)
+    val edges = spark.range(1, 6)
+      .select(col("id").as("src"), boom(col("id") + 1).as("dst"))
+    val nodes = spark.range(1, 6).toDF("id")
+    val cache = spark.sharedState.cacheManager
+    cache.clearCache()
+    intercept[Exception](ConnectedComponents.run(spark, nodes, edges))
+    assert(cache.isEmpty, "the symmetrized edges stayed cached after a task failed")
+    // non-convergence is the other exit by exception
+    val path = (1L to 10L).map(i => (i, i + 1)).toDF("src", "dst")
+    intercept[IllegalStateException](
+      ConnectedComponents.run(spark, path.select("src").toDF("id"), path, maxIter = 2))
+    assert(cache.isEmpty, "the symmetrized edges stayed cached after non-convergence")
+  }
 }

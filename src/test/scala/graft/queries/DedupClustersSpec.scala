@@ -83,7 +83,19 @@ class DedupClustersSpec extends AnyFunSuite {
       Seq(50L -> "exact copy here", 51L -> "exact copy here",
         52L -> "exact, copy here!",
         60L -> "lonely singleton text", 61L -> "another unrelated doc") ++
-      Seq(70L -> "", 71L -> "123 456 ...", 72L -> null)
+      Seq(70L -> "", 71L -> "123 456 ...", 72L -> null,
+        73L -> " \t\n  ", 74L -> "caf\u00e9 \u00e9t\u00e9 \u65e5\u672c\u8a9e",
+        75L -> "?!-- 3.14, 42; (7)")
+  }
+
+  /** The docs as a `documents` table in a fresh data directory. */
+  private lazy val dir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("dedupclusters").toString
+    docs.map { case (id, t) =>
+      (id, t, "en", s"src$id", Option(t).map(_.length.toLong).getOrElse(0L))
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    dir
   }
 
   test("cluster_rep equals a plain-Scala union-find over md5 bands, " +
@@ -97,21 +109,59 @@ class DedupClustersSpec extends AnyFunSuite {
     assert(want(44L) == 2L && want(40L) == 2L && want(45L) == 2L)
     val (b44, b2) = (bands(docs.toMap.apply(44L)).get, bands(docs.toMap.apply(2L)).get)
     assert(b44._1 != b2._1 && b44._2 != b2._2, "44 must reach 2 transitively")
-    assert(Seq(60L, 61L, 70L, 71L, 72L).forall(id => want(id) == id))
+    assert((Seq(60L, 61L) ++ (70L to 75L)).forall(id => want(id) == id))
+    assert(bands(docs.toMap.apply(74L)).isDefined, "74's letters are all non-ASCII")
 
-    val dir = java.nio.file.Files.createTempDirectory("dedupclusters").toString
-    docs.map { case (id, t) =>
-      (id, t, "en", s"src$id", Option(t).map(_.length.toLong).getOrElse(0L))
-    }.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.parquet(s"$dir/documents.parquet")
-
-    val got = Documents.dedupClusters(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want)
+    // exactly one row per doc: the token-less rows are the exact
+    // complement of the signature rows, so no doc is lost or doubled
+    val rows = Documents.dedupClusters(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(rows.size == docs.size, s"${rows.size} rows for ${docs.size} docs")
+    assert(rows.map(_._1).distinct.size == rows.size, "duplicate doc_id")
+    assert(rows.toMap == want)
 
     // cluster_density's n_nodes are the same clusters' sizes
     val density = Documents.clusterDensity(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(density == sizes.filter(_._2 >= 2).map { case (r, n) => r -> n.toLong })
+  }
+
+  /** Spark jobs one `dedup_clusters` build + collect launches on this
+    * table (local[4], AQE on). */
+  private val jobBudget = 22
+
+  test(s"job budget: dedup_clusters launches at most $jobBudget Spark jobs, " +
+      "none of them a separate convergence probe") {
+    import java.util.concurrent.ConcurrentHashMap
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    val tag = "graft.spec.dedupJobs"
+    val sites = new ConcurrentHashMap[Int, String]()
+    val ended = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty(tag) != null)
+          sites.put(j.jobId, j.stageInfos.map(_.name).mkString(" / "))
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (sites.containsKey(j.jobId)) ended.add(j.jobId)
+    }
+    val table = dir // write the table before counting
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "1")
+    try Documents.dedupClusters(spark, table).collect()
+    finally sc.setLocalProperty(tag, null)
+    // a job's start reaches the listener before its end; bounded wait
+    val deadline = System.currentTimeMillis() + 10000
+    while ((sites.isEmpty || ended.size < sites.size) &&
+      System.currentTimeMillis() < deadline) Thread.sleep(50)
+    sc.removeSparkListener(listener)
+    assert(!sites.isEmpty && ended.size == sites.size, "job end never delivered")
+    import scala.jdk.CollectionConverters._
+    val listed = sites.asScala.toSeq.sortBy(_._1).map(_._2)
+    info(s"${listed.size} jobs: ${listed.mkString("; ")}")
+    assert(!listed.exists(c => c.contains("isEmpty") &&
+      c.contains("ConnectedComponents")), s"a separate CC probe job: $listed")
+    assert(listed.size <= jobBudget, s"${listed.size} jobs: $listed")
   }
 }
