@@ -66,8 +66,8 @@ object Verify {
         Files.writeString(errDir.resolve(s"$name.txt"), msg)
       } finally {
         // free per-query residue: cached tables via clearCache, and
-        // every Materialize-tracked block synchronously (localCheckpoint
-        // blocks never enter the CacheManager) — ~87 queries share this
+        // every Materialize-tracked block synchronously (those blocks
+        // never enter the CacheManager) — ~87 queries share this
         // session and signature tables would otherwise pile up. The
         // old System.gc() nudge was both slower and nondeterministic
         // (async ContextCleaner work spilling into later queries).

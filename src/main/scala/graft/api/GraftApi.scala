@@ -21,15 +21,15 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
   * several entry points depend on them.
   *
   * Intermediates: multi-consumer tables are materialized through
-  * [[graft.operators.Materialize]] (localCheckpoint policy — blocks
-  * live on executors, freed when consumers are GC'd; see that object's
-  * scaladoc for the preemptible-fleet trade-off and the
-  * `spark.graft.materialize=persist` escape hatch). Nothing is cached
-  * across calls: every query builds its own intermediates from its
-  * input files, so rewriting a data directory mid-session needs no
-  * release call. [[GraftSession.releaseShared]] is optional: it frees
-  * the persisted static sides of ingest streams early instead of at
-  * application end.
+  * [[graft.operators.Materialize]], the one policy: persisted blocks
+  * behind a plan leaf that keeps its lineage, outside the
+  * `CacheManager`, freed when their consumers are GC'd. A lost or
+  * freed block is silently recomputed; there is no other policy and
+  * no switch. Nothing is cached across calls: every query builds its
+  * own intermediates from its input files, so rewriting a data
+  * directory mid-session needs no release call.
+  * [[GraftSession.releaseShared]] is optional: it frees every
+  * materialization now instead of at GC.
   */
 object GraftSession {
   /** A SparkSession wired for graft: GraftExtensions (native
@@ -39,12 +39,13 @@ object GraftSession {
       master: String = s"local[${graft.Session.cpus}]"): SparkSession =
     graft.Session.build(appName, master)
 
-  /** Optional: unpersist the static sides of this session's ingest
-    * streams ([[Streams.ingestVerdicts]]) now instead of at
-    * application end. Call it after those streams stop. Rewriting a
-    * data directory does not need it. */
+  /** Optional: free every materialization of this session now
+    * ([[graft.operators.Materialize.freeAll]]) instead of at GC. A frame
+    * still in use, such as a live ingest stream's static side, is
+    * recomputed on its next read. Rewriting a data directory does not
+    * need it. */
   def releaseShared(spark: SparkSession): Unit =
-    graft.operators.Materialize.releaseShared(spark)
+    graft.operators.Materialize.freeAll(spark)
 }
 
 /** Near-duplicate and exact deduplication over a document table
@@ -151,9 +152,9 @@ object Streams {
   /** Composed ingest pipeline: watermark dedup → stream-static
     * decontamination against `evalDocs` → quality gate → one VERDICT
     * row per first-arrival doc (append mode, finalized per 1-minute
-    * window). The static eval side is persisted with lineage kept, so
-    * harness frees mid-stream degrade to a recompute; blocks release
-    * at [[GraftSession.releaseShared]]/application end. */
+    * window). The static eval side is materialized with lineage kept,
+    * so harness frees mid-stream degrade to a recompute; its blocks
+    * are dropped by [[GraftSession.releaseShared]] or at GC. */
   def ingestVerdicts(stampedDocs: DataFrame, evalDocs: DataFrame,
       horizon: String = "10 minutes", minTokens: Long = 50L): DataFrame =
     graft.streaming.DocStreams.ingestVerdictStream(
@@ -161,7 +162,7 @@ object Streams {
 
   /** [[ingestVerdicts]] plus the static side's release handle: call
     * it after the stream stops to free THIS stream's eval shingle set
-    * without dropping the session's other streams' static sides (the
+    * without dropping the session's other materializations (the
     * alternative, [[GraftSession.releaseShared]], frees them all).
     * Idempotent; safe under a live stream (later micro-batches
     * recompute). */

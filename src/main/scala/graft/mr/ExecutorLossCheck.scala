@@ -1,9 +1,12 @@
 package graft.mr
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 import org.apache.spark.TaskContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated,
+  SparkListenerExecutorRemoved}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.RDDBlockId
 
 /** Executor-loss recovery check — the Spark analog of the reference's
   * worker-crash-with-respawn test (/root/reference/mr-main/
@@ -26,9 +29,12 @@ import org.apache.spark.sql.SparkSession
   * `MRJob.run`, killed in a reduce task midway through writing its
   * temporary file. The written directory must hold exactly the R part
   * files and `_SUCCESS`, with each key once (paper §3.3: lost work runs
-  * again, output appears once). ExecutorLossSpec forks this main and
-  * asserts on one EXECUTOR_LOSS_OK marker per path; exit code 0 ⇔ both
-  * matched the oracle.
+  * again, output appears once). A third check covers the dedup path:
+  * connected components loses, through `sc.killExecutor`, an executor
+  * holding blocks of a round's stored label snapshot, and must still
+  * return the fault-free labels. ExecutorLossSpec forks this main and
+  * asserts on one EXECUTOR_LOSS_OK marker per path; exit code 0 ⇔ all
+  * three matched.
   */
 object ExecutorLossCheck {
   def main(args: Array[String]): Unit = {
@@ -101,6 +107,44 @@ object ExecutorLossCheck {
     val outDir = java.nio.file.Files.createTempDirectory("executor-loss-out")
     MRJob.run(spark, combining, s"$booksDir/*.txt", outDir.toString, nReduce = 10)
     val lostCombiner = lostOneMore(removedBefore)
+    // the dedup path: components of ten 6-node chains (6 rounds), run
+    // fault-free, then again losing the executor that stores the first
+    // block of round 1's label snapshot. A run stores, in order, CC's
+    // edge cache and init snapshot (one job), then round 1's snapshot,
+    // which round 2 reads: the third RDD to store a block is the kill
+    // trigger.
+    def components(): Seq[(Long, Long)] =
+      graft.operators.ConnectedComponents.run(spark,
+          spark.range(0, 60).toDF("id"),
+          spark.range(0, 60).filter(col("id") % 6 =!= 5)
+            .select(col("id").as("src"), (col("id") + 1).as("dst")))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val ccFree = components()
+    val firstRdd = spark.sparkContext.emptyRDD[Int].id
+    val armed = new AtomicBoolean(true)
+    val storedRdds = scala.collection.mutable.LinkedHashSet[Int]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+        val info = e.blockUpdatedInfo
+        val exec = info.blockManagerId.executorId
+        info.blockId match {
+          case RDDBlockId(rdd, _) if rdd > firstRdd && armed.get &&
+              info.storageLevel.isValid && exec != "driver" =>
+            storedRdds += rdd
+            if (storedRdds.size == 3 && armed.getAndSet(false)) {
+              System.err.println(s"[executor-loss] killing executor $exec " +
+                s"holding a block of RDD $rdd")
+              spark.sparkContext.killExecutor(exec)
+            }
+          case _ =>
+        }
+      }
+    })
+    val removedBeforeCc = removed.get
+    val ccLost = scala.util.Try(components())
+    ccLost.failed.foreach(e =>
+      System.err.println(s"[executor-loss] dedup run failed: $e"))
+    val lostDedup = !armed.get && lostOneMore(removedBeforeCc)
     spark.stop()
     // output appears once: the R part files and _SUCCESS, no temporary
     // file of the killed attempt, and every key in exactly one line
@@ -112,7 +156,10 @@ object ExecutorLossCheck {
       "plain" -> (lostPlain && gotPlain == expected),
       "combiner" -> (lostCombiner && written.sorted == expected &&
         keys.distinct.size == keys.size &&
-        files == ("_SUCCESS" +: (0 until 10).map(i => f"part-$i%05d")).sorted))
+        files == ("_SUCCESS" +: (0 until 10).map(i => f"part-$i%05d")).sorted),
+      "dedup" -> (lostDedup &&
+        ccFree == (0L until 60L).map(i => (i, i / 6 * 6)) &&
+        ccLost.toOption.contains(ccFree)))
     checks.foreach { case (path, ok) =>
       println(s"EXECUTOR_LOSS_${if (ok) "OK" else "MISMATCH"} $path")
     }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * node). Iterations ≈ graph diameter (near-clique dedup graphs: 2-3);
   * the driver only ever sees one convergence scalar per iteration,
   * never the data, and it is observed inside the round's own
-  * checkpoint job. This is the standard Pregel-style CC on DataFrames
+  * materializing job. This is the standard Pregel-style CC on DataFrames
   * (GraphX does the same dance on RDDs).
   */
 object ConnectedComponents {
@@ -37,13 +37,13 @@ object ConnectedComponents {
       // read as "unchanged" by the convergence count, and converge
       // prematurely with its own min-label never propagated. One distinct
       // at init makes the operator total instead of precondition-bound.
-      // localCheckpoint: without truncation the logical plan compounds
+      // materialized: without truncation the logical plan compounds
       // per loop and analysis itself OOMs past ~20 rounds
-      var labels = Materialize.eagerCheckpoint(nodes.toDF("id")
+      var labels = Materialize.eager(nodes.toDF("id")
         .union(sym.select(col("src").as("id")))
         .distinct()
         .select(col("id"), col("id").as("component")))
-      // handle to the checkpoint backing `labels`: each iteration's
+      // handle to the snapshot backing `labels`: each iteration's
       // snapshot is freed explicitly once its successor is materialized —
       // otherwise up to maxIter label snapshots sit in executor storage
       // until the JVM GC + ContextCleaner notice the dropped references
@@ -68,7 +68,7 @@ object ConnectedComponents {
         // label checksum) survives ANSI overflow on huge id spaces; an
         // empty round observes a NULL sum, which means nothing changed.
         val changed = Observation()
-        val next = Materialize.eagerCheckpoint(labels
+        val next = Materialize.eager(labels
           .select(col("id"), col("component"), col("component").as("old"))
           .union(neighborLabels)
           .groupBy(col("id"))
@@ -77,8 +77,8 @@ object ConnectedComponents {
             .otherwise(0L)).as("changed")))
         converged = Option(changed.get("changed")).forall(_ == 0L)
         labels = next.select(col("id"), col("component"))
-        // `next` is fully materialized (eager checkpoint): the previous
-        // snapshot's blocks are dead now
+        // `next` is fully materialized: the previous snapshot's blocks
+        // are dead now (a lost block of `next` recomputes from lineage)
         Materialize.free(ckpt)
         ckpt = next
         iter += 1

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * the two 1-row normalizers combine via crossJoin(broadcast(·)) (the
   * whitelisted 1-row-broadcast pattern) — no driver-side action in
   * the whole loop. Each half-round's raw-sum frame is
-  * localCheckpoint'ed because it has two consumers (its normalizer
+  * materialized because it has two consumers (its normalizer
   * and the next half-round's divide) — lazy, the O(E) join+agg would
   * re-run per consumer; the previous snapshot is freed as soon as its
   * successor materializes, so executor storage holds ≤2 snapshots.
@@ -55,7 +55,7 @@ object Hits {
       edges0.toDF("src", "dst").distinct().repartition(par, col("src")))
     val nHubs = edges.select(col("src")).distinct()
       .agg(count(lit(1)).as("n"))
-    var h = Materialize.eagerCheckpoint(
+    var h = Materialize.eager(
       edges.select(col("src").as("id")).distinct()
         .crossJoin(broadcast(nHubs))
         .select(col("id"), expr(s"${Scale}L DIV n").as("hub_fp")))
@@ -65,7 +65,7 @@ object Hits {
       // and the divide feeding the next half-round — so it is
       // checkpointed once instead of re-running the O(E) join+agg per
       // consumer (A/B at sf0.1: 6.4 → ~3 s for 4 rounds)
-      val aRaw = Materialize.eagerCheckpoint(
+      val aRaw = Materialize.eager(
         edges.join(h.withColumnRenamed("id", "src"), "src")
           .groupBy(col("dst")).agg(sum(col("hub_fp")).as("ar")))
       Materialize.free(lastCk)
@@ -73,7 +73,7 @@ object Hits {
         greatest(lit(1L), expr(s"sum(ar) DIV ${Scale}L")).as("q"))
       val auth = aRaw.crossJoin(broadcast(qa))
         .select(col("dst"), expr("ar DIV q").as("a"))
-      val hRaw = Materialize.eagerCheckpoint(
+      val hRaw = Materialize.eager(
         edges.join(auth, "dst")
           .groupBy(col("src")).agg(sum(col("a")).as("hr")))
       Materialize.free(aRaw)

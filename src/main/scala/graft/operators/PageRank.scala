@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * (Materialize policy), and pre-partitioned by src, so each
   * iteration shuffles ONLY the (id, rank) frame — one hash join on
   * src + one aggregation on dst + one left join back to nodes, all
-  * O(edges). Each iteration's label frame is localCheckpoint'ed to
-  * stop the O(nIter) lineage blowup and the PREVIOUS snapshot is
+  * O(edges). Each iteration's label frame is materialized to
+  * stop the O(nIter) plan blowup and the PREVIOUS snapshot is
   * freed as soon as its successor is materialized (same discipline
   * as ConnectedComponents) — executor storage holds at most two
   * rank snapshots at any time. One driver scalar total (node count),
@@ -50,7 +50,7 @@ object PageRank {
     val spark = edges0.sparkSession
     val parallelism = spark.sparkContext.defaultParallelism
     // join outdeg onto edges ONCE, store partitioned by the per-
-    // iteration join key (src): localCheckpoint preserves the
+    // iteration join key (src): the materialized leaf keeps the
     // partitioning, so the loop's joins shuffle only the rank side
     val edges = Materialize.eager(
       edges0.toDF("src", "dst")
@@ -67,7 +67,7 @@ object PageRank {
     val n = nodes.count() // the loop's single driver-side scalar
     require(n > 0, "PageRank.run on an empty edge set")
     val base = (Scale * (dampDen - dampNum) / dampDen) / n
-    var rank = Materialize.eagerCheckpoint(
+    var rank = Materialize.eager(
       nodes.withColumn("r", lit(Scale / n)))
     var lastCk = rank
     for (i <- 1 to nIter) {
@@ -87,9 +87,9 @@ object PageRank {
       // lazy plan costs nothing extra at action time, while each
       // materialization barrier is a fixed ~0.25 s — halving the
       // barrier count cuts the loop's fixed overhead ~2× (cold A/B
-      // at sf0.1: 5.4 → 4.6 s) with the same O(nIter)-lineage cap
+      // at sf0.1: 5.4 → 4.6 s) with the same O(nIter)-plan cap
       if (i % 2 == 0 || i == nIter) {
-        val ck = Materialize.eagerCheckpoint(next)
+        val ck = Materialize.eager(next)
         Materialize.free(lastCk)
         lastCk = ck
         rank = ck

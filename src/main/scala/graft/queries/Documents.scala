@@ -1417,12 +1417,8 @@ object Documents {
           expr("n_precise * 1000 DIV GREATEST(n_sampled_pairs, 1)")
             .as("precision_pm"))
     }
-    // The three band configs are independent chains of ~5 blocking
-    // materializations each over the SAME pre-fetched sig/tok/card
-    // roots; Par.map overlaps the chains from driver threads (guide
-    // §2.6) — frames and values identical, only the jobs overlap
-    // (A/B in OPTIMIZATION_r12.md).
-    val rows = graft.operators.Par.map(Seq(
+    // three independent band configs over the same sig/tok/card roots
+    val rows = Seq(
       (array(
         concat(lit("a_"), col("mh0")), concat(lit("b_"), col("mh1")),
         concat(lit("c_"), col("mh2")), concat(lit("d_"), col("mh3"))), 4, 1),
@@ -1431,7 +1427,7 @@ object Documents {
         concat(lit("b_"), col("mh2"), col("mh3"))), 2, 2),
       (array(
         concat(lit("a_"), col("mh0"), col("mh1"), col("mh2"), col("mh3"))),
-        1, 4))) { case (bands, b, r) => config(bands, b, r) }
+        1, 4)).map { case (bands, b, r) => config(bands, b, r) }
     rows.reduce(_ unionByName _).orderBy(col("rows_per_band"))
   }
 

@@ -687,7 +687,7 @@ object GraphRank {
     var edges = graft.operators.Materialize.eager(
       pairs.select(col("doc_a").as("u"), col("doc_b").as("v")))
     // The round's degree table is MATERIALIZED once per edge set and
-    // every consumer reads the stored O(V) blocks: nInit, the
+    // every consumer reads the stored O(V) blocks: the
     // n_nodes_initial audit column, the round's keep filter, and the
     // final n_core_nodes/n_below aggregate. The previous form
     // recomputed the 2|E| degree agg per consumer — nInit + init +
@@ -695,8 +695,11 @@ object GraphRank {
     // exactly one per DISTINCT edge set (r12 optimization round,
     // guide §2.4 — the values are identical, only the pass count
     // changes; A/B in OPTIMIZATION_r12.md).
-    var deg = graft.operators.Materialize.eager(degrees(edges))
-    val nInit = deg.count()
+    // the initial node count is observed inside deg's own fill job
+    val degRows = org.apache.spark.sql.Observation()
+    var deg = graft.operators.Materialize.eager(
+      degrees(edges).observe(degRows, count(lit(1)).as("n")))
+    val nInit = degRows.get("n").asInstanceOf[Long]
     val init = deg.agg(count(lit(1)).as("n_nodes_initial"))
       .crossJoin(broadcast(edges.agg(count(lit(1)).as("n_edges_initial"))))
     // early exit on fixpoint: once a round drops no node, every later
@@ -715,9 +718,12 @@ object GraphRank {
     var prevNodes = nInit
     var r = 0
     while (r < rounds && {
+      // the survivor count is observed inside keep's own fill job
+      val kept = org.apache.spark.sql.Observation()
       val keep = graft.operators.Materialize.eager(
-        deg.filter(col("dg") >= k).select(col("id")))
-      val nKeep = keep.count()
+        deg.filter(col("dg") >= k).select(col("id"))
+          .observe(kept, count(lit(1)).as("n")))
+      val nKeep = kept.get("n").asInstanceOf[Long]
       val changed = nKeep != prevNodes
       if (changed) {
         prevNodes = nKeep
@@ -883,10 +889,10 @@ object GraphRank {
     * Scale shape: each round is one edge-keyed equi-join (neighbor
     * label lookup), one (node, label) hash-agg with map-side
     * combine, and one per-node argmax — O(E) per round, materialized
-    * per round with lineage truncation (per-round, NOT PageRank's
-    * every-second-round pairing — see the rejected-A/B note in the
-    * loop); the per-round change count is ONE bounded scalar to the
-    * driver. */
+    * per round with plan truncation (per-round, NOT PageRank's
+    * every-second-round pairing — see the note in the loop); the
+    * per-round change count is ONE bounded scalar to the driver,
+    * observed inside the round's own materializing job. */
   private[queries] val LpaRounds = 8
 
   def labelPropagation(s: SparkSession, d: String): DataFrame =
@@ -894,8 +900,7 @@ object GraphRank {
       lpaPairs(s, d))
 
   /** The LSH candidate pairs, materialized: the LPA edge build reads
-    * them twice (both directions) and [[graft.operators.Materialize.eagerKeyed]]
-    * sizes its partitions from their stored bytes. */
+    * them twice (both directions). */
   private def lpaPairs(s: SparkSession, d: String): DataFrame =
     graft.operators.Materialize.eager(Documents.lshCandidatePairs(s, d))
 
@@ -906,31 +911,23 @@ object GraphRank {
     * extraction. */
   private[queries] def lpaLabelsOn(docs: DataFrame, pairs: DataFrame,
       rounds: Int): (DataFrame, DataFrame, Boolean, Int) = {
-    // Edges materialized HASH-PARTITIONED AND SORTED BY u (r13,
-    // guide §2.4): the neighbor join below is keyed on u EVERY round,
-    // and the plain eager layout made each round's initial SMJ plan
-    // re-exchange the full O(E) table — a shuffle write of all 15 M
-    // directed edges per round at sf0.1 that AQE's broadcast rewrite
-    // converted to a local read but could not un-write (LpaProbe r13:
-    // the round-1 plan carried `Exchange hashpartitioning(u)` over the
-    // edge scan; with the keyed layout it is the bare ExistingRDD
-    // scan). The within-partition sort makes the scale path — SMJ when
-    // labels outgrow the broadcast threshold — sort-free on the edge
-    // side too. A/B (same JVM, alternating, 2 runs each): current
-    // loop 13.3–66 s across host waves vs keyed+hinted 4.6–6.5 s.
-    val edges = graft.operators.Materialize.eagerKeyed(
+    // directed edges, read by every round's neighbor join. Keyed on u
+    // into the session's shuffle partitions: the bare union carries
+    // twice the pairs' partition count (32 small tasks at sf0.01) into
+    // every round's O(E) stage.
+    val edges = graft.operators.Materialize.eager(
       pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
-        .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v"))),
-      col("u"))
+        .union(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
+        .repartition(pairs.sparkSession.sessionState.conf.numShufflePartitions,
+          col("u")))
     // Labels are a materialized O(V) frame each round; hintSmall
     // (size-gated broadcast, Materialize.scala) lets the STATIC
     // planner broadcast them so no exchange is ever planned on the
     // edge side — at corpus scale the gate stops hinting and the plan
-    // reverts to SMJ over the pre-partitioned edges. Values unchanged
-    // either way (same equi-join).
+    // reverts to SMJ. Values unchanged either way (same equi-join).
     def small(df: DataFrame): DataFrame =
       graft.operators.Materialize.hintSmall(df)
-    var labels = graft.operators.Materialize.eagerCheckpoint(
+    var labels = graft.operators.Materialize.eager(
       docs.select(col("doc_id").as("id"), col("doc_id").as("label")))
     var converged = false
     var r = 0
@@ -962,27 +959,20 @@ object GraphRank {
       // (data contract + LabelPropagationSpec's independent
       // reference): labels are NON-NEGATIVE doc ids, so
       // (2^63-1 - label) stays inside its 2^63 digit slot.
-      // The per-round change count rides the round's OWN materialized
-      // frame: the prev-label join and the chg flag are computed
-      // inside the checkpointed plan, so the count is a cheap scan-sum
-      // of the stored blocks instead of a separate join+count action.
-      // A/B'd and REJECTED: the PageRank checkpoint-every-second-round
-      // pairing (first round lazy, second round's checkpoint executes
-      // both). Unlike PageRank's rank frame — consumed ONCE by the
-      // next iteration — the label frame is consumed THREE times per
-      // round (neighbor join, self-inclusion union, prev-label join),
-      // each pruned to different columns, so the canonical subplans
-      // diverge and exchange reuse cannot deduplicate them: the lazy
-      // round's full O(E) join+aggs re-execute ~3×. Same-JVM
-      // alternating A/B at sf0.1 (8 rounds, host noise cancelled):
-      // paired 14.5/17.4/20.3 s vs per-round 12.0/16.4/15.5 s — the
-      // recompute costs more than the ~0.25 s/barrier it saves.
-      // The spec's independent round-at-a-time reference
-      // (LabelPropagationSpec) pins this loop bit-exactly either way.
+      // The per-round change count is observed inside the round's own
+      // materializing job (Dataset.observe, as in ConnectedComponents):
+      // the prev-label join is part of the materialized plan, so no
+      // separate count job runs. Every round is materialized, unlike
+      // PageRank's every-second-round pairing: the label frame has
+      // THREE consumers per round (neighbor join, self-inclusion
+      // union, prev-label join), so a lazy round would re-run its
+      // O(E) join+aggs per consumer. LabelPropagationSpec's
+      // round-at-a-time reference pins this loop bit-exactly.
       val two63 = lit(new java.math.BigDecimal("9223372036854775808"))
       val two63m1 = lit(new java.math.BigDecimal("9223372036854775807"))
       val decoded = two63m1 - (col("s") % two63)
-      val next = graft.operators.Materialize.eagerCheckpoint(
+      val changed = org.apache.spark.sql.Observation()
+      labels = graft.operators.Materialize.eager(
         nbr.union(labels.select(col("id"), col("label")))
           .groupBy(col("id"), col("label")).agg(count(lit(1)).as("cnt"))
           .groupBy(col("id"))
@@ -991,12 +981,12 @@ object GraphRank {
           .join(small(labels).select(col("id"),
             col("label").as("prev_label")), "id")
           .select(col("id"), decoded.cast("long").as("label"),
-            (decoded.cast("long") =!= col("prev_label")).cast("long")
-              .as("chg")))
-      val changed = next.agg(coalesce(sum(col("chg")), lit(0L)))
-        .head().getLong(0)
-      labels = next.select(col("id"), col("label"))
-      converged = changed == 0
+            col("prev_label"))
+          .observe(changed, coalesce(sum(when(
+            col("label") =!= col("prev_label"), 1L).otherwise(0L)),
+            lit(0L)).as("n"))
+          .select(col("id"), col("label")))
+      converged = changed.get("n") == 0L
       r += 1
     }
     val roundsUsed = if (converged) r - 1 else r

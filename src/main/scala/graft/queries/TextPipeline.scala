@@ -238,13 +238,8 @@ object TextPipeline {
         Documents.tokens(col("text")).as("ws")))
     val trainTotal = sw.filter(col("split") === "train")
       .agg(count(lit(1)).as("n_train"))
-    // The four width branches are independent chains of two blocking
-    // materializations each over the SAME pre-materialized token
-    // array; built sequentially the cluster idles through 8 stage
-    // tails back-to-back. Par.map overlaps the branches from driver
-    // threads (guide §2.6) — frames and values are identical, only
-    // the jobs overlap (A/B in OPTIMIZATION_r12.md).
-    val rows = graft.operators.Par.map(widths) { n =>
+    // one independent branch per width over the same token array
+    val rows = widths.map { n =>
       val sh = graft.operators.Materialize.eager(
         sw.select(col("doc_id"), col("split"),
           explode(expr(

@@ -161,30 +161,22 @@ object DocStreams {
       minTokens)._1
 
   /** [[ingestVerdictStream]] plus a release handle for its static
-    * side. The eval shingle set is persisted for the life of the
-    * streaming query; without the handle the only release paths are
-    * `Materialize.releaseShared`, which is optional and also frees
-    * every OTHER stream's static side, or application end — a session
-    * cycling many ingest streams over DIFFERENT eval corpora would
-    * accumulate one persisted shingle set per corpus with no way to
-    * drop just the finished stream's. (Identical `evalDocs` plans do NOT stack:
-    * Spark's CacheManager dedupes same-plan persists.) Call the
-    * handle after the stream STOPS — releasing under a live stream is
-    * safe but degrades later micro-batches to a recompute; calling it
-    * twice, or letting the releaseShared hook fire afterwards, is a
+    * side. The eval shingle set is materialized for the life of the
+    * streaming query; without the handle it is dropped by
+    * `Materialize.freeAll` (which frees every other materialization
+    * too) or once the stream's plan is GC'd. Call the handle after the
+    * stream STOPS — releasing under a live stream is safe but degrades
+    * later micro-batches to a recompute; calling it twice is a
     * no-op. */
   def ingestVerdictStreamReleasable(stampedDocs: DataFrame,
       evalDocs: DataFrame, horizon: String = "10 minutes",
       minTokens: Long = 50L): (DataFrame, () => Unit) = {
     val deduped = dedupWithinWatermarkStream(
       stampedDocs.select(col("doc_id"), col("ts"), col("text")), horizon)
-    // eagerStatic, NOT eager: this frame lives as long as the caller's
-    // streaming query. A localCheckpoint here would fail every
-    // micro-batch after a concurrent Materialize.freeAll (harnesses
-    // call it between queries) — the persist-backed variant keeps
-    // lineage, so a mid-stream free only costs a recompute, and the
-    // blocks are released at the handle / releaseShared / app end.
-    val evalBase = graft.operators.Materialize.eagerStatic(
+    // this frame lives as long as the caller's streaming query; a
+    // concurrent Materialize.freeAll (harnesses call it between
+    // queries) only costs later micro-batches a recompute from lineage
+    val evalBase = graft.operators.Materialize.eager(
         evalDocs.select(
           explode(graft.queries.Documents.shingles3(col("text"))).as("sh"))
         .distinct())
@@ -207,7 +199,7 @@ object DocStreams {
         col("n_contaminated"),
         (col("n_tok") >= minTokens && col("n_stop") >= 2 &&
           col("n_contaminated") === 0).as("admitted"))
-    (verdicts, () => { evalBase.unpersist(blocking = false); () })
+    (verdicts, () => graft.operators.Materialize.free(evalBase))
   }
 
   /** Per-source stats snapshot, `upd_seq` = how many state updates

@@ -14,11 +14,9 @@ class ApiExampleSpec extends AnyFunSuite
   import SparkTestSession._
   import spark.implicits._
 
-  // the streaming-facade test below persists an eagerStatic eval side
-  // that lives until releaseShared or application end (the in-test
-  // releaseShared call of the FIRST test runs before it) — free it
-  // early here so the shared test session stays cache-clean for later
-  // suites
+  // the streaming-facade test below materializes an eval side that
+  // lives until releaseShared or GC (the in-test releaseShared call of
+  // the FIRST test runs before it) — free it here
   override def afterAll(): Unit =
     GraftSession.releaseShared(spark)
 

@@ -9,7 +9,9 @@ import graft.SparkTestSession
   * survived a mid-job executor kill with oracle-equal output, on the
   * plain reduce path (killed in a map task) and the combiner path
   * (killed in a reduce task while it writes its temporary file, whose
-  * directory must hold only the R part files and `_SUCCESS`) — the
+  * directory must hold only the R part files and `_SUCCESS`), and on
+  * connected components (an executor holding a round's stored label
+  * snapshot killed once that snapshot is stored) — the
   * true analog of the reference's worker-respawn crash test
   * (/root/reference/mr-main/test-mr.sh:222-271), exercising
   * executor-loss recovery rather than task retry (InvariantsSpec's
@@ -47,7 +49,7 @@ class ExecutorLossSpec extends AnyFunSuite {
     pb.redirectErrorStream(true)
     pb.redirectOutput(out)
     val p = pb.start()
-    // generous bound: cluster spin-up + two jobs, each with a respawn; a hang
+    // generous bound: cluster spin-up + three runs, each losing an executor; a hang
     // must fail the test, not the suite's global timeout
     val finished = p.waitFor(240, java.util.concurrent.TimeUnit.SECONDS)
     if (!finished) p.destroyForcibly()
@@ -60,9 +62,10 @@ class ExecutorLossSpec extends AnyFunSuite {
     // the job still matched the sequential oracle
     assert(log.contains("exited with code 137"),
       s"executor kill never fired; tail:\n${log.takeRight(4000)}")
-    // both reduce paths recovered: the plain contiguous-run reduce and
-    // the §4.3 combiner whose MRJob.run files hold each key once
-    for (path <- Seq("plain", "combiner"))
+    // both reduce paths recovered — the plain contiguous-run reduce and
+    // the §4.3 combiner whose MRJob.run files hold each key once — and
+    // connected components recomputed a lost round snapshot
+    for (path <- Seq("plain", "combiner", "dedup"))
       assert(log.contains(s"EXECUTOR_LOSS_OK $path"),
         s"no oracle-equal $path completion; tail:\n${log.takeRight(4000)}")
     assert(p.exitValue() == 0, s"exit ${p.exitValue()}")

@@ -52,9 +52,9 @@ class KMeansSpec extends AnyFunSuite {
   test("SSE is non-increasing across Lloyd updates") {
     val c0 = centers
     val s0 = KMeans.sse(pts, c0)
-    val c1 = KMeans.update(pts, c0).localCheckpoint(true)
+    val c1 = graft.operators.Materialize.eager(KMeans.update(pts, c0))
     val s1 = KMeans.sse(pts, c1)
-    val c2 = KMeans.update(pts, c1).localCheckpoint(true)
+    val c2 = graft.operators.Materialize.eager(KMeans.update(pts, c1))
     val s2 = KMeans.sse(pts, c2)
     // strict for the first step on real data; <= thereafter (Lloyd's
     // converges, possibly in one step)

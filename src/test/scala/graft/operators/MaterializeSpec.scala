@@ -2,11 +2,11 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** Materialize is the single policy point behind every dedup
-  * intermediate: default localCheckpoint (no CacheManager leak, at
-  * the cost of executor-loss recoverability), persist policy for
-  * preemptible fleets. Pin both policies and the free() contract. */
+/** Materialize has one policy: persisted blocks behind a `LogicalRDD`
+  * leaf that keeps its lineage, with no CacheManager entry. Pin it and
+  * the free() contract. */
 class MaterializeSpec extends AnyFunSuite {
   import graft.SparkTestSession._
 
@@ -15,7 +15,7 @@ class MaterializeSpec extends AnyFunSuite {
     val df = Materialize.eager(spark.range(1000).toDF("id")
       .withColumn("x", col("id") * 2))
     assert(spark.sharedState.cacheManager.isEmpty,
-      "localCheckpoint must not register a cached table")
+      "eager must not register a cached table")
     assert(df.agg(sum(col("x"))).head().getLong(0) == 999000L)
     val before = spark.sparkContext.getPersistentRDDs.size
     assert(before > 0, "eager checkpoint should hold persisted blocks")
@@ -24,41 +24,38 @@ class MaterializeSpec extends AnyFunSuite {
       "free() must drop the checkpoint blocks")
   }
 
-  test("persist policy: cached + recomputable, free unpersists") {
-    spark.conf.set(Materialize.ConfKey, "persist")
-    try {
-      val df = Materialize.eager(spark.range(100).toDF("id"))
-      assert(!spark.sharedState.cacheManager.isEmpty,
-        "persist policy must register the frame in the CacheManager")
-      assert(df.count() == 100)
-      Materialize.free(df)
-      assert(spark.sharedState.cacheManager.isEmpty,
-        "free() must remove the persist-policy cache entry")
-      // persist-policy frames keep lineage: still computable after free
-      assert(df.count() == 100)
-    } finally {
-      spark.conf.unset(Materialize.ConfKey)
-      spark.sharedState.cacheManager.clearCache()
-    }
+  test("eager frame read after free returns the same rows") {
+    spark.sharedState.cacheManager.clearCache()
+    val src = spark.range(0, 100, 1, 4).toDF("id")
+      .withColumn("x", col("id") * 3)
+    val df = Materialize.eager(src)
+    // the frame is one LogicalRDD leaf over the persisted rows, with
+    // no CacheManager entry
+    val plan = df.queryExecution.analyzed
+    assert(plan.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD] &&
+      plan.children.isEmpty, s"expected one LogicalRDD leaf:\n$plan")
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val rdd = plan.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+    assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id))
+    val before = df.orderBy(col("id")).collect().toSeq
+    Materialize.free(df)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rdd.id),
+      "free() must drop the stored blocks")
+    // lineage is kept: the freed frame recomputes, it does not fail
+    assert(df.orderBy(col("id")).collect().toSeq == before)
+    assert(before == src.orderBy(col("id")).collect().toSeq)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
-  test("keyedPartitions: config floor at test scale, linear growth past it, bounded") {
-    val adv = 64L * 1024 * 1024
-    // unknown source bytes -> the config floor, always
-    assert(Materialize.keyedPartitions(32, adv, None) == 32)
-    // small measured source (the test SFs: LPA's edges read the
-    // ~630 MB sf0.1 pair pin twice -> ~1.26 GB) -> floor wins: the
-    // local layout (and every committed bench number) is unchanged
-    assert(Materialize.keyedPartitions(32, adv, Some(1260L * 1024 * 1024)) == 32)
-    // the 10x fixture class whose sort+unroll tasks OOM'd at 32
-    // partitions (~12.6 GB per-reference edges) -> ~198
-    assert(Materialize.keyedPartitions(32, adv, Some(12600L * 1024 * 1024)) == 197)
-    // 100x-class source scales linearly (126 GB -> ~2016 partitions)
-    assert(Materialize.keyedPartitions(32, adv, Some(126L * 1024 * 1024 * 1024)) == 2017)
-    // runaway inputs are bounded at 64x the floor
-    assert(Materialize.keyedPartitions(32, adv, Some(1L << 50)) == 32 * 64)
-    // a degenerate advisory (<= 0) falls back to the floor
-    assert(Materialize.keyedPartitions(32, 0L, Some(1L << 40)) == 32)
+  test("src/main has no localCheckpoint call") {
+    // a local checkpoint drops the lineage, so a lost executor would
+    // fail the query instead of recomputing (paper §3.3)
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val calls = files.filter(f =>
+      java.nio.file.Files.readString(f).contains(".localCheckpoint"))
+    assert(calls.isEmpty, s"localCheckpoint called in: $calls")
   }
 
   test("dedup queries leave no persistent RDD residue (CC snapshots freed)") {

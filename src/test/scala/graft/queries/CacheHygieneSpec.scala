@@ -5,7 +5,7 @@ import graft.SparkTestSession
 
 /** Library-caller contract: no query leaves a cached table behind.
   * The multi-consumer dedup queries materialize intermediates via
-  * localCheckpoint (block reuse without a CacheManager entry), so a
+  * Materialize.eager (block reuse without a CacheManager entry), so a
   * caller who runs one query in a long-lived session does not
   * accumulate storage-memory residue that only Verify/perfbench's
   * clearCache() would have cleaned. */

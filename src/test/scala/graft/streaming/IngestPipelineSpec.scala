@@ -18,12 +18,10 @@ class IngestPipelineSpec extends AnyFunSuite
   import SparkTestSession._
   import spark.implicits._
 
-  // an ingestVerdictStream's static eval side stays persisted until
-  // releaseShared or application end — free it early so the shared
-  // test session stays cache-clean for later suites (CacheHygieneSpec
-  // pins that global invariant)
+  // an ingestVerdictStream's static eval side stays materialized until
+  // freeAll or GC — free it when the suite ends
   override def afterAll(): Unit =
-    graft.operators.Materialize.releaseShared(spark)
+    graft.operators.Materialize.freeAll(spark)
 
   test("verdicts: dedup suppression, contamination, quality gate, " +
       "window finalization, state eviction") {
@@ -95,8 +93,8 @@ class IngestPipelineSpec extends AnyFunSuite
       "+ clearCache: later micro-batches recompute instead of dying") {
     // the harness pattern: Verify/perfbench call freeAll + clearCache
     // between queries while a library caller's stream may still be
-    // live. A localCheckpoint-backed static side dies unrecoverably
-    // here; the persist-backed eagerStatic must only recompute.
+    // live. The materialized static side keeps its lineage, so it
+    // must only recompute.
     val evalDocs = Seq((900L, "data slow query benchmark eval"))
       .toDF("doc_id", "text")
     def stamped(rows: Seq[(Long, String, Int)]) =
@@ -151,8 +149,8 @@ class IngestPipelineSpec extends AnyFunSuite
       "without dropping the session's other shared frames") {
     // the gap the handle closes: a session cycling ingest streams over
     // DIFFERENT eval corpora could otherwise only release a finished
-    // stream's shingle set via releaseShared — which also frees every
-    // other stream's static side
+    // stream's shingle set via freeAll — which also frees every other
+    // materialization
     val evalDocs = Seq((901L, "release handle eval corpus words"))
       .toDF("doc_id", "text")
     def stamped(rows: Seq[(Long, String, Int)]) =
@@ -174,8 +172,13 @@ class IngestPipelineSpec extends AnyFunSuite
     try {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
+      def persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val others = persisted
       val (verdicts, release) = DocStreams.ingestVerdictStreamReleasable(
         stream, evalDocs, horizon = "10 minutes", minTokens = 5L)
+      // the eval side's stored RDD, materialized by the call itself
+      val evalSide = persisted -- others
+      assert(evalSide.nonEmpty, "the eval side must be materialized")
       val q = verdicts.writeStream.format("memory")
         .queryName("ingest_releasable")
         .outputMode(OutputMode.Append()).start()
@@ -188,9 +191,7 @@ class IngestPipelineSpec extends AnyFunSuite
         df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       assert(cached.lookupCachedData(classic(bystander)).nonEmpty,
         "release must not evict unrelated cached frames")
-      assert(cached.lookupCachedData(classic(
-          evalDocs.select(explode(graft.queries.Documents
-            .shingles3(col("text"))).as("sh")).distinct())).isEmpty,
+      assert((persisted intersect evalSide).isEmpty,
         "the stream's eval shingle set must be gone after release()")
     } finally bystander.unpersist(blocking = true)
   }

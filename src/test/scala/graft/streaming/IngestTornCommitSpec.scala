@@ -27,11 +27,10 @@ class IngestTornCommitSpec extends AnyFunSuite
   import spark.implicits._
   import IngestTornCommitSpec._
 
-  // release the eagerStatic eval side each ingestVerdictStream call
-  // persisted now rather than at application end (optional for
-  // library callers; it keeps the shared test session cache-clean)
+  // free the eval side each ingestVerdictStream call materialized now
+  // rather than at GC (optional for library callers)
   override def afterAll(): Unit =
-    graft.operators.Materialize.releaseShared(spark)
+    graft.operators.Materialize.freeAll(spark)
 
   private val evalDocs =
     Seq((900L, "data slow query benchmark eval")).toDF("doc_id", "text")
