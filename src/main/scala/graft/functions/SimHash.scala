@@ -34,9 +34,9 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** The pieces every text kernel (SimHash, MinHash) shares: one md5
-  * per thread and THE letter-run tokenizer. */
-private[functions] object TextKernel {
+/** The pieces every text kernel (SimHash, MinHash, the MapReduce apps'
+  * tokenizer) shares: one md5 per thread and THE letter-run tokenizer. */
+private[graft] object TextKernel {
   val md5: ThreadLocal[java.security.MessageDigest] =
     new ThreadLocal[java.security.MessageDigest] {
       override def initialValue(): java.security.MessageDigest =

@@ -1,5 +1,7 @@
 package graft.mr
 
+import graft.functions.TextKernel
+
 /** The reference's application plugins re-expressed as MRApp instances.
   * Each has a DataFrame twin in graft.queries (tested to agree in
   * MRDifferentialSpec). Citations are into /root/reference. */
@@ -13,22 +15,32 @@ object Apps {
     def finish(key: String, buf: Long): String = buf.toString
   }
 
-  /** Word count (mr-main/mrapps/wc.go:21-42): tokenize on runs of
-    * non-letters (unicode.IsLetter complement ≈ \p{L}), case-sensitive,
-    * emit (word,"1"), reduce = count, combined map-side (§4.3). */
+  /** The words of `contents`: maximal runs of letters (unicode.IsLetter
+    * ≈ \p{L}), case-sensitive — the tokens of `split("[^\\p{L}]+")`
+    * without the regex ([[TextKernel.foreachToken]]). */
+  private def words(contents: String)(f: String => Unit): Unit =
+    TextKernel.foreachToken(contents)((start, end) => f(contents.substring(start, end)))
+
+  /** Word count (mr-main/mrapps/wc.go:21-42): emit (word,"1") per word,
+    * reduce = count, combined map-side (§4.3). */
   object WordCount extends Count {
-    def map(filename: String, contents: String): Seq[KV] =
-      contents.split("[^\\p{L}]+").iterator
-        .filter(_.nonEmpty).map(KV(_, "1")).toSeq
+    def map(filename: String, contents: String): Seq[KV] = {
+      val out = Vector.newBuilder[KV]
+      words(contents)(w => out += KV(w, "1"))
+      out.result()
+    }
   }
 
   /** Inverted index (mr-main/mrapps/indexer.go:21-40): per-doc distinct
-    * words; reduce = "<n> <docs sorted, comma-joined>". */
+    * words, in order of first appearance; reduce = "<n> <docs sorted,
+    * comma-joined>". */
   object Indexer extends MRApp {
-    def map(filename: String, contents: String): Seq[KV] =
-      contents.split("[^\\p{L}]+").iterator
-        .filter(_.nonEmpty).toSet[String]
-        .map((w: String) => KV(w, filename)).toSeq
+    def map(filename: String, contents: String): Seq[KV] = {
+      val seen = new java.util.HashSet[String]
+      val out = Vector.newBuilder[KV]
+      words(contents)(w => if (seen.add(w)) out += KV(w, filename))
+      out.result()
+    }
     def reduce(key: String, values: Seq[String]): String =
       s"${values.size} ${values.sorted.mkString(",")}"
   }

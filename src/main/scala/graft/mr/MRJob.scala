@@ -5,10 +5,11 @@ import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
+import java.nio.ByteBuffer
 import java.util.Comparator
-import scala.collection.immutable.VectorBuilder
-import org.apache.spark.{Aggregator, HashPartitioner, SparkContext, TaskContext}
+import org.apache.spark.{HashPartitioner, SparkContext, SparkEnv, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.SerializerInstance
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** The reference engine's portable contract (SURVEY.md §2.4):
@@ -23,8 +24,13 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
   *    (`HashPartitioner`);
   *  - §4.3: an [[IncrementalApp]] combines map-side in the same shuffle;
   *  - §3.1 steps 4–6: each reduce task sorts its partition by key
-  *    (Spark's spillable external sorter) and reduces the contiguous
-  *    key runs, so each output file is key-sorted (§4.2);
+  *    (Spark's spillable Tungsten sorter, [[KeySort]]) and reduces the
+  *    contiguous key runs, so each output file is key-sorted (§4.2).
+  *    Key order is the reference's: UTF-8 byte order (Go's `<` on
+  *    strings), which is code point order, not `String`'s UTF-16 order.
+  *    Keys and values must be text UTF-8 can carry: one holding an
+  *    unpaired surrogate fails its reduce task with an error naming the
+  *    key;
   *  - §3.3: each reduce task writes a private temporary file and
   *    atomically renames it to its final name (reference F11 —
   *    worker.go:141-146).
@@ -55,41 +61,119 @@ object MRJob {
 
   /** Output lines ("key value" — the reference's format,
     * mr/worker.go:156) of `nReduce` reduce partitions: partition i holds
-    * exactly the keys with `hash(key) mod nReduce == i`, sorted. */
+    * exactly the keys with `hash(key) mod nReduce == i`, in UTF-8 byte
+    * order. The shuffle is a plain one (no aggregator, key ordering or
+    * Spark map-side combine), so Spark moves records without sorting or
+    * size-sampling them; each reduce task sorts its own on the Tungsten
+    * sorter ([[KeySort]]). */
   private def reduced(sc: SparkContext, app: MRApp, inputGlob: String,
       nReduce: Int): RDD[String] = {
     require(nReduce > 0, s"nReduce must be positive, got $nReduce")
-    val pairs = kvs(sc, app, inputGlob).map(kv => (kv.key, kv.value))
     val part = new HashPartitioner(nReduce)
+    val pairs = kvs(sc, app, inputGlob)
     app match {
       case inc: IncrementalApp[b] =>
         // §4.3 combiner: the monoid folds values map-side and merges the
         // partial buffers reduce-side, so no whole group is ever held
         import inc.bufferTag
-        new ShuffledRDD[String, String, b](pairs, part)
-          .setKeyOrdering(Ordering.String)
-          .setAggregator(Aggregator[String, String, b](
-            inc.lift, (buf, v) => inc.combine(buf, inc.lift(v)), inc.combine))
-          .setMapSideCombine(true)
-          .map { case (key, buf) => s"$key ${inc.finish(key, buf)}" }
+        new ShuffledRDD[String, Array[Byte], Array[Byte]](
+          pairs.mapPartitions(combined(inc, _)), part)
+          .mapPartitions { in =>
+            val ser = bufferSerializer(inc)
+            reduceRuns(keySorted(in)) { (key, bufs) =>
+              inc.finish(key, bufs.map(b => ser.deserialize[b](ByteBuffer.wrap(b)))
+                .reduce(inc.combine(_, _)))
+            }
+          }
       case _ =>
-        new ShuffledRDD[String, String, String](pairs, part)
-          .setKeyOrdering(Ordering.String)
-          .mapPartitions(reduceRuns(app, _))
+        new ShuffledRDD[String, String, String](pairs.map(kv => (kv.key, kv.value)), part)
+          .mapPartitions { in =>
+            reduceRuns(keySorted(in.map { case (k, v) => (k, utf8(v, k)) })) { (key, vs) =>
+              app.reduce(key, vs.map(new String(_, UTF_8)).toVector)
+            }
+          }
     }
   }
 
-  /** §3.1 step 5: one `app.reduce` call per run of equal keys in a
-    * key-sorted partition. */
-  private def reduceRuns(app: MRApp, sorted: Iterator[(String, String)]): Iterator[String] =
+  /** A map task holds at most this many keys before it flushes its
+    * combined buffers. */
+  private val FlushKeys = 65536
+
+  /** §4.3 map side: each key's values folded into one buffer in a plain
+    * hash map, which is flushed — every buffer serialized once and
+    * streamed out — whenever it holds [[FlushKeys]] keys and at the end
+    * of the task, the way Hadoop runs the combiner on each spill. The
+    * key count bounds memory, so nothing tracks the map's size. */
+  private def combined[B](inc: IncrementalApp[B],
+      kvs: Iterator[KV]): Iterator[(String, Array[Byte])] =
+    new Iterator[(String, Array[Byte])] {
+      import inc.bufferTag
+      private val ser = bufferSerializer(inc)
+      private val folded = new java.util.HashMap[String, B]
+      private var flushing = folded.entrySet().iterator()
+      def hasNext: Boolean = flushing.hasNext || {
+        folded.clear()
+        while (kvs.hasNext && folded.size < FlushKeys) {
+          val kv = kvs.next()
+          folded.merge(kv.key, inc.lift(kv.value), (a: B, b: B) => inc.combine(a, b))
+        }
+        flushing = folded.entrySet().iterator()
+        flushing.hasNext
+      }
+      def next(): (String, Array[Byte]) = {
+        if (!hasNext) throw new NoSuchElementException
+        val e = flushing.next()
+        val buf = ser.serialize(e.getValue)
+        val bytes = new Array[Byte](buf.remaining)
+        buf.get(bytes)
+        (e.getKey, bytes)
+      }
+    }
+
+  /** The serializer Spark's shuffle picks for a record type
+    * (`SerializerManager`'s auto-pick), applied to the buffer type: Kryo
+    * for primitives and strings, Java serialization otherwise. */
+  private def bufferSerializer(inc: IncrementalApp[_]): SerializerInstance =
+    SparkEnv.get.serializerManager.getSerializer(inc.bufferTag, true).newInstance()
+
+  /** The reduce task's records, UTF-8 keys in byte order. */
+  private def keySorted(records: Iterator[(String, Array[Byte])])
+      : Iterator[(Array[Byte], Array[Byte])] =
+    KeySort.sorted(records.map { case (k, v) => (utf8(k, k), v) })
+
+  /** `text` (the key itself or one of its values) as UTF-8. An unpaired
+    * surrogate would come back from the bytes as '?', merging or
+    * changing keys silently, so it fails the task instead; only an
+    * encoding that holds a '?' is decoded to check. */
+  private def utf8(text: String, key: String): Array[Byte] = {
+    val bytes = text.getBytes(UTF_8)
+    var i = 0
+    while (i < bytes.length && bytes(i) != '?') i += 1
+    if (i < bytes.length && new String(bytes, UTF_8) != text) {
+      val shown = key.flatMap(c =>
+        if (Character.isSurrogate(c)) f"\\u${c.toInt}%04X" else c.toString)
+      throw new IllegalArgumentException(s"MRJob: key \"$shown\" or its value holds " +
+        "an unpaired surrogate, which UTF-8 cannot carry")
+    }
+    bytes
+  }
+
+  /** §3.1 step 5: one `reduceRun(key, values)` call per run of equal
+    * keys in a key-sorted partition, as the line "key reduced". The key
+    * is decoded once per run; `reduceRun` must consume the run's values. */
+  private def reduceRuns(sorted: Iterator[(Array[Byte], Array[Byte])])(
+      reduceRun: (String, Iterator[Array[Byte]]) => String): Iterator[String] =
     new Iterator[String] {
       private val in = sorted.buffered
       def hasNext: Boolean = in.hasNext
       def next(): String = {
-        val key = in.head._1
-        val values = new VectorBuilder[String]
-        while (in.hasNext && in.head._1 == key) values += in.next()._2
-        s"$key ${app.reduce(key, values.result())}"
+        val keyBytes = in.head._1
+        val run = new Iterator[Array[Byte]] {
+          def hasNext: Boolean = in.hasNext && java.util.Arrays.equals(in.head._1, keyBytes)
+          def next(): Array[Byte] = in.next()._2
+        }
+        val key = new String(keyBytes, UTF_8)
+        s"$key ${reduceRun(key, run)}"
       }
     }
 
@@ -160,8 +244,17 @@ object MRJob {
     * definition of correct output. For tests only; never for scale. */
   def sequential(app: MRApp, inputs: Seq[(String, String)]): Seq[String] = {
     val pairs = inputs.flatMap { case (name, contents) => app.map(name, contents) }
-    pairs.groupBy(_.key).toSeq.sortBy(_._1).map { case (k, kvs) =>
+    pairs.groupBy(_.key).toSeq.sortBy(_._1)(Utf8Order).map { case (k, kvs) =>
       s"$k ${app.reduce(k, kvs.map(_.value))}"
     }
+  }
+
+  /** Keys in UTF-8 byte order, the reference's (Go's `<` on strings,
+    * mrsequential.go:61): code point order, which differs from
+    * `String`'s UTF-16 order where supplementary-plane keys meet keys in
+    * U+E000–U+FFFF. */
+  private[mr] val Utf8Order: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
   }
 }

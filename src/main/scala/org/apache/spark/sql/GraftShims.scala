@@ -1,5 +1,7 @@
 package org.apache.spark.sql
 
+import org.apache.spark.TaskContext
+import org.apache.spark.memory.TaskMemoryManager
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.storage.StorageLevel
@@ -13,6 +15,10 @@ object GraftShims {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   def analyzed(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+
+  /** The task's memory manager (`private[spark]` on `TaskContext`), for
+    * a Tungsten sorter inside an RDD task. */
+  def taskMemoryManager(ctx: TaskContext): TaskMemoryManager = ctx.taskMemoryManager()
 
   /** `Dataset.checkpoint`'s shape with a persist in place of the
     * checkpoint: `df`'s rows filled into a `MEMORY_AND_DISK` RDD by one

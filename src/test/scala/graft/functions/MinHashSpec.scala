@@ -19,20 +19,7 @@ class MinHashSpec extends AnyFunSuite {
 
   private val n = 4
 
-  private val texts: Seq[(Long, String)] = Seq(
-    1L -> null,
-    2L -> "",
-    3L -> "   \t\n ",
-    4L -> "!!! ... ??? -- 42 3.14 1000",
-    5L -> "alpha beta alpha beta alpha gamma",
-    6L -> "caf\u00e9 caf\u00e9",   // precomposed é
-    7L -> "cafe\u0301 cafe\u0301", // e + COMBINING ACUTE: the mark ends the token
-    8L -> "\u043f\u0440\u0438\u0432\u0435\u0442 \u043c\u0438\u0440", // Cyrillic
-    9L -> "\u65e5\u672c\u8a9e\u306e\u30c6\u30ad\u30b9\u30c8 \u4e2d\u6587", // CJK + kana
-    10L -> "math \ud835\udc00\ud835\udc01 \ud840\udc00x", // U+1D400 U+1D401, U+20000
-    11L -> "\u02b0\u02b7 mod\u02bcifier \u3005", // modifier letters (Lm)
-    12L -> "lone \ud800 surrogate \udc00end",
-    13L -> "Hello, World! hello world HELLO")
+  import MinHashSpec.texts
 
   // a parquet scan, not a local relation: the optimizer would fold a
   // projection over local rows itself, interpreted, in either mode
@@ -165,4 +152,22 @@ class MinHashSpec extends AnyFunSuite {
     assert(after == before)
     assert(spark.sql("SELECT size(minhash('a b', 2))").head().getInt(0) == 2)
   }
+}
+
+object MinHashSpec {
+  /** Texts the seeded fixture never shows; MRPropertySpec tokenizes them too. */
+  val texts: Seq[(Long, String)] = Seq(
+    1L -> null,
+    2L -> "",
+    3L -> "   \t\n ",
+    4L -> "!!! ... ??? -- 42 3.14 1000",
+    5L -> "alpha beta alpha beta alpha gamma",
+    6L -> "caf\u00e9 caf\u00e9",   // precomposed é
+    7L -> "cafe\u0301 cafe\u0301", // e + COMBINING ACUTE: the mark ends the token
+    8L -> "\u043f\u0440\u0438\u0432\u0435\u0442 \u043c\u0438\u0440", // Cyrillic
+    9L -> "\u65e5\u672c\u8a9e\u306e\u30c6\u30ad\u30b9\u30c8 \u4e2d\u6587", // CJK + kana
+    10L -> "math \ud835\udc00\ud835\udc01 \ud840\udc00x", // U+1D400 U+1D401, U+20000
+    11L -> "\u02b0\u02b7 mod\u02bcifier \u3005", // modifier letters (Lm)
+    12L -> "lone \ud800 surrogate \udc00end",
+    13L -> "Hello, World! hello world HELLO")
 }

@@ -11,6 +11,7 @@ import graft.SparkTestSession
   * must agree with their materializing twins and the sequential oracle. */
 class IncrementalSpec extends AnyFunSuite {
   import SparkTestSession._
+  import IncrementalSpec.ManyKeys
 
   private def run(app: IncrementalApp[_]): Seq[String] =
     Incremental.result(spark, app, s"$booksDir/*.txt").collect().toSeq.sorted
@@ -68,5 +69,20 @@ class IncrementalSpec extends AnyFunSuite {
       s"shuffle wrote ${written.sum} records for $pairs map-output pairs")
     val got = spark.read.text(out).collect().map(_.getString(0)).toSeq.sorted
     assert(got == MRJob.sequential(Apps.WordCount, booksLocal()).sorted)
+  }
+
+  test("§4.3 combiner past one flush: a map task's 65,536-key flushes merge to the oracle") {
+    // each file emits 70,000 distinct keys, so every map task flushes
+    // mid-stream and ships several partial buffers for most keys
+    val got = Incremental.result(spark, ManyKeys, s"$booksDir/*.txt").collect().toSeq.sorted
+    assert(got.size == 70000)
+    assert(got == MRJob.sequential(ManyKeys, booksLocal()).sorted)
+  }
+}
+
+object IncrementalSpec {
+  object ManyKeys extends Apps.Count {
+    def map(filename: String, contents: String): Seq[KV] =
+      (0 until 70000).map(i => KV(s"k$i", "1"))
   }
 }

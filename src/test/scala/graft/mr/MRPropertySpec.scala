@@ -1,6 +1,6 @@
 package graft.mr
 
-import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.{Arbitrary, Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests over the sequential semantics (SURVEY.md §5.1):
@@ -58,6 +58,32 @@ class MRPropertySpec extends AnyFunSuite {
       val a = MRJob.sequential(Apps.Credit, Seq(("a.csv", (hdr +: rows).mkString("\n"))))
       val b = MRJob.sequential(Apps.Credit, Seq(("a.csv", (hdr +: shuffled).mkString("\n"))))
       a == b
+    })
+  }
+
+  /** The maps as they were written with the regex tokenizer. The
+    * indexer's pairs are compared in key order: its regex form emitted
+    * them in hash-set order. */
+  private def regexWords(contents: String): Seq[String] =
+    contents.split("[^\\p{L}]+").iterator.filter(_.nonEmpty).toSeq
+  private def regexWordCount(f: String, contents: String): Seq[KV] =
+    regexWords(contents).map(KV(_, "1"))
+  private def regexIndexer(f: String, contents: String): Seq[KV] =
+    regexWords(contents).toSet[String].map((w: String) => KV(w, f)).toSeq.sortBy(_.key)
+  private def indexer(f: String, contents: String): Seq[KV] =
+    Apps.Indexer.map(f, contents).sortBy(_.key)
+
+  test("wc and indexer maps equal the regex tokenizer on edge texts") {
+    for ((id, text) <- graft.functions.MinHashSpec.texts if text != null) {
+      assert(Apps.WordCount.map("d", text) == regexWordCount("d", text), s"text $id")
+      assert(indexer("d", text) == regexIndexer("d", text), s"text $id")
+    }
+  }
+
+  test("wc and indexer maps equal the regex tokenizer on arbitrary strings") {
+    check(Prop.forAll(Arbitrary.arbitrary[String]) { text =>
+      Apps.WordCount.map("d", text) == regexWordCount("d", text) &&
+        indexer("d", text) == regexIndexer("d", text)
     })
   }
 }
