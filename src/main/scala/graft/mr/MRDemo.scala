@@ -5,8 +5,8 @@ package graft.mr
   * (`hash(key) mod nReduce` partitioning, §4.1–4.2), each committed by
   * a temporary file and an atomic rename (§3.3) — the
   * mrcoordinator/mrworker entry points collapsed into one
-  * spark-submit-able main. `outDir` must be a POSIX path (no scheme, or
-  * `file:`).
+  * spark-submit-able main. `inputGlob` and `outDir` must be POSIX paths
+  * (no scheme, or `file:`).
   *
   * Usage: MRDemo <wc|indexer|credit|metadata|filecount> <inputGlob> <outDir> [nReduce]
   */
@@ -26,8 +26,9 @@ object MRDemo {
     val app = apps.getOrElse(args(0),
       throw new IllegalArgumentException(s"unknown app '${args(0)}' — $usage"))
     // validated before the session starts: MRJob.run rejects a
-    // non-positive count and a non-local outDir too, but only after the
+    // non-positive count and non-local paths too, but only after the
     // session's startup
+    MRJob.requireLocalInput(args(1))
     MRJob.outputDir(args(2))
     val nReduce =
       if (args.length <= 3) 10

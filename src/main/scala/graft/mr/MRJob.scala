@@ -7,6 +7,11 @@ import java.nio.file.{Files, Path, Paths}
 import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
 import java.nio.ByteBuffer
 import java.util.Comparator
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.FileStatus
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.mapreduce.{InputSplit, Job, JobContext, RecordReader, TaskAttemptContext}
+import org.apache.hadoop.mapreduce.lib.input.FileInputFormat
 import org.apache.spark.{HashPartitioner, SparkContext, SparkEnv, TaskContext}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.serializer.SerializerInstance
@@ -18,8 +23,10 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
   * Mirrors the reference's mr/worker.go:18-21 (KeyValue) and
   * mr-main/mrworker.go:34-51 (plugin surface). A job is
   * one Spark shuffle, shaped like the paper's execution overview:
-  *  - §3.1 steps 1–3: whole input files, one map task per core, each
-  *    running `app.map`;
+  *  - §3.1 steps 1–3: the driver lists the input once and deals the
+  *    files into one byte-balanced slice per core; each map task reads
+  *    its files whole (`java.nio`, UTF-8) and runs `app.map` on each.
+  *    Input is plain text on a POSIX path;
   *  - §4.1: the KV pairs go to reduce partition `hash(key) mod R`
   *    (`HashPartitioner`);
   *  - §4.3: an [[IncrementalApp]] combines map-side in the same shuffle;
@@ -49,11 +56,65 @@ object MRJob {
   /** The reference's fixed reduce fan-in, mr-main/mrcoordinator.go:25. */
   private val DefaultReduce = 10
 
-  /** §3.1 steps 1–3: whole files → app.map KV pairs, with as many map
-    * tasks as cores (wholeTextFiles' own default is at most 2). */
-  private def kvs(sc: SparkContext, app: MRApp, inputGlob: String): RDD[KV] =
-    sc.wholeTextFiles(inputGlob, sc.defaultParallelism)
-      .flatMap { case (file, contents) => app.map(file.split('/').last, contents) }
+  /** §3.1 steps 1–3: whole files → app.map KV pairs, one map task per
+    * core (or per file, if fewer). The driver lists the input
+    * ([[inputFiles]]) and deals the files into byte-balanced slices
+    * ([[slices]]), one map task each; a task is shipped only its files'
+    * URIs and names, reads each file whole with `java.nio` and decodes it
+    * as UTF-8 (a malformed byte becomes U+FFFD, as Hadoop's `Text`
+    * decoded it). */
+  private def kvs(sc: SparkContext, app: MRApp, inputGlob: String): RDD[KV] = {
+    val files = inputFiles(sc, inputGlob).map { st =>
+      ((st.getPath.toUri.toString, st.getPath.getName), st.getLen)
+    }
+    val parts = slices(files, sc.defaultParallelism)
+    sc.parallelize(parts, parts.size max 1).flatMap(_.iterator.flatMap { case (uri, name) =>
+      app.map(name, new String(Files.readAllBytes(Paths.get(URI.create(uri))), UTF_8))
+    })
+  }
+
+  /** Hadoop's own input listing, the one every `FileInputFormat` (and
+    * so `wholeTextFiles`) makes: comma-separated globs, a matched
+    * directory expanded one level, hidden names (`_*`, `.*`) skipped,
+    * and an `InvalidInputException` for a pattern that matches nothing.
+    * Only its files are kept: a directory inside a matched one is not
+    * read. */
+  private class Listing extends FileInputFormat[Unit, Unit] {
+    def createRecordReader(split: InputSplit,
+        ctx: TaskAttemptContext): RecordReader[Unit, Unit] =
+      throw new UnsupportedOperationException("MRJob reads its input files itself")
+    def files(job: JobContext): Seq[FileStatus] = listStatus(job).asScala.toSeq.filter(_.isFile)
+  }
+
+  /** The input files of one job, listed once on the driver. Input is
+    * plain text on a POSIX path ([[requireLocalInput]]); a file whose
+    * extension names a compression codec is rejected, because reading
+    * it raw would be a silently wrong answer. */
+  private def inputFiles(sc: SparkContext, inputGlob: String): Seq[FileStatus] = {
+    requireLocalInput(inputGlob)
+    val job = Job.getInstance(sc.hadoopConfiguration)
+    FileInputFormat.setInputPaths(job, inputGlob)
+    val codecs = new CompressionCodecFactory(job.getConfiguration)
+    val files = new Listing().files(job)
+    for (st <- files; codec <- Option(codecs.getCodec(st.getPath)))
+      throw new IllegalArgumentException(s"MRJob reads plain text: input file " +
+        s"'${st.getPath}' is compressed (${codec.getClass.getSimpleName})")
+    files
+  }
+
+  /** `files` (each with its length) dealt into `min(files, n)` slices
+    * balanced by bytes: largest first, each into the least-loaded
+    * slice. */
+  private[mr] def slices[A](files: Seq[(A, Long)], n: Int): Seq[Seq[A]] = {
+    val load = new Array[Long](math.min(files.size, n))
+    val out = Array.fill(load.length)(Vector.newBuilder[A])
+    for ((file, len) <- files.sortBy(-_._2)) {
+      val i = load.indices.minBy(load(_))
+      load(i) += len
+      out(i) += file
+    }
+    out.toSeq.map(_.result())
+  }
 
   /** The map stage alone, as a Dataset of KV pairs. */
   def mapped(spark: SparkSession, app: MRApp, inputGlob: String): Dataset[KV] =
@@ -192,7 +253,8 @@ object MRJob {
     * once every partition is committed the driver removes `_temporary`
     * (the files of failed attempts) and marks the output with `_SUCCESS`.
     * A failed job leaves no `_SUCCESS`. `outDir` must be a POSIX path
-    * (see [[outputDir]]). */
+    * (see [[outputDir]]). The input is listed before `outDir` is touched,
+    * so an input that cannot be read leaves the old output as it was. */
   def run(spark: SparkSession, app: MRApp, inputGlob: String, outDir: String,
       nReduce: Int = DefaultReduce): Unit = {
     val out = outputDir(outDir)
@@ -208,16 +270,29 @@ object MRJob {
 
   private val UriScheme = "([A-Za-z][A-Za-z0-9+.-]*):".r
 
+  private def scheme(path: String): Option[String] =
+    UriScheme.findPrefixMatchOf(path).map(_.group(1))
+
   /** `outDir` as an absolute local path, so every executor writes where
     * the driver resolved it. §3.3's commit is a rename on a shared POSIX
     * filesystem, which object stores do not provide atomically: any
     * scheme other than `file:` is rejected before a job starts. */
   private[mr] def outputDir(outDir: String): Path =
-    UriScheme.findPrefixMatchOf(outDir).map(_.group(1)) match {
+    scheme(outDir) match {
       case None => Paths.get(outDir).toAbsolutePath
       case Some(s) if s.equalsIgnoreCase("file") => Paths.get(URI.create(outDir))
       case Some(s) => throw new IllegalArgumentException(
         s"outDir must be a POSIX path: scheme '$s' in '$outDir' has no atomic rename")
+    }
+
+  /** Each comma-separated pattern of `inputGlob` must be a POSIX path
+    * (no scheme, or `file:`), because map tasks read their files with
+    * `java.nio`; any other scheme is rejected before a listing or a job
+    * starts. */
+  private[mr] def requireLocalInput(inputGlob: String): Unit =
+    inputGlob.split(',').flatMap(scheme).find(!_.equalsIgnoreCase("file")).foreach { s =>
+      throw new IllegalArgumentException(
+        s"inputGlob must be POSIX paths: scheme '$s' in '$inputGlob' is not read")
     }
 
   /** §3.3 reduce-side commit of one task attempt: stream the lines,

@@ -27,6 +27,11 @@ class MRDemoSpec extends AnyFunSuite {
     }
   }
 
+  test("inputGlob must be POSIX paths: a remote scheme is named") {
+    for ((scheme, glob) <- Seq("hdfs" -> "hdfs://nn/in/*", "s3a" -> "in/*,s3a://b/in"))
+      assert(rejects("wc", glob, "out").contains(s"scheme '$scheme'"))
+  }
+
   test("outDir must be a POSIX path: a remote scheme is named") {
     for ((scheme, outDir) <- Seq("hdfs" -> "hdfs://nn/out", "s3a" -> "s3a://b/out"))
       assert(rejects("wc", "in/*", outDir).contains(s"scheme '$scheme'"))
